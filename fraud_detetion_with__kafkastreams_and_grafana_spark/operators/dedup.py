@@ -1275,14 +1275,15 @@ def index_compaction_report(
         # shuffle). Level 1 reduces to per-(source, key) partials
         # (count + xor — both associative); level 2 counts the keys
         # (= exact distinct), sums the counts, re-xors the xors.
-        # Identical integers: keys are non-null, xor is commutative.
+        # Identical integers: count(key) skips a NULL key group as
+        # countDistinct would, and xor is commutative.
         lvl1 = rows.groupBy("source", key).agg(
             F.count("*").alias("_c"),
             F.bit_xor(_key_digest("doc_id", key)).alias("_x"),
         )
         return lvl1.groupBy("source").agg(
             F.sum("_c").cast("long").alias(n_rows),
-            F.count("*").cast("long").alias(n_distinct),
+            F.count(key).cast("long").alias(n_distinct),
             F.bit_xor("_x").alias(xor),
         )
 

@@ -240,11 +240,12 @@ _LAST_RED: set[str] = set()
 # plus the r13 rewrites (r91 again — long-form narrowing; s47 — the
 # single-pass melt; l84 — shuffled-hash probe joins; l68 — two-level
 # keyed summaries + shuffled-hash id joins; l103 — qualifying-pair
-# checkpoint, touched again):
+# checkpoint, touched again; s23 — checkpointed probe tables and a
+# 2-batch replay; l71 — shuffled-hash joins inside operators/dedup):
 _TOUCHED: set[str] = {
     "l03", "l04", "l43", "l44", "l77", "l84", "l85",
     "l101", "l103", "s35", "s36", "l67", "u02",
-    "r91", "s47", "l68",
+    "r91", "s47", "l68", "s23", "l71",
 }
 _LAST_CHECKED: dict[str, int] = {}
 for _rnd, _qs in (

@@ -2588,6 +2588,7 @@ def s35_stream_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from .relational3 import (
+        _R91_INT_COLS,
         _R91_KEY_COLS,
         _R91_NUM_COLS,
         _R91_STR_COLS,
@@ -2612,8 +2613,8 @@ def s35_stream_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
 
     schema = ", ".join(
-        [f"{c} DOUBLE" for c in _R91_NUM_COLS[4:]]
-        + [f"{c} BIGINT" for c in _R91_NUM_COLS[:4]]
+        [f"{c} DOUBLE" for c in _R91_NUM_COLS if c not in _R91_INT_COLS]
+        + [f"{c} BIGINT" for c in _R91_INT_COLS]
         + [f"{c} STRING" for c in _R91_STR_COLS]
         + [f"{c} TIMESTAMP" for c in _R91_TS_COLS]
     )

@@ -839,7 +839,8 @@ def test_l68_compaction_reprobe_is_all_exact(spark):
     'exact' (admitted docs match their own keys; the dropped doc matches
     the index doc that made it redundant). Also pins the per-source
     admission stats and that the new-index doc set is exactly
-    old-index + non-exact batch."""
+    old-index + non-exact batch. A NULL-text index doc adds neither a
+    doc nor a distinct key (countDistinct's null semantics)."""
     from fraud_detetion_with__kafkastreams_and_grafana_spark.operators.dedup import (
         _incremental_classify,
         _incremental_index_frames,
@@ -852,6 +853,7 @@ def test_l68_compaction_reprobe_is_all_exact(spark):
             (1, "web", f"{passage} zeta eta"),
             (2, "web", f"theta iota {passage} kappa"),
             (3, "books", "one two three four five six"),
+            (4, "books", None),  # NULL text: no doc, no key
             (400, "web", f"{passage} zeta eta"),  # exact copy of 1
             (401, "web", f"mu nu {passage} xi omicron pi"),  # near
             (402, "books", "rho sigma tau upsilon phi chi psi"),  # novel

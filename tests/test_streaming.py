@@ -67,6 +67,74 @@ def test_serialize_roundtrip(spark):
     assert payload == {"userId": "user_001", "amount": 10500.5, "timestamp": 1700000001}
 
 
+def test_parquet_sink_paced_and_equal_to_batch(spark, tmp_path):
+    """The live parquet sink over FIXTURES.md's boundary records: its
+    rows equal the batch topology over the same files, the query runs
+    on the fixed 500 ms processing-time trigger, and an idle source
+    adds no batch id until the next file lands."""
+    import math
+    import os
+    import time
+
+    smallest_fraud = math.nextafter(10000.0, math.inf)
+    boundary = [
+        '{"userId":"user_010","amount":10000.0,"timestamp":1700000010}',  # NOT fraud
+        json.dumps({"userId": "user_011", "amount": smallest_fraud, "timestamp": 1700000011}),
+        '{"userId":"user_012","amount":20000.0,"timestamp":1700000012',  # malformed
+        '{"userId":"user_013","amount":10500.0,"timestamp":1700000013,"merchant":"m1"}',
+        '{"userId":"user_014","amount":9999.0,"timestamp":1700000014}',
+    ]
+    later = ['{"userId":"user_015","amount":10700.0,"timestamp":1700000015}']
+    in_dir, stage = tmp_path / "in", tmp_path / "stage"
+    in_dir.mkdir()
+    stage.mkdir()
+
+    def publish(name, rows):
+        (stage / name).write_text("\n".join(rows))
+        os.rename(stage / name, in_dir / name)
+
+    def committed():
+        return {p.name for p in (tmp_path / "ckpt" / "commits").iterdir()
+                if p.name.isdigit()}
+
+    def points(df):
+        return {tuple(r) for r in df.collect()}
+
+    wire = spark.readStream.schema("value STRING").text(str(in_dir))
+    out = str(tmp_path / "out")
+    q = topology.start_to_parquet(
+        topology.alerts_as_points(topology.fraud_topology(wire)),
+        out,
+        str(tmp_path / "ckpt"),
+    )
+    try:
+        trigger = q._jsq.streamingQuery().trigger()
+        assert trigger.getClass().getSimpleName() == "ProcessingTimeTrigger"
+        assert trigger.intervalMs() == 500
+
+        publish("part-0.txt", boundary)
+        q.processAllAvailable()
+        batch_in = spark.read.schema("value STRING").text(str(in_dir))
+        want = points(topology.alerts_as_points(topology.fraud_topology(batch_in)))
+        assert points(spark.read.parquet(out)) == want
+        assert {(u, a) for _, u, a in want} == {
+            ("user_011", smallest_fraud), ("user_013", 10500.0),
+        }
+
+        ids = committed()
+        time.sleep(1.6)  # three trigger intervals with no new file
+        assert committed() == ids
+
+        publish("part-1.txt", later)
+        q.processAllAvailable()
+        assert len(committed() - ids) == 1
+        assert {u for _, u, _ in points(spark.read.parquet(out))} == {
+            "user_011", "user_013", "user_015",
+        }
+    finally:
+        q.stop()
+
+
 def test_windowed_agg_with_watermark_drops_late(spark):
     """Late row behind the watermark is dropped from the streaming result
     but present in the batch result — the documented semantic difference."""

@@ -2,10 +2,13 @@
 """Per-query profiler (guide §1): run named registry queries to the noop
 sink on a UI-enabled session and report, per query, wall seconds plus the
 per-stage executor CPU / run time and top stages — the measurement loop
-behind OPTIMIZATION_r12.md. Optionally writes .explain("formatted") to
-plans/$SPARK_GRAFT_PLANS_DIR(default r13)/<query>_<tag>.txt.
+behind OPTIMIZATION_r12.md. With --explain, writes .explain("formatted")
+to plans/$SPARK_GRAFT_PLANS_DIR/<query>_<tag>.txt; SPARK_GRAFT_PLANS_DIR
+(the round's plan directory, e.g. r14) must then be set, and the tool
+exits with an error before starting Spark when it is not.
 
-Usage: python tools/profile_query.py [--explain TAG] [--runs N] name...
+Usage: [SPARK_GRAFT_PLANS_DIR=rN] python tools/profile_query.py
+           [--explain TAG] [--runs N] name...
 """
 
 from __future__ import annotations
@@ -43,6 +46,11 @@ def main() -> int:
         del args[i : i + 2]
     names = args
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    plans_dir = os.environ.get("SPARK_GRAFT_PLANS_DIR")
+    if explain_tag and not plans_dir:
+        print("profile_query: --explain needs SPARK_GRAFT_PLANS_DIR "
+              "(the plans/ subdirectory to write to, e.g. r14)", file=sys.stderr)
+        return 2
 
     spark = get_spark(
         "profile",
@@ -73,7 +81,7 @@ def main() -> int:
             df = fn(spark, sf_dir)
             t_build = time.perf_counter() - t0
             if explain_tag and run == 0:
-                pdir = os.path.join("plans", os.environ.get("SPARK_GRAFT_PLANS_DIR", "r13"))
+                pdir = os.path.join("plans", plans_dir)
                 os.makedirs(pdir, exist_ok=True)
                 with open(f"{pdir}/{name}_{explain_tag}.txt", "w") as fh:
                     fh.write(df._sc._jvm.PythonSQLUtils.explainString(
