@@ -241,11 +241,15 @@ _LAST_RED: set[str] = set()
 # single-pass melt; l84 — shuffled-hash probe joins; l68 — two-level
 # keyed summaries + shuffled-hash id joins; l103 — qualifying-pair
 # checkpoint, touched again; s23 — checkpointed probe tables and a
-# 2-batch replay; l71 — shuffled-hash joins inside operators/dedup):
+# 2-batch replay; l71 — shuffled-hash joins inside operators/dedup),
+# plus the 14 sink-merge twins moved onto the shared _partial_replay
+# path (one file per batch, shared wire dirs; s47 is already listed):
 _TOUCHED: set[str] = {
     "l03", "l04", "l43", "l44", "l77", "l84", "l85",
     "l101", "l103", "s35", "s36", "l67", "u02",
     "r91", "s47", "l68", "s23", "l71",
+    "s26", "s28", "s30", "s31", "s33", "s37", "s38", "s39",
+    "s42", "s44", "s46", "s48", "s49",
 }
 _LAST_CHECKED: dict[str, int] = {}
 for _rnd, _qs in (

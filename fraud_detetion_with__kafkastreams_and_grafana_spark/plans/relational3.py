@@ -3152,10 +3152,6 @@ def r91_long_form(li: DataFrame) -> DataFrame:
 
 _R91_KEY_COLS = ["kl", "kd", "ks"]
 _R91_ALL_COLS = _R91_NUM_COLS + _R91_STR_COLS + _R91_TS_COLS
-# integer-typed members of _R91_NUM_COLS (dtype-checked at plan build
-# in r91_long_form; this static list only drives the min/max re-derive
-# and matches the generator's fixed lineitem schema)
-_R91_INT_COLS = ["l_orderkey", "l_partkey", "l_suppkey", "l_linenumber"]
 
 
 def r91_stats_from_long(per_val: DataFrame) -> DataFrame:
@@ -3163,13 +3159,14 @@ def r91_stats_from_long(per_val: DataFrame) -> DataFrame:
     Shared by r91 and s35; exact NDV falls out of the distinct
     typed-key set the partials preserve (exactly one of kl/kd/ks is
     non-null for a non-null value; all three null marks the column's
-    NULL group). min/max re-derive from the key set: min/max over kl
+    NULL group). min/max re-derive from the key set, from whichever
+    numeric key r91_long_form populated for the column: min/max over kl
     (long-exact) cast to double for integer columns, over kd for
     floating columns, and floor(kl micros / 1e6) seconds for the
     timestamp column — floor commutes with min/max (monotone), and the
     integer floor-division is exact where a double division could
-    round. Varchar columns report NULL min/max (collation order is not
-    cross-engine comparable)."""
+    round. Varchar columns populate neither, so they report NULL
+    min/max (collation order is not cross-engine comparable)."""
     has_key = (
         F.col("kl").isNotNull()
         | F.col("kd").isNotNull()
@@ -3193,18 +3190,8 @@ def r91_stats_from_long(per_val: DataFrame) -> DataFrame:
     name = F.element_at(
         F.array(*[F.lit(c) for c in _R91_ALL_COLS]), F.col("cid") + 1
     )
-    is_int = F.col("cid").isin(
-        [_R91_ALL_COLS.index(c) for c in _R91_INT_COLS]
-    )
     is_ts = F.col("cid").isin(
         [_R91_ALL_COLS.index(c) for c in _R91_TS_COLS]
-    )
-    is_flt = F.col("cid").isin(
-        [
-            _R91_ALL_COLS.index(c)
-            for c in _R91_NUM_COLS
-            if c not in _R91_INT_COLS
-        ]
     )
 
     def _minmax(lcol: str, dcol: str):
@@ -3213,10 +3200,8 @@ def r91_stats_from_long(per_val: DataFrame) -> DataFrame:
         secs = F.expr(
             f"({lcol} - pmod({lcol}, 1000000)) div 1000000"
         ).cast("double")
-        return (
-            F.when(is_int, F.col(lcol).cast("double"))
-            .when(is_flt, F.col(dcol))
-            .when(is_ts, secs)
+        return F.when(is_ts, secs).otherwise(
+            F.coalesce(F.col(lcol).cast("double"), F.col(dcol))
         )
 
     return stats.select(

@@ -116,14 +116,15 @@ def test_registry_window_rotation_order():
         never_ordered = [n for n in names if n in never]
         assert never_ordered[:50] == names[:50]
     # After the r12 sync (ever-checked = 430/430; _TOUCHED holds the 13
-    # r12 rewrites plus the 5 r13 rewrites r91, s47, l68, s23 and l71,
-    # none re-hashed in an oracle window since) the stalest slice is the
-    # round-4 remainder (l39-l55, r62-r75 = 31) followed by the round-5
-    # vintage in family order (q1-q7, s01-s05, u11, m08, l56-l60). The
-    # next window is the 18 touched rows, then l39-l55 less the touched
-    # l43/l44 (15) + r62-r75 (14), then the round-5 head (q1-q3) — every
-    # checked slot in the window must come from touched rows or that
-    # stale slice, and the rows evicted must be exactly the slice's
+    # r12 rewrites, the 5 r13 rewrites r91, s47, l68, s23 and l71, and
+    # the 13 further sink-merge twins moved onto _partial_replay — 31
+    # rows, none re-hashed in an oracle window since) the stalest slice
+    # is the round-4 remainder (l39-l55, r62-r75 = 31) followed by the
+    # round-5 vintage in family order (q1-q7, s01-s05, u11, m08,
+    # l56-l60). The next window is the 31 touched rows, then l39-l55
+    # less the touched l43/l44 (15), then r62-r65 (4) — every checked
+    # slot in the window must come from touched rows or that stale
+    # slice, and the rows evicted must be exactly the slice's
     # registry-order tail.
     # PINNED PER SYNC: this set describes the stale tail feeding the
     # CURRENT round's window and must be advanced in the same commit as

@@ -1453,6 +1453,88 @@ def test_s49_stream_leaderboard_equals_batch_r104(spark, sf_dir):
     assert got == want
 
 
+def test_partial_replay_contract(spark, tmp_path):
+    """The contract the sink-merge twins rely on: 8 wire files replay as
+    exactly 2 micro-batches (one merged partial row each), a malformed
+    line and a record whose FIRST schema field is null never reach the
+    reduce, and a record with a null in a LATER field does."""
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.plans import (
+        streaming_queries as SQ,
+    )
+
+    files = [[json.dumps({"k": 8 * i + j, "v": "x"}) for j in range(3)]
+             for i in range(8)]
+    files[2].append('{"k":')  # malformed: parses to all-null
+    files[5].append(json.dumps({"v": "first field null"}))
+    files[6].append(json.dumps({"k": 99}))  # later field null: kept
+    for i, rows in enumerate(files):
+        (tmp_path / f"part-{i}.txt").write_text("\n".join(rows) + "\n")
+
+    merged = SQ._partial_replay(
+        spark,
+        str(tmp_path),
+        "k LONG, v STRING",
+        lambda b: b.groupBy().count(),
+        "contract",
+    ).collect()
+    assert len(merged) == 2
+    assert sum(r["count"] for r in merged) == 8 * 3 + 1
+
+
+_MOVED_TWINS = (
+    "s26_stream_isotonic_calibration",
+    "s28_stream_drift_psi",
+    "s30_stream_concurrency",
+    "s31_stream_auc",
+    "s33_stream_ks_drift",
+    "s37_stream_threshold_tuning",
+    "s38_stream_ab_monitor",
+    "s39_stream_cusum",
+    "s42_stream_skyline",
+    "s44_stream_average_precision",
+    "s46_stream_bootstrap_ci",
+    "s47_stream_equidepth",
+    "s48_stream_sliding_median",
+    "s49_stream_decayed_leaderboard",
+)
+
+
+def test_sink_merge_twins_reuse_wire_dirs(spark, sf_dir, monkeypatch):
+    """Every sink-merge twin replays through _partial_replay; s31, s37
+    and s44 share ONE session-cached scoring wire, and re-running any
+    twin adds no entry to the wire-dir cache. The replay itself is
+    stubbed to stop the twin at the call (its wire argument is already
+    built by then) — the replay is pinned by the contract test above
+    and by each twin's equality test."""
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.plans import (
+        streaming_queries as SQ,
+    )
+
+    class _Replayed(Exception):
+        pass
+
+    def stop(*_args):
+        raise _Replayed
+
+    def run(name):
+        with pytest.raises(_Replayed):
+            SQ.QUERIES[name](spark, sf_dir)
+
+    monkeypatch.setattr(SQ, "_WIRE_DIRS", {})
+    monkeypatch.setattr(SQ, "_partial_replay", stop)
+    for name in ("s31_stream_auc", "s37_stream_threshold_tuning",
+                 "s44_stream_average_precision"):
+        run(name)
+    assert [k[0] for k in SQ._WIRE_DIRS] == ["proj"]
+
+    for name in _MOVED_TWINS:
+        run(name)
+    cached = dict(SQ._WIRE_DIRS)
+    for name in _MOVED_TWINS:
+        run(name)
+        assert SQ._WIRE_DIRS == cached, name
+
+
 def test_kstream_branch_first_match_wins(spark):
     """Kafka Streams branch semantics: a record matching several
     predicates lands ONLY in the first matching branch; a record
