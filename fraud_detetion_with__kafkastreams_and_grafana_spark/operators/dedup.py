@@ -1229,8 +1229,9 @@ def index_compaction_report(
     Scale: admission is one batch-vs-index equi-join on t_md5 plus an
     anti-join (never corpus x corpus); the new index tables are
     semi-joins of the materialized-once index frames against the
-    admitted-id set; all joins are merge-hinted (both sides are
-    corpus-sized; nothing may broadcast). The summary shuffles only
+    admitted-id set; every join is merge- or shuffle_hash-hinted (both
+    sides are corpus-sized; nothing may broadcast; SCALE.md bounds the
+    shuffle_hash build sides). The summary shuffles only
     (source, int64) partials — bit_xor and the counts combine map-side."""
     docs = docs.where(F.trim("text") != "")
     md5f, grams = _incremental_index_frames(docs, k)
@@ -1270,9 +1271,9 @@ def index_compaction_report(
     def _keyed_summary(rows: DataFrame, key: str, n_rows: str,
                        n_distinct: str, xor: str) -> DataFrame:
         # Two-level aggregate instead of countDistinct-next-to-plain
-        # aggs: the mixed form plans an Expand that DOUBLES the rows
-        # into the partial aggregate (guide §2.3 aggregate before you
-        # shuffle). Level 1 reduces to per-(source, key) partials
+        # aggs: the same (source, key) -> source shape Spark plans for
+        # a single distinct, with plain functions in place of the
+        # distinct aggregate. Level 1 reduces to per-(source, key) partials
         # (count + xor — both associative); level 2 counts the keys
         # (= exact distinct), sums the counts, re-xors the xors.
         # Identical integers: count(key) skips a NULL key group as

@@ -4275,8 +4275,9 @@ def l71_two_generation_ingestion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: see operators/dedup.two_generation_ingestion_report —
     admission and probe are md5-key equi/anti-joins (text never
     shuffles); gen-2 membership is one materialized 8-byte-id frame
-    applied as semi-joins to the once-built index tables; every
-    corpus-sized join side is merge-hinted."""
+    applied as semi-joins to the once-built index tables; every join
+    is shuffle_hash-hinted, so nothing corpus-sized broadcasts (SCALE.md
+    bounds the hash build sides)."""
     return DD.two_generation_ingestion_report(
         load_table(spark, sf_dir, "documents"),
         gen1_split=400,

@@ -19,6 +19,7 @@ Locally we run ``local[$SPARK_GRAFT_CPUS]``; on a real cluster only
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -54,6 +55,11 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Python workers import this package by name: put its parent dir
+        # ahead of the inherited PYTHONPATH so any cwd works.
+        .config(
+            "spark.executorEnv.PYTHONPATH", str(Path(__file__).resolve().parents[1])
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

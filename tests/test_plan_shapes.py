@@ -827,9 +827,9 @@ def test_l105_l106_vocab_joins_never_cartesian(spark, sf_dir):
 
 
 def test_r10_window_plans_no_cartesian_no_python_bnlj_bounded(spark, sf_dir):
-    """Blanket scale pin over the whole never-driver-checked backlog
-    (the round-10/11/12 windows: m36-m83, l88-l107, r84-r135 — 120
-    queries as of the r09 rotation sync): no plan may contain a
+    """Blanket scale pin over the batch rows the next driver window must
+    re-hash (never-checked, last-seen-red or rewritten since their last
+    driver hash: rank < 1 in the registry order): no plan may contain a
     CartesianProduct (unbounded all-pairs), a row-at-a-time
     BatchEvalPython, or a BroadcastNestedLoopJoin whose build subtree
     is not provably bounded (aggregate-rooted, checkpointed RDD,
@@ -840,22 +840,21 @@ def test_r10_window_plans_no_cartesian_no_python_bnlj_bounded(spark, sf_dir):
     size-threshold choices that auto-revert to shuffle joins at real
     scale.)"""
     from fraud_detetion_with__kafkastreams_and_grafana_spark.plans.registry import (
-        _LAST_CHECKED,
+        _registry_order,
         all_queries,
     )
 
     qs = all_queries()
     window = [
         n for n in qs
-        if _LAST_CHECKED.get(n.split("_", 1)[0], 0) == 0
+        if _registry_order(n)[0] < 1
         and not n.startswith("s")  # s-twins EXECUTE on build; their
         # batch plans are pinned via the batch queries they share
     ]
-    # The backlog shrinks by ~50/round under the freeze (70 after the
-    # r10 sync, ~20 after r11); once it fully drains this sweep is
-    # vacuous and the per-query pins take over.
+    # Empty once the driver has re-hashed every rewrite; the per-query
+    # pins cover the rest.
     if not window:
-        pytest.skip("driver backlog fully drained — nothing never-checked")
+        pytest.skip("no rewritten, red or never-checked batch rows")
     # Waivers: BNLJ builds bounded by a LITERAL predicate instead of an
     # aggregate — boundedness is in the filter constant, which a plan-
     # string sweep can't prove. Each entry names the bound.

@@ -3746,13 +3746,15 @@ def test_r97_oracle_equals_bruteforce_backtest(cents):
         max_size=30,
     )
 )
+# Intercept is exactly -187467.5: HALF_UP must round it away from zero.
+@example(cents=[0, 212, 1125229])
 @settings(max_examples=40, deadline=None)
 def test_m30_oracle_equals_bruteforce_ols(cents):
     """The trend SQL must equal textbook OLS on exact integer moments:
     identical slope/intercept float sequences in HALF_UP micro/unit
     rounding, NULL estimates for single-day series."""
     import datetime
-    import math
+    import decimal
 
     import pandas as pd
 
@@ -3786,7 +3788,13 @@ def test_m30_oracle_equals_bruteforce_ols(cents):
     sxy = sum(i * c for i, c in enumerate(cents))
 
     def half_up(x):
-        return int(math.floor(x + 0.5))
+        # Spark's and DuckDB's round(): half away from zero, so a
+        # negative half goes down, not up as floor(x + 0.5) would.
+        return int(
+            decimal.Decimal(x).quantize(
+                decimal.Decimal(1), rounding=decimal.ROUND_HALF_UP
+            )
+        )
 
     if n > 1 and n * sxx > sx * sx:
         slope = ((n * sxy - sx * sy) * 1.0) / (n * sxx - sx * sx)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from fraud_detetion_with__kafkastreams_and_grafana_spark import testing
@@ -68,117 +70,73 @@ def test_asof_join_exclusive(spark):
     assert out.collect()[0].asof_payload is None
 
 
-def test_registry_window_rotation_order():
-    """The driver checks ~the first 50 registered queries. Pin the
-    contract the round-4 verdict demanded: queries without a driver
-    CORRECTNESS row sort FIRST (new work always validated), then
-    ascending staleness (oldest-checked rows rotate back through the
-    window), and the current window must contain every never-checked
-    query plus the stalest (round-1-vintage) slice."""
-    from fraud_detetion_with__kafkastreams_and_grafana_spark.plans.registry import (
-        _LAST_CHECKED,
-        _LAST_RED,
-        _TOUCHED,
-        all_queries,
-    )
+def test_registry_window_rotation_order(tmp_path, monkeypatch):
+    """The driver value-hashes ~the first 50 registered queries, so the
+    registry order is derived from the committed CORRECTNESS artifacts:
+    never-checked < last-seen-red < rewritten since the last hash <
+    ascending staleness, ties in family order then by name."""
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.plans import registry
 
-    names = list(all_queries())
+    # The real registry: checks that hold across artifact syncs.
+    last, red = registry._load_rotation(registry._ROOT)
+    assert last, "no CORRECTNESS_r*.json found in the checkout root"
+    newest = max(last.values())
+    rewritten = registry._REWRITTEN
+    assert all(1 <= n <= newest for n in rewritten.values()), rewritten
+    ranked = [(n, registry._registry_order(n)[0]) for n in registry.all_queries()]
+    live = [i for i, (_, r) in enumerate(ranked) if r == 0.75]
+    stale = [i for i, (_, r) in enumerate(ranked) if r >= 1]
+    assert {ranked[i][0].split("_", 1)[0] for i in live} == {
+        k for k, n in rewritten.items() if 0 < last.get(k, 0) <= n
+    } - red
+    assert not live or not stale or max(live) < min(stale)
+    fresh_green = [
+        n for n, _ in ranked[:50]
+        if last.get(k := n.split("_", 1)[0]) == newest
+        and k not in red
+        and rewritten.get(k, 0) < newest
+    ]
+    assert not fresh_green, f"rows green in r{newest} re-hashed again: {fresh_green}"
 
-    def _rank(n: str) -> float:
-        key = n.split("_", 1)[0]
-        # Mirror _registry_order: last-seen-red rows outrank every green
-        # vintage, and rewritten-since-last-hash rows come right behind
-        # them (r12 verdict item 2: an optimization round's rewrites
-        # must be the FIRST thing the next driver window re-hashes, not
-        # the last).
-        if key in _LAST_RED:
-            return 0.5
-        checked = _LAST_CHECKED.get(key, 0)
-        if key in _TOUCHED and checked > 0:
-            return 0.75
-        return checked
-
-    ranks = [_rank(n) for n in names]
-    assert ranks == sorted(ranks), "registry must order by ascending staleness"
-    window = set(names[:50])
-    never = {n for n, r in zip(names, ranks) if r == 0}
-    if len(never) <= 50:
-        assert never <= window, (
-            f"never-checked queries outside the window: {never - window}"
-        )
-    else:
-        # More additions this round than window slots: the window must
-        # be entirely never-checked work, and the overflow must be the
-        # never-checked set's registry-order TAIL (those sort first
-        # again next round, so nothing is ever silently skipped —
-        # round 8 hit this with 53 additions).
-        assert window <= never, f"checked rows displaced new work: {window - never}"
-        never_ordered = [n for n in names if n in never]
-        assert never_ordered[:50] == names[:50]
-    # After the r12 sync (ever-checked = 430/430; _TOUCHED holds the 13
-    # r12 rewrites, the 5 r13 rewrites r91, s47, l68, s23 and l71, and
-    # the 13 further sink-merge twins moved onto _partial_replay — 31
-    # rows, none re-hashed in an oracle window since) the stalest slice
-    # is the round-4 remainder (l39-l55, r62-r75 = 31) followed by the
-    # round-5 vintage in family order (q1-q7, s01-s05, u11, m08,
-    # l56-l60). The next window is the 31 touched rows, then l39-l55
-    # less the touched l43/l44 (15), then r62-r65 (4) — every checked
-    # slot in the window must come from touched rows or that stale
-    # slice, and the rows evicted must be exactly the slice's
-    # registry-order tail.
-    # PINNED PER SYNC: this set describes the stale tail feeding the
-    # CURRENT round's window and must be advanced in the same commit as
-    # each _CHECKED_R{N} table in plans/registry.py (see the SYNC
-    # CHECKLIST comment there) — it is an independently-written
-    # expectation, not derived from _registry_order, which is the point.
-    stale_slice = (
-        {f"l{i:02d}" for i in range(39, 61)}
-        | {f"r{i:02d}" for i in range(62, 76)}
-        | {f"q{i}" for i in range(1, 8)}
-        | {f"s{i:02d}" for i in range(1, 6)}
-        | {"u11", "m08"}
+    # Synthetic artifacts. Rounds 1, 2, 10: a lexicographic read (r1,
+    # r10, r2) would leave r02 red, so this also pins numeric order.
+    green = {"hash_match": True, "err": None}
+    bad = {"hash_match": False, "err": None}
+    rows_only = {"hash_match": None, "err": "no_oracle"}
+    artifacts = {
+        1: {"q1_a": green, "s01_a": green, "r01_a": green, "l01_a": bad,
+            "l02_a": bad, "m01_a": rows_only, "u01_a": green},
+        2: {"l02_a": green, "r02_a": bad, "r03_a": bad},
+        10: {"r02_a": green, "u01_a": green, "q2_a": green},
+    }
+    for rnd, rows in artifacts.items():
+        (tmp_path / f"CORRECTNESS_r{rnd}.json").write_text(json.dumps(rows))
+    assert registry._load_rotation(tmp_path)[1] == {"l01", "r03"}
+    # u01's rewrite was hashed by round 10 (cleared); q2's postdates it.
+    monkeypatch.setattr(registry, "_REWRITTEN", {"u01": 2, "s01": 2, "q2": 10})
+    monkeypatch.setattr(registry, "_ROOT", tmp_path)
+    names = sorted(
+        {n for rows in artifacts.values() for n in rows} | {"r09_a", "m09_a"}
     )
-    checked_in_window = [n for n in names[:50] if n not in never]
-    # _LAST_RED rows (rank 0.5) are deliberately pinned AHEAD of every
-    # green vintage — they occupy the first checked slots, before the
-    # stale slice (s58 entered the window this way after the r11 sync).
-    # _TOUCHED rows (rank 0.75, rewritten since their last driver hash)
-    # take the slots right behind them.
-    red_in_window = [
-        n for n in checked_in_window if n.split("_", 1)[0] in _LAST_RED
+    assert sorted(names, key=registry._registry_order) == [
+        "m09_a", "r09_a",                     # never checked
+        "l01_a", "r03_a",                     # newest row red
+        "q2_a", "s01_a",                      # rewritten since last hash
+        "q1_a", "m01_a", "r01_a",             # round 1 (no_oracle = checked)
+        "l02_a",                              # red, then green in round 2
+        "u01_a", "r02_a",                     # round 10
     ]
-    assert checked_in_window[: len(red_in_window)] == red_in_window, (
-        "last-seen-red rows must occupy the first checked slots"
-    )
-    after_red = checked_in_window[len(red_in_window):]
-    touched_in_window = [
-        n for n in after_red if n.split("_", 1)[0] in _TOUCHED
+    # No artifacts: everything is never-checked, family order then name.
+    monkeypatch.setattr(registry, "_ROOT", tmp_path / "absent")
+    assert sorted(names, key=registry._registry_order) == [
+        "q1_a", "q2_a", "s01_a", "u01_a", "m01_a", "m09_a",
+        "l01_a", "l02_a", "r01_a", "r02_a", "r03_a", "r09_a",
     ]
-    assert after_red[: len(touched_in_window)] == touched_in_window, (
-        "rewritten-since-last-hash rows must precede the stale slice"
-    )
-    stale_in_window = after_red[len(touched_in_window):]
-    assert all(n.split("_", 1)[0] in stale_slice for n in stale_in_window), (
-        "checked window slots must be red-pin or stale-slice rows: "
-        f"{[n for n in stale_in_window if n.split('_', 1)[0] not in stale_slice]}"
-    )
-    # Touched/red rows may fall inside the pinned name ranges (l43/l44
-    # do); they enter the window via their priority rank, not the
-    # vintage rotation, so they don't consume vintage slots here.
-    vintage_names = [
-        n
-        for n in names
-        if n.split("_", 1)[0] in stale_slice
-        and n.split("_", 1)[0] not in _TOUCHED
-        and n.split("_", 1)[0] not in _LAST_RED
-    ]
-    assert stale_in_window == vintage_names[: len(stale_in_window)], (
-        "additions must evict the vintage's registry-order tail only"
-    )
 
 
 def test_registry_oracle_consistency():
-    """Every oracle key maps to a registered query, and the rows-only set
+    """The registry holds all 430 queries and 422 oracles, every oracle
+    key maps to a registered query, and the rows-only set
     (queries without an oracle) stays exactly the 8 documented
     learned-model/probabilistic ops — a new query silently missing its
     oracle (or a typo'd key) fails here before the driver ever runs."""
@@ -188,6 +146,9 @@ def test_registry_oracle_consistency():
     )
 
     q, o = set(all_queries()), set(all_oracles())
+    # The registry is frozen at 430: a plan module that fails to import
+    # must fail here, not silently drop its queries.
+    assert (len(q), len(o)) == (430, 422)
     assert o <= q, f"oracle keys without a query: {o - q}"
     rows_only = {n.split("_", 1)[0] for n in q - o}
     assert rows_only == {
