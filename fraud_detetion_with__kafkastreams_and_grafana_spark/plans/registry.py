@@ -82,12 +82,15 @@ def _load_rotation(root: Path) -> tuple[dict[str, int], frozenset[str]]:
 # entry whenever a query's computation changes — including through a
 # shared operator (l71's joins live in operators/dedup).
 _REWRITTEN: dict[str, int] = {
-    "s23": 12, "l71": 12,
-    "l68": 13, "r91": 13, "s35": 13, "s47": 13,
+    "l71": 12,
+    "l68": 13, "r91": 13, "s47": 13,
     # sink-merge twins moved onto the shared _partial_replay path
     "s26": 13, "s28": 13, "s30": 13, "s31": 13, "s33": 13, "s37": 13,
     "s38": 13, "s39": 13, "s42": 13, "s44": 13, "s46": 13, "s48": 13,
     "s49": 13,
+    # twins moved onto the shared replay_foreach_batch lifecycle
+    "s23": 13, "s27": 13, "s34": 13, "s35": 13, "s36": 13, "s40": 13,
+    "s41": 13, "s45": 13,
 }
 
 

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..operators.multimodal import PNG_ORACLE_SQL as _PNG_ORACLE_SQL
 from ..operators.prefix import segmented_running_sum
+from ..sessioncache import session_tmp_dir
 from ..sources.tables import load_table
 
 Query = Callable[[SparkSession, str], DataFrame]
@@ -344,9 +345,6 @@ def r47_local_supplier_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Serialized csv/json copies of the dims are identical for every query at a
 # given sf_dir — write once per session (harness plumbing; the query still
 # runs the real csv/json readers end-to-end).
-_ALT_SOURCE_DIRS: dict[tuple[int, str], str] = {}
-
-
 def _alt_source_dir(spark: SparkSession, sf_dir: str) -> str:
     def build(d: str) -> None:
         load_table(spark, sf_dir, "nation").write.mode("overwrite").option(
@@ -356,9 +354,7 @@ def _alt_source_dir(spark: SparkSession, sf_dir: str) -> str:
             f"{d}/region"
         )
 
-    return _session_tmp_dir(
-        _ALT_SOURCE_DIRS, spark, sf_dir, "spark_graft_altsrc_", build
-    )
+    return session_tmp_dir(spark, sf_dir, "spark_graft_altsrc_", build)
 
 
 @_register(
@@ -436,23 +432,13 @@ def r51_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORC_SOURCE_DIRS: dict[tuple[int, str], str] = {}
-
-
 def _orc_source_dir(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ORC_SOURCE_DIRS:
-        d = tempfile.mkdtemp(prefix="spark_graft_orcsrc_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
+    def build(d: str) -> None:
         load_table(spark, sf_dir, "orders").write.mode("overwrite").orc(
             f"{d}/orders"
         )
-        _ORC_SOURCE_DIRS[key] = d
-    return _ORC_SOURCE_DIRS[key]
+
+    return session_tmp_dir(spark, sf_dir, "spark_graft_orcsrc_", build)
 
 
 @_register(
@@ -484,27 +470,18 @@ def r52_orc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PART_SOURCE_DIRS: dict[tuple[int, str], str] = {}
-
-
 def _partitioned_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """events rewritten once per session as date-partitioned parquet
     (`.../event_date=2024-01-07/part-*.parquet`) — the layout every
     production event lake uses so time-range queries prune whole
     directories instead of scanning 100 TB of history."""
-    import atexit
-    import shutil
-    import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PART_SOURCE_DIRS:
-        d = tempfile.mkdtemp(prefix="spark_graft_partsrc_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
+    def build(d: str) -> None:
         load_table(spark, sf_dir, "events").withColumn(
             "event_date", F.to_date("ts")
         ).write.partitionBy("event_date").mode("overwrite").parquet(f"{d}/events")
-        _PART_SOURCE_DIRS[key] = d
-    return _PART_SOURCE_DIRS[key]
+
+    return session_tmp_dir(spark, sf_dir, "spark_graft_partsrc_", build)
 
 
 @_register(
@@ -578,42 +555,32 @@ def r54_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BUCKETED_READY: set[int] = set()
-
-
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> None:
     """orders + lineitem written once per session as bucketed tables
     (8 buckets on the join key, sorted within buckets) — the co-located
     layout that removes the fact-fact join shuffle at 100 TB. Tables land
     in the session warehouse (temp in tests, durable on a cluster)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    key = spark.sparkContext.applicationId
-    if key in _BUCKETED_READY:
-        return
     # External tables at a fresh per-session temp path: a managed table
     # would pin the warehouse location, and a leftover directory from an
     # earlier session (fresh metastore, so DROP can't see the table) makes
     # saveAsTable fail with LOCATION_ALREADY_EXISTS.
-    d = tempfile.mkdtemp(prefix="spark_graft_bucketed_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    for name, table, col in (
-        ("spark_graft_b_orders", "orders", "o_orderkey"),
-        ("spark_graft_b_lineitem", "lineitem", "l_orderkey"),
-    ):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        (
-            load_table(spark, sf_dir, table)
-            .write.format("parquet")
-            .option("path", f"{d}/{name}")
-            .bucketBy(8, col)
-            .sortBy(col)
-            .mode("overwrite")
-            .saveAsTable(name)
-        )
-    _BUCKETED_READY.add(key)
+    def build(d: str) -> None:
+        for name, table, col in (
+            ("spark_graft_b_orders", "orders", "o_orderkey"),
+            ("spark_graft_b_lineitem", "lineitem", "l_orderkey"),
+        ):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+            (
+                load_table(spark, sf_dir, table)
+                .write.format("parquet")
+                .option("path", f"{d}/{name}")
+                .bucketBy(8, col)
+                .sortBy(col)
+                .mode("overwrite")
+                .saveAsTable(name)
+            )
+
+    session_tmp_dir(spark, sf_dir, "spark_graft_bucketed_", build)
 
 
 @_register(
@@ -1686,28 +1653,6 @@ def r77_pointintime_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _session_tmp_dir(
-    cache: dict, spark: SparkSession, sf_dir: str, prefix: str, build
-) -> str:
-    """Shared session-cache + mkdtemp + atexit-cleanup boilerplate for
-    the one-off source materializations (_alt_source_dir, _png_file_dir,
-    _xml_source_dir): `build(d)` writes the fixture into the fresh dir."""
-    import atexit
-    import shutil
-    import tempfile
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in cache:
-        d = tempfile.mkdtemp(prefix=prefix)
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        build(d)
-        cache[key] = d
-    return cache[key]
-
-
-_BINFILE_DIRS: dict[tuple[int, str], str] = {}
-
-
 def _png_file_dir(spark: SparkSession, sf_dir: str) -> str:
     """One real .png file per document (executor-side foreachPartition
     write — the shape of an image-dataset materialization job; on a
@@ -1725,9 +1670,7 @@ def _png_file_dir(spark: SparkSession, sf_dir: str) -> str:
             "doc_id", "n_chars"
         ).foreachPartition(write_part)
 
-    return _session_tmp_dir(
-        _BINFILE_DIRS, spark, sf_dir, "spark_graft_binsrc_", build
-    )
+    return session_tmp_dir(spark, sf_dir, "spark_graft_binsrc_", build)
 
 
 @_register("r78_binaryfile_source", _PNG_ORACLE_SQL)
@@ -1764,9 +1707,6 @@ def r78_binaryfile_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return png_payload_features(files, payload_col="content")
 
 
-_XML_DIRS: dict[tuple[int, str], str] = {}
-
-
 def _xml_source_dir(spark: SparkSession, sf_dir: str) -> str:
     def build(d: str) -> None:
         load_table(spark, sf_dir, "events").select(
@@ -1775,9 +1715,7 @@ def _xml_source_dir(spark: SparkSession, sf_dir: str) -> str:
             f"{d}/events"
         )
 
-    return _session_tmp_dir(
-        _XML_DIRS, spark, sf_dir, "spark_graft_xmlsrc_", build
-    )
+    return session_tmp_dir(spark, sf_dir, "spark_graft_xmlsrc_", build)
 
 
 @_register(
@@ -1827,9 +1765,6 @@ def r79_xml_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # JSON), else event_id % 11 == 0 writes cents as a string (type
 # mismatch). Deterministic, so the oracle replays the classification
 # from the clean events table without ever seeing the broken bytes.
-_CORRUPT_SOURCE_DIRS: dict[tuple[str, str], str] = {}
-
-
 def _corrupt_source_dir(spark: SparkSession, sf_dir: str) -> str:
     def build(d: str) -> None:
         ev = load_table(spark, sf_dir, "events")
@@ -1852,9 +1787,7 @@ def _corrupt_source_dir(spark: SparkSession, sf_dir: str) -> str:
             f"{d}/events_jsonl"
         )
 
-    return _session_tmp_dir(
-        _CORRUPT_SOURCE_DIRS, spark, sf_dir, "spark_graft_corrupt_", build
-    )
+    return session_tmp_dir(spark, sf_dir, "spark_graft_corrupt_", build)
 
 
 @_register(
@@ -1923,9 +1856,6 @@ def r80_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 # generation B (user_id % 2 = 1) replaced user_id with a new cents
 # column. Split rule is deterministic, so the oracle replays the merged
 # read from the clean events table.
-_EVO_SOURCE_DIRS: dict[tuple[str, str], str] = {}
-
-
 def _evo_source_dir(spark: SparkSession, sf_dir: str) -> str:
     def build(d: str) -> None:
         ev = load_table(spark, sf_dir, "events")
@@ -1937,9 +1867,7 @@ def _evo_source_dir(spark: SparkSession, sf_dir: str) -> str:
             F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
         ).write.mode("overwrite").parquet(f"{d}/gen_b")
 
-    return _session_tmp_dir(
-        _EVO_SOURCE_DIRS, spark, sf_dir, "spark_graft_evo_", build
-    )
+    return session_tmp_dir(spark, sf_dir, "spark_graft_evo_", build)
 
 
 @_register(

@@ -23,13 +23,13 @@ wire). Non-events or filtered wires come from `materialize_wire_dir`
 directly. `_partial_replay` replays the dir as 2 micro-batches, parses
 each with the twin's DDL, drops rows whose FIRST schema field is null,
 reduces the batch with the twin's `reduce_fn` to bounded associative
-partials, lands them as one file per batch under a `_batch_id`
-partition (dynamic overwrite, idempotent), and returns the merged frame
-for the batch query's shared tail. Twins that keep a hand-rolled
-stream, because their per-batch work does not fit that contract:
-  s09: the callback IS the query (run twice to prove idempotence).
-  s14: append-mode watermarked window feeding a rollup table.
-  s21: two queries on one checkpoint (stop/restart recovery).
+partials and lands them as one file per batch through
+`replay_foreach_batch` (streaming/replay.py), the one foreachBatch
+lifecycle: each batch overwrites its own `_batch_id` partition
+(dynamic overwrite, idempotent), and the landed frame feeds the batch
+query's shared tail. Twins whose per-batch work does not fit that
+parse/filter/coalesce contract pass their own per-batch function to
+`replay_foreach_batch`:
   s23, s27, s36: request-atomic services probing static index tables;
        each batch lands one answer per request, which no key domain
        bounds, so a one-file-per-batch write is not safe for them.
@@ -37,9 +37,15 @@ stream, because their per-batch work does not fit that contract:
        rows a first-field filter would drop.
   s40: its (50-doc bucket, token) partial grows with the documents in
        the batch, so no key domain bounds the one-file-per-batch write.
-  s41: folds per-batch deltas in batch-id order.
-  s43, s45: stitch per-(user, batch) edge rows by batch id over an
+  s41: folds per-batch deltas in `_batch_id` order.
+  s45: stitches per-(user, batch) edge rows by `_batch_id` over an
        event-time-ordered wire.
+Twins that keep a hand-rolled stream, because the lifecycle itself is
+what they exercise:
+  s09: runs twice into one sink (exactly-once under full replay).
+  s14: a stateful append-mode watermarked window feeds the sink.
+  s21: two queries on one checkpoint (stop/restart recovery).
+  s43: lands two frames per batch (inner counts and boundary rows).
 
 Every snapshot equals its batch formulation by construction (same column
 transformations from operators/detect), and the driver proves it against
@@ -54,8 +60,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.detect import EVENTS_FRAUD_THRESHOLD, events_as_transactions
+from ..sessioncache import session_cached
 from ..sources.tables import load_table
-from ..streaming.replay import replay_wire_stream
+from ..streaming.replay import (
+    materialize_ordered_wire_dir,
+    materialize_wire_dir,
+    replay_foreach_batch,
+    replay_wire_stream,
+    temp_dir,
+)
 from ..streaming.topology import fraud_topology
 from .advanced import ORACLES as _AD
 from .analytics import Q4_SQL, Q6_SQL
@@ -104,29 +117,37 @@ def _events_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
 # given sf_dir — write it once per session and replay from the cache
 # (harness plumbing, not query work: each query still runs its own full
 # micro-batch streaming execution over the files).
-_WIRE_DIRS: dict[tuple[str, int, str], str] = {}
+_WIRE_DIRS: dict[tuple, str] = {}
+
+
+def _session_wire(
+    spark: SparkSession, tag: str, sf_dir: str, build: Callable[[], str], *key
+) -> str:
+    """Get-or-build the `tag` wire dir for (session, sf_dir, *key); dirs
+    of dead sessions are evicted (sessioncache.session_cached)."""
+    app = spark.sparkContext.applicationId
+    return session_cached(_WIRE_DIRS, (app, tag, sf_dir, *key), build)
 
 
 def _wire_dir(spark: SparkSession, sf_dir: str) -> str:
-    from ..streaming.replay import materialize_wire_dir
-
-    key = ("plain", spark.sparkContext.applicationId, sf_dir)
-    if key not in _WIRE_DIRS:
-        _WIRE_DIRS[key] = materialize_wire_dir(_events_wire(spark, sf_dir))
-    return _WIRE_DIRS[key]
+    return _session_wire(
+        spark,
+        "plain",
+        sf_dir,
+        lambda: materialize_wire_dir(_events_wire(spark, sf_dir)),
+    )
 
 
 def _doubled_wire_dir(spark: SparkSession, sf_dir: str) -> str:
     """Every wire record twice, spread across the replay files by the
     repartition — so duplicates land in DIFFERENT micro-batches and the
     streaming dedup must use cross-batch state, not per-batch distinct."""
-    from ..streaming.replay import materialize_wire_dir
 
-    key = ("doubled", spark.sparkContext.applicationId, sf_dir)
-    if key not in _WIRE_DIRS:
+    def build() -> str:
         w = _events_wire(spark, sf_dir)
-        _WIRE_DIRS[key] = materialize_wire_dir(w.union(w))
-    return _WIRE_DIRS[key]
+        return materialize_wire_dir(w.union(w))
+
+    return _session_wire(spark, "doubled", sf_dir, build)
 
 
 # ---------------------------------------------------------------------------
@@ -144,69 +165,41 @@ def _events_proj_wire(spark: SparkSession, sf_dir: str, cols) -> str:
     `_wire_dir` family. The struct Column's repr is a deterministic
     render of the resolved expression tree, so identical projections
     key identically and different ones never collide."""
-    from ..streaming.replay import materialize_wire_dir
-
     ev = load_table(spark, sf_dir, "events")
     t = F.unix_timestamp(
         F.date_trunc("second", F.col("ts")).cast("timestamp")
     )
     struct = F.struct(*cols(t))
-    key = ("proj", spark.sparkContext.applicationId, sf_dir, str(struct))
-    if key not in _WIRE_DIRS:
-        wire = ev.select(F.to_json(struct).alias("value"))
-        _WIRE_DIRS[key] = materialize_wire_dir(wire)
-    return _WIRE_DIRS[key]
+    return _session_wire(
+        spark,
+        "proj",
+        sf_dir,
+        lambda: materialize_wire_dir(ev.select(F.to_json(struct).alias("value"))),
+        str(struct),
+    )
 
 
 def _partial_replay(spark, wire_dir, schema, reduce_fn, prefix):
-    """Run the standard partial-merge replay: parse wire JSON, reduce
-    each micro-batch with reduce_fn, land partitioned by batch id,
-    return the merged parquet frame."""
-    import atexit
-    import shutil
-    import tempfile
+    """Run the standard partial-merge replay: parse wire JSON, drop rows
+    whose first schema field is null, reduce each micro-batch with
+    reduce_fn, land it through replay_foreach_batch, return the merged
+    parquet frame."""
 
-    out = tempfile.mkdtemp(prefix=f"spark_graft_{prefix}_sink_")
-    ckpt = tempfile.mkdtemp(prefix=f"spark_graft_{prefix}_ckpt_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
-
-    def write_partials(batch_df: DataFrame, batch_id: int) -> None:
+    def land(batch_df: DataFrame) -> DataFrame:
         b = batch_df.select(F.from_json("value", schema).alias("r")).select(
             "r.*"
         )
         b = b.where(b.columns[0] + " IS NOT NULL")
-        (
-            # coalesce(1): every reduce_fn lands BOUNDED keyed partials
-            # (that is the twins' merge contract), so one output file
-            # per batch — measured ~0.4 s/query off the replay floor
-            # vs 32 shuffle-partition files of a few rows each.
-            reduce_fn(b)
-            .coalesce(1)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out)
-        )
+        # coalesce(1): every reduce_fn lands BOUNDED keyed partials
+        # (that is the twins' merge contract), so one output file
+        # per batch — measured ~0.4 s/query off the replay floor
+        # vs 32 shuffle-partition files of a few rows each.
+        return reduce_fn(b).coalesce(1)
 
-    stream = (
-        spark.readStream.schema("value STRING")
-        # 2 micro-batches: associative partials (s31's rationale)
-        .option("maxFilesPerTrigger", 4)
-        .text(wire_dir)
+    # 2 micro-batches: associative partials (s31's rationale)
+    return replay_foreach_batch(spark, wire_dir, land, prefix, 4).drop(
+        "_batch_id"
     )
-    q = (
-        stream.writeStream.foreachBatch(write_partials)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.read.parquet(out).drop("_batch_id")
 
 
 @_register(
@@ -395,10 +388,8 @@ def _ordered_wire_dir(spark: SparkSession, sf_dir: str) -> str:
     """Wire records replayed in EVENT-TIME order (range-partitioned files +
     ascending mtimes) with a watermark-flushing sentinel — the Kafka-like
     arrival pattern the watermarked queries (s06-s08) assume."""
-    from ..streaming.replay import materialize_ordered_wire_dir
 
-    key = ("ordered", spark.sparkContext.applicationId, sf_dir)
-    if key not in _WIRE_DIRS:
+    def build() -> str:
         tx = events_as_transactions(load_table(spark, sf_dir, "events"))
         wire_ts = tx.select(
             F.to_json(
@@ -412,10 +403,11 @@ def _ordered_wire_dir(spark: SparkSession, sf_dir: str) -> str:
             ).alias("value"),
             F.col("event_time").alias("_ts"),
         )
-        _WIRE_DIRS[key] = materialize_ordered_wire_dir(
+        return materialize_ordered_wire_dir(
             wire_ts, "_ts", sentinel=_SENTINEL_JSON
         )
-    return _WIRE_DIRS[key]
+
+    return _session_wire(spark, "ordered", sf_dir, build)
 
 
 @_register(
@@ -621,17 +613,11 @@ def s09_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-run overwrites every partition with identical rows — the oracle
     would double-count if the sink appended. This is exactly-once delivery
     under replay, by partition overwrite instead of sink transactions."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..streaming.topology import alerts_as_points, fraud_topology
 
     d = _wire_dir(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="spark_graft_s09_sink_")
-    ckpt_base = tempfile.mkdtemp(prefix="spark_graft_s09_ckpt_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    atexit.register(shutil.rmtree, ckpt_base, ignore_errors=True)
+    out = temp_dir("spark_graft_s09_sink_")
+    ckpt_base = temp_dir("spark_graft_s09_ckpt_")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -953,17 +939,11 @@ def s14_stream_rollup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark horizon, the rollup is |users| x |hours| rows, and every
     dashboard query reads only the rollup. s09 separately proves the
     sink's exactly-once behavior under full replay."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..operators.detect import fraud_predicate, parse_wire
 
     d = _ordered_wire_dir(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="spark_graft_s14_rollup_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_s14_ckpt_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
+    out = temp_dir("spark_graft_s14_rollup_")
+    ckpt = temp_dir("spark_graft_s14_ckpt_")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -1154,10 +1134,8 @@ def _doubled_ordered_wire_dir(spark: SparkSession, sf_dir: str) -> str:
     same or adjacent files, so each duplicate arrives while its original
     is still inside the watermark horizon — the arrival pattern
     dropDuplicatesWithinWatermark guarantees correctness for."""
-    from ..streaming.replay import materialize_ordered_wire_dir
 
-    key = ("doubled_ordered", spark.sparkContext.applicationId, sf_dir)
-    if key not in _WIRE_DIRS:
+    def build() -> str:
         tx = events_as_transactions(load_table(spark, sf_dir, "events"))
         wire_ts = tx.select(
             F.to_json(
@@ -1171,10 +1149,11 @@ def _doubled_ordered_wire_dir(spark: SparkSession, sf_dir: str) -> str:
             ).alias("value"),
             F.col("event_time").alias("_ts"),
         )
-        _WIRE_DIRS[key] = materialize_ordered_wire_dir(
+        return materialize_ordered_wire_dir(
             wire_ts.union(wire_ts), "_ts", sentinel=_SENTINEL_JSON
         )
-    return _WIRE_DIRS[key]
+
+    return _session_wire(spark, "doubled_ordered", sf_dir, build)
 
 
 @_register(
@@ -1423,18 +1402,14 @@ def s21_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: checkpointing is the production lifecycle — every real stream
     restarts (deploys, rebalances, failures); state restore cost is
     proportional to live state (|users| here), not to history."""
-    import atexit
     import glob
     import os
     import shutil
-    import tempfile
 
     src = _wire_dir(spark, sf_dir)
     files = sorted(glob.glob(os.path.join(src, "part-*")))
-    d = tempfile.mkdtemp(prefix="spark_graft_s21_files_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_s21_ckpt_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
+    d = temp_dir("spark_graft_s21_files_")
+    ckpt = temp_dir("spark_graft_s21_ckpt_")
 
     name = "s21_mem"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -1655,10 +1630,6 @@ def s23_stream_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast choice inverts l64's merge-hinted posture CORRECTLY — the
     batch, not the index, should broadcast when one micro-batch is being
     probed; state stores hold nothing."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..operators.dedup import _incremental_index_frames
 
     docs = load_table(spark, sf_dir, "documents").where(F.trim("text") != "")
@@ -1683,7 +1654,6 @@ def s23_stream_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     wire = docs.where(F.col("doc_id") >= 400).select(
         F.to_json(F.struct("doc_id", "text")).alias("value")
     )
-    from ..streaming.replay import materialize_wire_dir
 
     # 4 files / 2 micro-batches — the documented replay-twin knee (2
     # batches prove cross-batch replay; each doc classifies against the
@@ -1691,14 +1661,9 @@ def s23_stream_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the default 8-file/4-batch replay bought nothing but 2 extra
     # rounds of micro-batch scheduling + sink-commit latency).
     d = materialize_wire_dir(wire, n_files=4)
-    out = tempfile.mkdtemp(prefix="spark_graft_s23_sink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_s23_ckpt_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
-
     k = 5
 
-    def gate(batch_df: DataFrame, batch_id: int) -> None:
+    def gate(batch_df: DataFrame) -> DataFrame:
         from ..functions.text import tokens
 
         b = batch_df.select(
@@ -1725,7 +1690,7 @@ def s23_stream_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("doc_id")
             .agg(F.min("h_near_id").alias("near_id"))
         )
-        (
+        return (
             bm.join(md5_min, "t_md5", "left")
             .join(near, "doc_id", "left")
             .select(
@@ -1735,30 +1700,12 @@ def s23_stream_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .otherwise(F.lit("novel"))
                 .alias("status"),
                 F.coalesce("exact_id", "near_id").alias("match_id"),
-                F.lit(batch_id).alias("_batch_id"),
             )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out)
         )
 
-    stream = (
-        spark.readStream.schema("value STRING")
-        .option("maxFilesPerTrigger", 2)
-        .text(d)
+    return replay_foreach_batch(spark, d, gate, "s23", 2).select(
+        "doc_id", "status", "match_id"
     )
-    q = (
-        stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.read.parquet(out).select("doc_id", "status", "match_id")
 
 
 def _cep_wire_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -1768,10 +1715,8 @@ def _cep_wire_dir(spark: SparkSession, sf_dir: str) -> str:
     event_id < 2^20 at every test SF), so file k's records ALL precede
     file k+1's under the exact batch ordering, and cross-batch
     contiguity is byte-deterministic."""
-    from ..streaming.replay import materialize_ordered_wire_dir
 
-    key = ("cep", spark.sparkContext.applicationId, sf_dir)
-    if key not in _WIRE_DIRS:
+    def build() -> str:
         ev = load_table(spark, sf_dir, "events")
         t = F.unix_timestamp(
             F.date_trunc("second", F.col("ts")).cast("timestamp")
@@ -1789,8 +1734,9 @@ def _cep_wire_dir(spark: SparkSession, sf_dir: str) -> str:
             ).alias("value"),
             (t * F.lit(1 << 20) + F.col("event_id")).alias("_key"),
         )
-        _WIRE_DIRS[key] = materialize_ordered_wire_dir(wire_ts, "_key")
-    return _WIRE_DIRS[key]
+        return materialize_ordered_wire_dir(wire_ts, "_key")
+
+    return _session_wire(spark, "cep", sf_dir, build)
 
 
 @_register("s24_stream_cep", _R3["r82_cep_card_testing"])
@@ -1980,57 +1926,26 @@ def s27_stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is scanned once per batch for the exact baseline (that is
     the cost of EVALUATING recall online; the ANN probe alone touches
     banded candidates only)."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..operators import similarity as SIM
 
     em = load_table(spark, sf_dir, "embeddings").localCheckpoint()
     wire = em.where(F.col("vec_id") < 10).select(
         F.to_json(F.struct("vec_id")).alias("value")
     )
-    from ..streaming.replay import materialize_wire_dir
 
     d = materialize_wire_dir(wire, n_files=4)
-    out = tempfile.mkdtemp(prefix="spark_graft_s27_sink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_s27_ckpt_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
 
-    def probe(batch_df: DataFrame, batch_id: int) -> None:
+    def probe(batch_df: DataFrame) -> DataFrame:
         ids = batch_df.select(
             F.get_json_object("value", "$.vec_id").cast("long").alias("vec_id")
         ).where(F.col("vec_id").isNotNull()).distinct()
         # broadcast bound: ids are THIS micro-batch's arriving probe
         # requests — per-batch sized, never the corpus
         queries = em.join(F.broadcast(ids), "vec_id")
-        (
-            SIM.ann_recall_eval(em, k=10, queries=queries)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out)
-        )
+        return SIM.ann_recall_eval(em, k=10, queries=queries)
 
-    stream = (
-        spark.readStream.schema("value STRING")
-        .option("maxFilesPerTrigger", 2)
-        .text(d)
-    )
-    q = (
-        stream.writeStream.foreachBatch(probe)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return (
-        spark.read.parquet(out)
+        replay_foreach_batch(spark, d, probe, "s27", 2)
         .select("query_id", "n_ann", "n_overlap")
         .orderBy("query_id")
     )
@@ -2053,7 +1968,6 @@ def s28_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     x 8 rows; the sink grows by that per batch regardless of traffic;
     recomputing PSI costs the ~40-row grid, which is why production
     dashboards re-evaluate it every refresh tick."""
-    from ..streaming.replay import materialize_wire_dir
     from .advanced import (
         _M17_BUCKET,
         m17_bucket_counts,
@@ -2104,10 +2018,8 @@ def _funnel_wire_dir(spark: SparkSession, sf_dir: str) -> str:
     state on the raw user_id and needs the same strictly-increasing
     (t << 20 | event_id) range key as the CEP wire, so per-key arrival
     order equals the batch window order)."""
-    from ..streaming.replay import materialize_ordered_wire_dir
 
-    key = ("funnel", spark.sparkContext.applicationId, sf_dir)
-    if key not in _WIRE_DIRS:
+    def build() -> str:
         ev = load_table(spark, sf_dir, "events")
         t = F.unix_timestamp(
             F.date_trunc("second", F.col("ts")).cast("timestamp")
@@ -2123,8 +2035,9 @@ def _funnel_wire_dir(spark: SparkSession, sf_dir: str) -> str:
             ).alias("value"),
             (t * F.lit(1 << 20) + F.col("event_id")).alias("_key"),
         )
-        _WIRE_DIRS[key] = materialize_ordered_wire_dir(wire_ts, "_key")
-    return _WIRE_DIRS[key]
+        return materialize_ordered_wire_dir(wire_ts, "_key")
+
+    return _session_wire(spark, "funnel", sf_dir, build)
 
 
 @_register("s29_stream_funnel", _R3["r87_funnel_conversion"])
@@ -2277,7 +2190,6 @@ def s33_stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs the domain-bounded counts frame, never the traffic. This is
     the production cadence: re-run the test every refresh tick against
     a frozen reference without rescanning history."""
-    from ..streaming.replay import materialize_wire_dir
     from .advanced import (
         m17_split_seconds,
         m22_ks_from_counts,
@@ -2350,10 +2262,6 @@ def s34_stream_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: zero streaming state; the sink grows by |batch keys| per
     batch; re-running the verdict costs the bounded key frame, never
     the traffic."""
-    import atexit
-    import shutil
-    import tempfile
-
     from .relational3 import r90_keyed_partials, r90_report_from_partials
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -2371,50 +2279,22 @@ def s34_stream_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("value")
     )
-    from ..streaming.replay import materialize_wire_dir
 
     d = materialize_wire_dir(wire, n_files=4)
-    out = tempfile.mkdtemp(prefix="spark_graft_s34_sink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_s34_ckpt_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
-
     schema = (
         "l_orderkey BIGINT, l_linenumber INT, l_quantity DOUBLE,"
         " l_discount DOUBLE, l_returnflag STRING, l_extendedprice DOUBLE,"
         " l_shipdate TIMESTAMP"
     )
 
-    def audit_partials(batch_df: DataFrame, batch_id: int) -> None:
+    def audit_partials(batch_df: DataFrame) -> DataFrame:
         b = batch_df.select(F.from_json("value", schema).alias("r")).select(
             "r.*"
         )
-        (
-            r90_keyed_partials(b)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out)
-        )
+        return r90_keyed_partials(b)
 
-    stream = (
-        spark.readStream.schema("value STRING")
-        .option("maxFilesPerTrigger", 2)
-        .text(d)
-    )
-    q = (
-        stream.writeStream.foreachBatch(audit_partials)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     merged = (
-        spark.read.parquet(out)
+        replay_foreach_batch(spark, d, audit_partials, "s34", 2)
         .groupBy("l_orderkey", "l_linenumber")
         .agg(
             *[
@@ -2444,10 +2324,6 @@ def s35_stream_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: zero streaming state; the sink grows by |batch distinct
     (col, value)| per batch — the same bound as r91's shuffle — and
     the verdict recomputation costs the bounded value-key frame."""
-    import atexit
-    import shutil
-    import tempfile
-
     from .relational3 import (
         _R91_ALL_COLS,
         _R91_KEY_COLS,
@@ -2457,19 +2333,13 @@ def s35_stream_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     wire = li.select(F.to_json(F.struct(*_R91_ALL_COLS)).alias("value"))
-    from ..streaming.replay import materialize_wire_dir
 
     d = materialize_wire_dir(wire, n_files=4)
-    out = tempfile.mkdtemp(prefix="spark_graft_s35_sink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_s35_ckpt_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
-
     # parse back with the table's own column types, so r91_long_form
     # picks the same typed key as the batch r91
     schema = li.select(_R91_ALL_COLS).schema
 
-    def stats_partials(batch_df: DataFrame, batch_id: int) -> None:
+    def stats_partials(batch_df: DataFrame) -> DataFrame:
         b = batch_df.select(F.from_json("value", schema).alias("r")).select(
             "r.*"
         )
@@ -2477,34 +2347,14 @@ def s35_stream_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         # only — min/max re-derive from the key set at report time, so
         # the per-batch shuffle, the sink, and the merge all drop the
         # vn/mn/mx payload (guide §2.3)
-        (
+        return (
             r91_long_form(b)
             .groupBy("cid", *_R91_KEY_COLS)
             .agg(F.count("*").alias("c"))
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out)
         )
 
-    stream = (
-        spark.readStream.schema("value STRING")
-        .option("maxFilesPerTrigger", 2)
-        .text(d)
-    )
-    q = (
-        stream.writeStream.foreachBatch(stats_partials)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     merged = (
-        spark.read.parquet(out)
+        replay_foreach_batch(spark, d, stats_partials, "s35", 2)
         .groupBy("cid", *_R91_KEY_COLS)
         .agg(F.sum("c").alias("c"))
     )
@@ -2528,10 +2378,6 @@ def s36_stream_bm25_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings survive the first broadcast join (the l77 probe path);
     the corpus-sized index frames are localCheckpointed once per
     session, never rebuilt per batch."""
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql.window import Window
 
     from .llmops import _L77_CONTRIB, _L77_QUERIES, _L77_TOPK
@@ -2560,15 +2406,10 @@ def s36_stream_bm25_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_list("t")).alias("terms"))
         .select(F.to_json(F.struct("query_id", "terms")).alias("value"))
     )
-    from ..streaming.replay import materialize_wire_dir
 
     d = materialize_wire_dir(wire, n_files=3)
-    out = tempfile.mkdtemp(prefix="spark_graft_s36_sink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_s36_ckpt_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
 
-    def probe(batch_df: DataFrame, batch_id: int) -> None:
+    def probe(batch_df: DataFrame) -> DataFrame | None:
         q = (
             batch_df.select(
                 F.from_json(
@@ -2579,7 +2420,7 @@ def s36_stream_bm25_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("t").isNotNull())
         )
         if q.isEmpty():
-            return
+            return None
         dfq = (
             tf.join(F.broadcast(q.select("t").distinct()), "t")
             .groupBy("t")
@@ -2599,34 +2440,14 @@ def s36_stream_bm25_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         win = Window.partitionBy("query_id").orderBy(
             F.desc("score_micro"), F.asc("doc_id")
         )
-        (
+        return (
             contrib.groupBy("query_id", "doc_id")
             .agg(F.sum("c").alias("score_micro"))
             .withColumn("rnk", F.row_number().over(win))
             .filter(F.col("rnk") <= _L77_TOPK)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out)
         )
 
-    stream = (
-        spark.readStream.schema("value STRING")
-        .option("maxFilesPerTrigger", 1)
-        .text(d)
-    )
-    q = (
-        stream.writeStream.foreachBatch(probe)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.read.parquet(out).select(
+    return replay_foreach_batch(spark, d, probe, "s36", 1).select(
         F.col("query_id").cast("long").alias("query_id"),
         F.col("rnk").cast("long").alias("rnk"),
         "doc_id",
@@ -2769,10 +2590,6 @@ def s40_stream_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: zero streaming state; the sink grows by the batch's
     distinct (bucket, token) pairs; re-plotting the curve costs the
     vocabulary-bounded merge plus the |buckets|-row windows."""
-    import atexit
-    import shutil
-    import tempfile
-
     from .llmops import _L88_BATCH
 
     from pyspark.sql.window import Window
@@ -2781,15 +2598,10 @@ def s40_stream_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     wire = docs.select(
         F.to_json(F.struct("doc_id", "text")).alias("value")
     )
-    from ..streaming.replay import materialize_wire_dir
 
     d = materialize_wire_dir(wire, n_files=4)
-    out = tempfile.mkdtemp(prefix="spark_graft_s40_sink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_s40_ckpt_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
 
-    def vocab_partials(batch_df: DataFrame, batch_id: int) -> None:
+    def vocab_partials(batch_df: DataFrame) -> DataFrame:
         b = batch_df.select(
             F.from_json("value", "doc_id BIGINT, text STRING").alias("r")
         ).select("r.doc_id", "r.text")
@@ -2800,33 +2612,10 @@ def s40_stream_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.split(F.lower(F.trim("text")), "[^a-z0-9]+")
             ).alias("t"),
         ).filter(F.col("t") != "")
-        (
-            tok.groupBy("b", "t")
-            .agg(F.count("*").alias("c"))
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out)
-        )
+        return tok.groupBy("b", "t").agg(F.count("*").alias("c"))
 
-    stream = (
-        spark.readStream.schema("value STRING")
-        .option("maxFilesPerTrigger", 2)
-        .text(d)
-    )
-    q = (
-        stream.writeStream.foreachBatch(vocab_partials)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     merged = (
-        spark.read.parquet(out)
+        replay_foreach_batch(spark, d, vocab_partials, "s40", 2)
         .groupBy("b", "t")
         .agg(F.sum("c").alias("c"))
         .localCheckpoint()  # feeds totals AND first-seen
@@ -2872,7 +2661,8 @@ def s41_stream_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders bit-for-bit and s41 shares r89's oracle verbatim. The
     cross-batch case — one customer's orders scattered over several
     micro-batches — is exactly what the merge algebra exists for
-    (pinned separately in tests/test_streaming_queries.py).
+    (pinned separately in
+    tests/test_streaming.py::test_r89_merge_handles_cross_batch_customers).
 
     Scale: ZERO streaming state — each micro-batch is pre-aggregated
     map-side to its own key summary before anything persists; the sink
@@ -2882,10 +2672,6 @@ def s41_stream_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     deltas. At 100 TB the snapshot view is the only large frame and it
     is never rebuilt — the same posture as r89, now with the refresh
     loop actually running on a stream."""
-    import atexit
-    import shutil
-    import tempfile
-
     from .relational3 import _r89_agg, _r89_merge
 
     ord_ = load_table(spark, sf_dir, "orders")
@@ -2898,15 +2684,10 @@ def s41_stream_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("value")
     )
-    from ..streaming.replay import materialize_wire_dir
 
     d = materialize_wire_dir(wire, n_files=4)
-    out = tempfile.mkdtemp(prefix="spark_graft_s41_sink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_s41_ckpt_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
 
-    def view_deltas(batch_df: DataFrame, batch_id: int) -> None:
+    def view_deltas(batch_df: DataFrame) -> DataFrame:
         b = batch_df.select(
             F.from_json(
                 "value", "o_custkey LONG, o_totalprice DOUBLE, d STRING"
@@ -2916,32 +2697,9 @@ def s41_stream_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             "r.o_totalprice",
             F.col("r.d").cast("date").alias("o_orderdate"),
         )
-        b = b.where(F.col("o_custkey").isNotNull())
-        (
-            _r89_agg(b)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out)
-        )
+        return _r89_agg(b.where(F.col("o_custkey").isNotNull()))
 
-    stream = (
-        spark.readStream.schema("value STRING")
-        .option("maxFilesPerTrigger", 1)
-        .text(d)
-    )
-    q = (
-        stream.writeStream.foreachBatch(view_deltas)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    parts = spark.read.parquet(out)
+    parts = replay_foreach_batch(spark, d, view_deltas, "s41", 1)
     batch_ids = sorted(
         r[0] for r in parts.select("_batch_id").distinct().collect()
     )
@@ -2974,7 +2732,6 @@ def s42_stream_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     final merge runs the day-bucketed lowering over the tiny union of
     fronts. A production deployment keeps the running front as the
     'view' and re-merges per refresh tick at front-sized cost."""
-    from ..streaming.replay import materialize_wire_dir
     from .relational3 import skyline_front
 
     ord_ = load_table(spark, sf_dir, "orders")
@@ -3036,18 +2793,12 @@ def s43_stream_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stitch and report run on boundary/matrix-bounded frames. This
     is the general recipe for sequence operators as streams: inner
     pairs are associative, edges carry O(1) per (user, batch)."""
-    import atexit
-    import shutil
-    import tempfile
-
     from .relational3 import transition_report_from_counts
 
     wdir = _funnel_wire_dir(spark, sf_dir)
-    out_cnt = tempfile.mkdtemp(prefix="spark_graft_s43_cnt_")
-    out_bnd = tempfile.mkdtemp(prefix="spark_graft_s43_bnd_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_s43_ckpt_")
-    for d in (out_cnt, out_bnd, ckpt):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
+    out_cnt = temp_dir("spark_graft_s43_cnt_")
+    out_bnd = temp_dir("spark_graft_s43_bnd_")
+    ckpt = temp_dir("spark_graft_s43_ckpt_")
 
     def transition_partials(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql.window import Window as W
@@ -3172,39 +2923,29 @@ def s45_stream_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
     Together with s43 this pins the general recipe: ordered-sequence
     aggregates stream as inner partials + O(1) per-(key, batch) edge
     state."""
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql.window import Window
 
-    from ..streaming.replay import materialize_ordered_wire_dir
+    def wire() -> str:
+        ev = load_table(spark, sf_dir, "events")
+        t = F.unix_timestamp(
+            F.date_trunc("second", F.col("ts")).cast("timestamp")
+        )
+        wire_ts = ev.select(
+            F.to_json(
+                F.struct(
+                    F.col("user_id"),
+                    t.alias("t"),
+                    F.col("event_id"),
+                    F.round(F.col("value") * 100).cast("long").alias("cents"),
+                )
+            ).alias("value"),
+            (t * F.lit(1 << 20) + F.col("event_id")).alias("_key"),
+        )
+        return materialize_ordered_wire_dir(wire_ts, "_key")
 
-    ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(
-        F.date_trunc("second", F.col("ts")).cast("timestamp")
-    )
-    wire_ts = ev.select(
-        F.to_json(
-            F.struct(
-                F.col("user_id"),
-                t.alias("t"),
-                F.col("event_id"),
-                F.round(F.col("value") * 100).cast("long").alias("cents"),
-            )
-        ).alias("value"),
-        (t * F.lit(1 << 20) + F.col("event_id")).alias("_key"),
-    )
-    key = ("s45_twa", spark.sparkContext.applicationId, sf_dir)
-    if key not in _WIRE_DIRS:
-        _WIRE_DIRS[key] = materialize_ordered_wire_dir(wire_ts, "_key")
-    wdir = _WIRE_DIRS[key]
-    out = tempfile.mkdtemp(prefix="spark_graft_s45_sink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_s45_ckpt_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
+    wdir = _session_wire(spark, "s45_twa", sf_dir, wire)
 
-    def twa_partials(batch_df: DataFrame, batch_id: int) -> None:
+    def twa_partials(batch_df: DataFrame) -> DataFrame:
         from pyspark.sql.window import Window as W
 
         b = batch_df.select(
@@ -3218,7 +2959,7 @@ def s45_stream_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint()
         w = W.partitionBy("user_id").orderBy("k")
         nxt = b.withColumn("t2", F.lead("t").over(w))
-        part = nxt.groupBy("user_id").agg(
+        return nxt.groupBy("user_id").agg(
             F.count("*").alias("n_events"),
             F.min("t").alias("min_t"),
             F.max("t").alias("max_t"),
@@ -3233,30 +2974,8 @@ def s45_stream_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(0),
             ).alias("wsum"),
         )
-        (
-            part.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out)
-        )
 
-    stream = (
-        spark.readStream.schema("value STRING")
-        .option("maxFilesPerTrigger", 2)
-        .text(wdir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(twa_partials)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    part = spark.read.parquet(out)
+    part = replay_foreach_batch(spark, wdir, twa_partials, "s45", 2)
     wb = Window.partitionBy("user_id").orderBy("_batch_id")
     stitched = part.withColumn(
         "nxt_first_t", F.lead("min_t").over(wb)
@@ -3375,7 +3094,6 @@ def s47_stream_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: zero streaming state; the sink grows by each batch's
     distinct (col, value) rows (value-domain bounded); the boundary
     pick costs the bounded histogram."""
-    from ..streaming.replay import materialize_wire_dir
     from .relational3 import equidepth_from_counts
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -3651,7 +3369,6 @@ def s53_stream_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: 9-row partials per batch; the tail is digit-domain. Zero
     streaming state."""
-    from ..streaming.replay import materialize_wire_dir
     from .advanced import benford_from_digit_counts
 
     o = load_table(spark, sf_dir, "orders")
@@ -3694,7 +3411,6 @@ def s54_stream_mom_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle verbatim.
 
     Scale: |months| partial rows per batch; zero streaming state."""
-    from ..streaming.replay import materialize_wire_dir
     from .relational3 import mom_from_monthly
 
     o = load_table(spark, sf_dir, "orders")
@@ -3737,7 +3453,6 @@ def s55_stream_peer_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: partials are customer-domain bounded; the peer frame is
     nation-domain. Re-deriving peer averages at refresh is mandatory
     (every batch shifts them) and costs the bounded customer frame."""
-    from ..streaming.replay import materialize_wire_dir
     from .relational3 import peer_deviation_from_cust
 
     o = load_table(spark, sf_dir, "orders")
@@ -3789,7 +3504,6 @@ def s56_stream_gopher_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-batch partial volume is |slices| rows regardless of
     batch size; document text never lands in the sink and never
     crosses a shuffle."""
-    from ..streaming.replay import materialize_wire_dir
     from .llmops import gopher_flags, gopher_report_from_slice_partials
 
     docs = load_table(spark, sf_dir, "documents")
@@ -3903,7 +3617,6 @@ def s58_stream_tukey(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .advanced import tukey_from_hist
 
     ev = load_table(spark, sf_dir, "events")
-    from ..streaming.replay import materialize_wire_dir
 
     wire = ev.select(
         F.to_json(
@@ -4084,7 +3797,6 @@ def s63_stream_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: partial volume is d^2 + d rows per batch REGARDLESS of
     batch size — the whole corpus never re-scans; the iteration tail
     costs d^2."""
-    from ..streaming.replay import materialize_wire_dir
     from .llmops import pca_from_moment_partials
 
     emb = load_table(spark, sf_dir, "embeddings")

@@ -14,14 +14,12 @@ rounded on both sides.
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sessioncache import session_tmp_dir
 from ..sources.tables import load_table
 
 Query = Callable[[SparkSession, str], DataFrame]
@@ -46,14 +44,8 @@ def _register(name: str, sql: str | None = None):
 # One materialized hourly rollup per (session, sf_dir); the 6-hour query
 # below reads ONLY this table. Parquet at a per-session temp path, like
 # r55's bucketed tables.
-_ROLLUP_DIRS: dict[tuple[int, str], str] = {}
-
-
 def _hourly_rollup_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ROLLUP_DIRS:
-        d = tempfile.mkdtemp(prefix="spark_graft_rollup_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
+    def build(d: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         (
             ev.filter(F.col("value") > 100.0)
@@ -69,8 +61,8 @@ def _hourly_rollup_path(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(d)
         )
-        _ROLLUP_DIRS[key] = d
-    return _ROLLUP_DIRS[key]
+
+    return session_tmp_dir(spark, sf_dir, "spark_graft_rollup_", build)
 
 
 @_register(

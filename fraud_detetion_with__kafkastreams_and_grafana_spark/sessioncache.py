@@ -10,12 +10,16 @@ drivers that cycle sessions don't accumulate unreachable handles.
 
 One helper instead of five hand-rolled copies: any future change to the
 eviction rule (size bound, thread-safety) lands in exactly one place.
+`session_tmp_dir` puts the one-off source materializations (csv/orc/xml
+copies, partitioned and bucketed layouts, rollup tables) on the same rule.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 from typing import TypeVar
+
+from pyspark.sql import SparkSession
 
 T = TypeVar("T")
 
@@ -31,3 +35,23 @@ def session_cached(cache: dict, key: tuple, build: Callable[[], T]) -> T:
             del cache[k]
         cache[key] = got
     return got
+
+
+_TMP_DIRS: dict[tuple[str, str, str], str] = {}
+
+
+def session_tmp_dir(
+    spark: SparkSession, sf_dir: str, prefix: str, build: Callable[[str], None]
+) -> str:
+    """Get-or-build the `prefix` fixture dir for (session, sf_dir):
+    `build(d)` writes the fixture into a fresh temp dir, removed at
+    interpreter exit. `prefix` names the fixture in the cache key."""
+    from .streaming.replay import temp_dir
+
+    def make() -> str:
+        d = temp_dir(prefix)
+        build(d)
+        return d
+
+    key = (spark.sparkContext.applicationId, prefix, sf_dir)
+    return session_cached(_TMP_DIRS, key, make)

@@ -10,6 +10,12 @@ aggregations genuinely accumulate across batches — and the complete-mode
 snapshot is compared against plain batch SQL. Batch-stream parity becomes
 an oracle-checked property instead of a claim.
 
+`replay_foreach_batch` is the other sink: each micro-batch lands through
+foreachBatch as a dynamic overwrite of its own `_batch_id` parquet
+partition (the idempotent sink the reference's consumer writes alerts
+to, FraudAlertConsumer.java:57-76), and the caller merges the landed
+partials as a batch frame.
+
 Scale: the replay writer/reader are distributed (df.write.text /
 readStream.text); nothing is collected. The memory sink holds only the
 final aggregated snapshot (bounded by group count, not input rows).
@@ -17,14 +23,24 @@ final aggregated snapshot (bounded by group count, not input rows).
 
 from __future__ import annotations
 
+import atexit
 import itertools
 import os
+import shutil
 import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _RUN = itertools.count()
+
+
+def temp_dir(prefix: str) -> str:
+    """A fresh directory under the temp root, removed at interpreter exit."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
 
 
 def materialize_wire_dir(wire: DataFrame, n_files: int = 8) -> str:
@@ -32,12 +48,7 @@ def materialize_wire_dir(wire: DataFrame, n_files: int = 8) -> str:
     text files (repartition, not coalesce, so the file count — and hence
     the micro-batch count on replay — is known). The directory is removed
     at interpreter exit."""
-    import atexit
-    import shutil
-
-    run = next(_RUN)
-    d = tempfile.mkdtemp(prefix=f"spark_graft_replay_{os.getpid()}_{run}_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    d = temp_dir(f"spark_graft_replay_{os.getpid()}_{next(_RUN)}_")
     wire.repartition(n_files).write.mode("overwrite").text(d)
     return d
 
@@ -60,16 +71,10 @@ def materialize_ordered_wire_dir(
 
     Scale: repartitionByRange is a distributed sort-free shuffle (sampled
     boundaries); only the driver-side utime loop is local, O(n_files)."""
-    import atexit
     import glob
-    import shutil
     import time
 
-    from pyspark.sql import functions as F
-
-    run = next(_RUN)
-    d = tempfile.mkdtemp(prefix=f"spark_graft_ordered_{os.getpid()}_{run}_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    d = temp_dir(f"spark_graft_ordered_{os.getpid()}_{next(_RUN)}_")
     (
         wire_ts.repartitionByRange(n_files, F.asc(ts_col))
         .select("value")
@@ -174,3 +179,49 @@ def replay_wire_stream(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(name)
+
+
+def replay_foreach_batch(
+    spark: SparkSession,
+    wire_dir: str,
+    land: Callable[[DataFrame], DataFrame | None],
+    prefix: str,
+    files_per_trigger: int,
+) -> DataFrame:
+    """Replay `wire_dir` (one `value STRING` column) in
+    ceil(n_files/files_per_trigger) micro-batches into the idempotent
+    foreachBatch sink: each batch writes `land(batch_df)` as a dynamic
+    overwrite of its own `_batch_id` partition, so a re-delivered batch
+    replaces its rows instead of doubling them (exactly-once by partition
+    overwrite, the s09 recipe). A `land` that returns None writes
+    nothing for that batch. Returns the landed parquet frame, `_batch_id`
+    included, for the caller's merge."""
+    out = temp_dir(f"spark_graft_{prefix}_sink_")
+    ckpt = temp_dir(f"spark_graft_{prefix}_ckpt_")
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        landed = land(batch_df)
+        if landed is None:
+            return
+        (
+            landed.withColumn("_batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_batch_id")
+            .parquet(out)
+        )
+
+    q = (
+        spark.readStream.schema("value STRING")
+        .option("maxFilesPerTrigger", files_per_trigger)
+        .text(wire_dir)
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return spark.read.parquet(out)

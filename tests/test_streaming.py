@@ -5,6 +5,7 @@ rate-source generator's distribution contract."""
 from __future__ import annotations
 
 import json
+import os
 import tempfile
 
 import pytest
@@ -1480,6 +1481,35 @@ def test_partial_replay_contract(spark, tmp_path):
     assert len(merged) == 2
     assert sum(r["count"] for r in merged) == 8 * 3 + 1
 
+    # The lifecycle under it: one micro-batch per file at
+    # files_per_trigger=1 (files replay oldest-first), every landed row
+    # tagged with its batch's _batch_id, and a land that returns None
+    # writes no partition.
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.streaming.replay import (
+        replay_foreach_batch,
+    )
+
+    wire = tmp_path / "one_per_file"
+    wire.mkdir()
+    for i in range(4):
+        f = wire / f"part-{i}.txt"
+        f.write_text(json.dumps({"k": i}) + "\n")
+        os.utime(f, (1_000_000 + i, 1_000_000 + i))
+    batches = []
+
+    def land(b):
+        rows = b.select(
+            F.get_json_object("value", "$.k").cast("long").alias("k")
+        )
+        batches.append(sorted(r.k for r in rows.collect()))
+        return None if batches[-1] == [2] else rows
+
+    landed = replay_foreach_batch(spark, str(wire), land, "contract", 1)
+    assert batches == [[0], [1], [2], [3]]
+    assert sorted((r.k, r._batch_id) for r in landed.collect()) == [
+        (0, 0), (1, 1), (3, 3)
+    ]
+
 
 _MOVED_TWINS = (
     "s26_stream_isotonic_calibration",
@@ -1525,7 +1555,7 @@ def test_sink_merge_twins_reuse_wire_dirs(spark, sf_dir, monkeypatch):
     for name in ("s31_stream_auc", "s37_stream_threshold_tuning",
                  "s44_stream_average_precision"):
         run(name)
-    assert [k[0] for k in SQ._WIRE_DIRS] == ["proj"]
+    assert [k[1] for k in SQ._WIRE_DIRS] == ["proj"]
 
     for name in _MOVED_TWINS:
         run(name)
@@ -1533,6 +1563,44 @@ def test_sink_merge_twins_reuse_wire_dirs(spark, sf_dir, monkeypatch):
     for name in _MOVED_TWINS:
         run(name)
         assert SQ._WIRE_DIRS == cached, name
+
+
+@pytest.mark.parametrize(
+    "name, files_per_trigger",
+    [
+        ("s23_stream_dedup_gate", 2),
+        ("s27_stream_ann_probe", 2),
+        ("s34_stream_quality_audit", 2),
+        ("s35_stream_table_stats", 2),
+        ("s36_stream_bm25_probe", 1),
+        ("s40_stream_vocab_growth", 2),
+        ("s41_stream_view_maintenance", 1),
+        ("s45_stream_twa", 2),
+    ],
+)
+def test_own_batch_twins_land_through_replay_foreach_batch(
+    spark, sf_dir, monkeypatch, name, files_per_trigger
+):
+    """Twins with their own per-batch function replay through the one
+    foreachBatch lifecycle, at the files-per-trigger that keeps their
+    micro-batch count (4-file wires: 2 batches, s36's 3-file wire: 3,
+    s41: 4; s45's 8-file ordered wire: 4). The replay is stubbed to stop
+    the twin at the call; the lifecycle is pinned by the contract test
+    above and each twin's value by its oracle."""
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.plans import (
+        streaming_queries as SQ,
+    )
+
+    class _Replayed(Exception):
+        pass
+
+    def stop(_spark, _wire_dir, _land, _prefix, n):
+        raise _Replayed(n)
+
+    monkeypatch.setattr(SQ, "replay_foreach_batch", stop)
+    with pytest.raises(_Replayed) as got:
+        SQ.QUERIES[name](spark, sf_dir)
+    assert got.value.args == (files_per_trigger,)
 
 
 def test_kstream_branch_first_match_wins(spark):
