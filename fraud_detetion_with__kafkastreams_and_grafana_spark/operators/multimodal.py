@@ -52,14 +52,6 @@ def _spread_deficient_scan(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return df
 
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

@@ -11,29 +11,25 @@ UDFs, never row-at-a-time Python.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import skew as SK
 from ..operators import udfs as U
 from ..operators.detect import EVENTS_FRAUD_THRESHOLD, events_as_transactions
-from ..sources.tables import load_table
+from ..sources.tables import event_seconds, events_projection, load_table
+from .registry import EventsRule, registrar
+from .relational3 import day_cents
 
-Query = Callable[[SparkSession, str], DataFrame]
-QUERIES: dict[str, Query] = {}
-ORACLES: dict[str, str] = {}
+QUERIES, ORACLES, _register = registrar()
 
 
-def _register(name: str, sql: str | None = None):
-    def deco(fn: Query) -> Query:
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
+def _cents() -> Column:
+    return F.round(F.col("value") * 100).cast("long").alias("cents")
 
-    return deco
+
+def _weekend_flag() -> Column:
+    return ((F.expr("weekday(ts)") + 1) >= 6).cast("int").alias("wk_flag")
 
 
 def _tx(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2223,14 +2219,14 @@ def m17_split_seconds(spark: SparkSession, sf_dir: str) -> int:
     timestamps; one tiny driver collect of a 1-row aggregate (the same
     class as the ANN index builds, documented there)."""
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     row = ev.agg(F.min(t).alias("mn"), F.max(t).alias("mx")).collect()[0]
     return int(row.mn + (row.mx - row.mn) // 2)
 
 
 def m17_bucket_counts(ev: DataFrame, split_s: int) -> DataFrame:
     """(event_type, bucket, ref_n, live_n) exact counts for one frame."""
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     return (
         ev.select(
             "event_type",
@@ -3028,7 +3024,7 @@ def m22_ks_counts(ev: DataFrame, split_s: int) -> DataFrame:
     re-aggregating the per-type counts (never rescanning the corpus).
     Shared by the batch test (m22) and its streaming deployment (s33),
     whose per-micro-batch count partials merge additively."""
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     per_type = (
         ev.select(
             F.col("event_type").alias("segment"),
@@ -4005,7 +4001,7 @@ def m27_score_drift_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     p = _m04_p(None)
     sc = ev.select(
         t.alias("t"),
@@ -5683,9 +5679,7 @@ def m41_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(
-        F.date_trunc("second", F.col("ts")).cast("timestamp")
-    )
+    t = event_seconds()
     daily = (
         ev.select(
             (t / 86400).cast("long").alias("d"),
@@ -6052,7 +6046,7 @@ def m45_fano_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: none in reference; public point-process
     statistic (Fano 1947) over the event stream R1 generates."""
     ev = load_table(spark, sf_dir, "events")
-    s = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    s = event_seconds()
     d = ev.select("user_id", (s / 86400).cast("long").alias("d"))
     span = d.agg(
         (F.max("d") - F.min("d") + 1).cast("long").alias("nd")
@@ -6293,7 +6287,7 @@ def m48_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     daily = (
         ev.select(
             (t / 86400).cast("long").alias("d"),
@@ -6400,7 +6394,7 @@ def m49_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window  # noqa: F401 (symmetry w/ pack)
 
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     daily = (
         ev.select(
             (t / 86400).cast("long").alias("d"),
@@ -6506,7 +6500,7 @@ def m50_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the weekly texture visible in the reference's
     Grafana time panels (README.md:342-356); public methodology."""
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     daily = (
         ev.select(
             (t / 86400).cast("long").alias("d"),
@@ -6799,6 +6793,18 @@ _M53_SQL = """
 """
 
 
+M53 = EventsRule(
+    lambda t: ["event_type", F.round("value").cast("long").alias("u")],
+    lambda e: e.groupBy("event_type").agg(
+        F.count("*").alias("n"),
+        F.sum("u").alias("s1"),
+        F.sum(F.col("u") * F.col("u")).alias("s2"),
+        F.sum(F.col("u") * F.col("u") * F.col("u")).alias("s3"),
+        F.sum(F.col("u") * F.col("u") * F.col("u") * F.col("u")).alias("s4"),
+    ),
+)
+
+
 @_register("m53_higher_moments", _M53_SQL)
 def m53_higher_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population skewness and excess kurtosis of (whole-unit) amounts
@@ -6817,22 +6823,8 @@ def m53_higher_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: distribution audit over the reference's amount
     field (TransactionProducer.java:48, U[1000,11000)); public
     moment algebra."""
-    ev = load_table(spark, sf_dir, "events")
-    e = ev.select(
-        "event_type", F.round("value").cast("long").alias("u")
-    )
     return moments_from_power_sums(
-        e.groupBy("event_type").agg(
-            F.count("*").alias("n"),
-            F.sum("u").cast("long").alias("s1"),
-            F.sum(F.col("u") * F.col("u")).cast("long").alias("s2"),
-            F.sum(F.col("u") * F.col("u") * F.col("u"))
-            .cast("long")
-            .alias("s3"),
-            F.sum(F.col("u") * F.col("u") * F.col("u") * F.col("u"))
-            .cast("long")
-            .alias("s4"),
-        )
+        M53.reduce(events_projection(spark, sf_dir, M53.cols))
     )
 
 
@@ -6895,6 +6887,15 @@ _M54_SQL = """
 """
 
 
+M54 = EventsRule(
+    lambda t: [
+        (((t / 86400).cast("long") + 3) % 7 + 1).cast("int").alias("isodow"),
+        "event_type",
+    ],
+    lambda e: e.groupBy("isodow", "event_type").agg(F.count("*").alias("obs")),
+)
+
+
 @_register("m54_gtest_llr", _M54_SQL)
 def m54_gtest_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log-likelihood-ratio G-test terms for the weekday x event-type
@@ -6911,19 +6912,9 @@ def m54_gtest_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: none in reference; public statistic (Dunning
     1993)."""
-    ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
-    o = (
-        ev.select(
-            (((t / 86400).cast("long") + 3) % 7 + 1)
-            .cast("int")
-            .alias("isodow"),
-            "event_type",
-        )
-        .groupBy("isodow", "event_type")
-        .agg(F.count("*").alias("obs"))
+    return gtest_from_cells(
+        M54.reduce(events_projection(spark, sf_dir, M54.cols))
     )
-    return gtest_from_cells(o)
 
 
 def gtest_from_cells(o: "DataFrame") -> "DataFrame":
@@ -7130,6 +7121,13 @@ _M56_SQL = f"""
 """
 
 
+# (d, cents) -> daily cents x: m56, m69, m72 and m80 (and their twins
+# s62, s76, s75, s82) all reduce to this one day-domain frame.
+DAILY_CENTS = EventsRule(
+    day_cents, lambda e: e.groupBy("d").agg(F.sum("cents").alias("x"))
+)
+
+
 @_register("m56_seasonal_adjusted_outliers", _M56_SQL)
 def m56_seasonal_adjusted_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonally-adjusted revenue anomalies: each calendar day's cents
@@ -7147,17 +7145,9 @@ def m56_seasonal_adjusted_outliers(spark: SparkSession, sf_dir: str) -> DataFram
     Reference parity: the alert layer the reference's Grafana panels
     imply (README.md:342-356, FOR-duration alert rule q8's seasonal
     cousin); public methodology (ratio-to-moving-frame adjustment)."""
-    ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
-    daily = (
-        ev.select(
-            (t / 86400).cast("long").alias("d"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").cast("long").alias("x"))
+    return seasonal_outliers_from_daily(
+        DAILY_CENTS.reduce(events_projection(spark, sf_dir, DAILY_CENTS.cols))
     )
-    return seasonal_outliers_from_daily(daily)
 
 
 def seasonal_outliers_from_daily(daily: "DataFrame") -> "DataFrame":
@@ -7350,6 +7340,12 @@ _M58_SQL = """
 """
 
 
+M58 = EventsRule(
+    lambda t: [F.col("event_type").alias("g"), _cents()],
+    lambda e: e.groupBy("g", "cents").agg(F.count("*").cast("long").alias("cg")),
+)
+
+
 @_register("m58_kruskal_wallis", _M58_SQL)
 def m58_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kruskal-Wallis H across the five event types on amount cents —
@@ -7368,12 +7364,9 @@ def m58_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: none in reference; public test (Kruskal &
     Wallis 1952) over the reference's amount field."""
-    ev = load_table(spark, sf_dir, "events")
-    cells = ev.select(
-        F.col("event_type").alias("g"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    ).groupBy("g", "cents").agg(F.count("*").cast("long").alias("cg"))
-    return kruskal_from_cells(cells)
+    return kruskal_from_cells(
+        M58.reduce(events_projection(spark, sf_dir, M58.cols))
+    )
 
 
 def kruskal_from_cells(cells: DataFrame) -> DataFrame:
@@ -7454,6 +7447,21 @@ _M59_SQL = """
 """
 
 
+M59 = EventsRule(
+    lambda t: ["user_id", "event_type", _weekend_flag(), _cents()],
+    lambda e: e.where(F.col("event_type") == "purchase")
+    .groupBy("user_id")
+    .agg(
+        F.sum(F.when(F.col("wk_flag") == 1, F.col("cents")).otherwise(F.lit(0)))
+        .cast("long")
+        .alias("wk"),
+        F.sum(F.when(F.col("wk_flag") == 0, F.col("cents")).otherwise(F.lit(0)))
+        .cast("long")
+        .alias("wd"),
+    ),
+)
+
+
 @_register("m59_wilcoxon_signed_rank", _M59_SQL)
 def m59_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wilcoxon signed-rank test pairing each user's weekend vs
@@ -7471,22 +7479,9 @@ def m59_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: none in reference; public test (Wilcoxon 1945)
     over the reference's amount field."""
-    ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
-    wkend = (F.expr("weekday(ts)") + 1) >= 6
-    p = (
-        ev.where(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(
-            F.sum(F.when(wkend, cents).otherwise(F.lit(0)))
-            .cast("long")
-            .alias("wk"),
-            F.sum(F.when(~wkend, cents).otherwise(F.lit(0)))
-            .cast("long")
-            .alias("wd"),
-        )
+    return wilcoxon_from_pairs(
+        M59.reduce(events_projection(spark, sf_dir, M59.cols))
     )
-    return wilcoxon_from_pairs(p)
 
 
 def wilcoxon_from_pairs(p: DataFrame) -> DataFrame:
@@ -7564,6 +7559,16 @@ _M60_SQL = """
 """
 
 
+# (event_type x, ISO weekday y) -> contingency cells: m60 and m71.
+TYPE_WEEKDAY_CELLS = EventsRule(
+    lambda t: [
+        F.col("event_type").alias("x"),
+        (F.expr("weekday(ts)") + 1).cast("int").alias("y"),
+    ],
+    lambda e: e.groupBy("x", "y").agg(F.count("*").cast("long").alias("c")),
+)
+
+
 @_register("m60_mutual_information", _M60_SQL)
 def m60_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mutual information between event type and ISO weekday — the
@@ -7582,12 +7587,11 @@ def m60_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: none in reference; public measure (Shannon
     1948) over the reference's event stream."""
-    ev = load_table(spark, sf_dir, "events")
-    cells = ev.groupBy(
-        F.col("event_type").alias("x"),
-        (F.expr("weekday(ts)") + 1).cast("int").alias("y"),
-    ).agg(F.count("*").cast("long").alias("c"))
-    return mutual_info_from_cells(cells)
+    return mutual_info_from_cells(
+        TYPE_WEEKDAY_CELLS.reduce(
+            events_projection(spark, sf_dir, TYPE_WEEKDAY_CELLS.cols)
+        )
+    )
 
 
 def mutual_info_from_cells(cells: DataFrame) -> DataFrame:
@@ -7696,6 +7700,16 @@ _M61_SQL = """
 """
 
 
+# (g, wk_flag) -> per-type weekday/weekend counts: m61 and m65.
+WEEKPART_MIX = EventsRule(
+    lambda t: [F.col("event_type").alias("g"), _weekend_flag()],
+    lambda e: e.groupBy("g").agg(
+        F.sum((F.col("wk_flag") == 0).cast("long")).cast("long").alias("cwd"),
+        F.sum((F.col("wk_flag") == 1).cast("long")).cast("long").alias("cwk"),
+    ),
+)
+
+
 @_register("m61_jensen_shannon", _M61_SQL)
 def m61_jensen_shannon(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jensen-Shannon divergence between the weekday and weekend
@@ -7712,13 +7726,9 @@ def m61_jensen_shannon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: none in reference; public measure (Lin 1991)
     over the reference's event stream."""
-    ev = load_table(spark, sf_dir, "events")
-    wkend = (F.expr("weekday(ts)") + 1) >= 6
-    c = ev.groupBy(F.col("event_type").alias("g")).agg(
-        F.sum((~wkend).cast("long")).cast("long").alias("cwd"),
-        F.sum(wkend.cast("long")).cast("long").alias("cwk"),
+    return jsd_from_cells(
+        WEEKPART_MIX.reduce(events_projection(spark, sf_dir, WEEKPART_MIX.cols))
     )
-    return jsd_from_cells(c)
 
 
 def jsd_from_cells(c: DataFrame) -> DataFrame:
@@ -8027,6 +8037,18 @@ _M64_SQL = """
 """
 
 
+# purchase cents -> (cents, weekend c1, weekday c2) histogram: m64, m78.
+WEEKPART_PURCHASE_HIST = EventsRule(
+    lambda t: ["event_type", _weekend_flag(), _cents()],
+    lambda e: e.where(F.col("event_type") == "purchase")
+    .groupBy("cents")
+    .agg(
+        F.sum((F.col("wk_flag") == 1).cast("long")).cast("long").alias("c1"),
+        F.sum((F.col("wk_flag") == 0).cast("long")).cast("long").alias("c2"),
+    ),
+)
+
+
 @_register("m64_wasserstein_emd", _M64_SQL)
 def m64_wasserstein_emd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 1-D earth mover's distance (Wasserstein-1) between the
@@ -8046,19 +8068,11 @@ def m64_wasserstein_emd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: none in reference; public metric (Monge 1781 /
     Vaserstein 1969) over the reference's amount field."""
-    from pyspark.sql.window import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    wkend = (F.expr("weekday(ts)") + 1) >= 6
-    e = ev.where(F.col("event_type") == "purchase").select(
-        wkend.cast("int").alias("wk"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+    return emd_from_cells(
+        WEEKPART_PURCHASE_HIST.reduce(
+            events_projection(spark, sf_dir, WEEKPART_PURCHASE_HIST.cols)
+        )
     )
-    h = e.groupBy("cents").agg(
-        F.sum("wk").cast("long").alias("c1"),
-        (F.count("*") - F.sum("wk")).cast("long").alias("c2"),
-    )
-    return emd_from_cells(h)
 
 
 def emd_from_cells(h: DataFrame) -> DataFrame:
@@ -8150,13 +8164,9 @@ def m65_hellinger_bhattacharyya(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: none in reference; public measures
     (Bhattacharyya 1943, Hellinger 1909)."""
-    ev = load_table(spark, sf_dir, "events")
-    wkend = (F.expr("weekday(ts)") + 1) >= 6
-    c = ev.groupBy(F.col("event_type").alias("g")).agg(
-        F.sum((~wkend).cast("long")).cast("long").alias("cwd"),
-        F.sum(wkend.cast("long")).cast("long").alias("cwk"),
+    return hellinger_from_cells(
+        WEEKPART_MIX.reduce(events_projection(spark, sf_dir, WEEKPART_MIX.cols))
     )
-    return hellinger_from_cells(c)
 
 
 def hellinger_from_cells(c: DataFrame) -> DataFrame:
@@ -8213,6 +8223,14 @@ _M66_SQL = """
 """
 
 
+M66 = EventsRule(
+    lambda t: [F.col("event_type").alias("g"), "user_id", _cents()],
+    lambda e: e.groupBy("g", "user_id").agg(
+        F.sum("cents").cast("long").alias("cents")
+    ),
+)
+
+
 @_register("m66_hhi_concentration", _M66_SQL)
 def m66_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Herfindahl-Hirschman concentration of per-user value share
@@ -8230,11 +8248,9 @@ def m66_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: the concentration view of q1's top-10 scammers
     (BASELINE.md panel 1); public index (Herfindahl 1950)."""
-    ev = load_table(spark, sf_dir, "events")
-    cust = ev.groupBy(F.col("event_type").alias("g"), F.col("user_id")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long")).cast("long").alias("cents")
+    return hhi_from_user_totals(
+        M66.reduce(events_projection(spark, sf_dir, M66.cols))
     )
-    return hhi_from_user_totals(cust)
 
 
 def hhi_from_user_totals(cust: DataFrame) -> DataFrame:
@@ -8293,6 +8309,14 @@ _M67_SQL = """
 """
 
 
+M67 = EventsRule(
+    lambda t: ["user_id", "event_type", _cents()],
+    lambda e: e.where(F.col("event_type") == "purchase")
+    .groupBy("user_id")
+    .agg(F.sum("cents").cast("long").alias("x")),
+)
+
+
 @_register("m67_theil_inequality", _M67_SQL)
 def m67_theil_inequality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil T and Theil L (mean log deviation) of per-user purchase
@@ -8310,17 +8334,9 @@ def m67_theil_inequality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: none in reference; public indices (Theil 1967)
     over the reference's per-user amounts (q1's concentration,
     measured instead of ranked)."""
-    ev = load_table(spark, sf_dir, "events")
-    cust = (
-        ev.where(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(
-            F.sum(F.round(F.col("value") * 100).cast("long"))
-            .cast("long")
-            .alias("x")
-        )
+    return theil_from_user_totals(
+        M67.reduce(events_projection(spark, sf_dir, M67.cols))
     )
-    return theil_from_user_totals(cust)
 
 
 def theil_from_user_totals(cust: DataFrame) -> DataFrame:
@@ -8382,6 +8398,12 @@ _M68_SQL = """
 """
 
 
+M68 = EventsRule(
+    lambda t: [F.col("event_type").alias("g"), F.hour("ts").cast("int").alias("hr")],
+    lambda e: e.groupBy("g", "hr").agg(F.count("*").cast("long").alias("o")),
+)
+
+
 @_register("m68_chisq_gof_hourly", _M68_SQL)
 def m68_chisq_gof_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square goodness-of-fit of each event type's hour-of-day
@@ -8398,11 +8420,9 @@ def m68_chisq_gof_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: none in reference; public test (Pearson 1900)
     over the reference's event timestamps."""
-    ev = load_table(spark, sf_dir, "events")
-    h = ev.groupBy(
-        F.col("event_type").alias("g"), F.hour("ts").cast("int").alias("hr")
-    ).agg(F.count("*").cast("long").alias("o"))
-    return chisq_gof_from_cells(h)
+    return chisq_gof_from_cells(
+        M68.reduce(events_projection(spark, sf_dir, M68.cols))
+    )
 
 
 def chisq_gof_from_cells(h: DataFrame) -> DataFrame:
@@ -8481,19 +8501,9 @@ def m69_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: none in reference; public test (Durbin & Watson
     1950) on the reference's revenue series."""
-    from pyspark.sql.window import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
-    daily = (
-        ev.select(
-            (t / 86400).cast("long").alias("d"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").cast("long").alias("x"))
+    return durbin_watson_from_daily(
+        DAILY_CENTS.reduce(events_projection(spark, sf_dir, DAILY_CENTS.cols))
     )
-    return durbin_watson_from_daily(daily)
 
 
 def durbin_watson_from_daily(daily: "DataFrame") -> "DataFrame":
@@ -8593,6 +8603,19 @@ _M70_SQL = f"""
 """
 
 
+M70 = EventsRule(
+    lambda t: [
+        (t / 86400).cast("long").alias("d"),
+        (F.col("event_type") == "purchase").cast("long").alias("isp"),
+        (F.col("event_type") == "error").cast("long").alias("ise"),
+    ],
+    lambda e: e.groupBy("d").agg(
+        F.sum("isp").cast("long").alias("xp"),
+        F.sum("ise").cast("long").alias("xe"),
+    ),
+)
+
+
 @_register("m70_cross_correlation", _M70_SQL)
 def m70_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-correlation function between daily purchase counts and
@@ -8610,21 +8633,9 @@ def m70_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: none in reference; public methodology (Box &
     Jenkins), pairing the reference's fraud-rate and revenue panels.
     """
-    ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
-    daily = (
-        ev.select(
-            (t / 86400).cast("long").alias("d"),
-            (F.col("event_type") == "purchase").cast("long").alias("isp"),
-            (F.col("event_type") == "error").cast("long").alias("ise"),
-        )
-        .groupBy("d")
-        .agg(
-            F.sum("isp").cast("long").alias("xp"),
-            F.sum("ise").cast("long").alias("xe"),
-        )
+    return ccf_from_daily(
+        M70.reduce(events_projection(spark, sf_dir, M70.cols))
     )
-    return ccf_from_daily(daily)
 
 
 def ccf_from_daily(daily: "DataFrame") -> "DataFrame":
@@ -8731,12 +8742,11 @@ def m71_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: none in reference; public effect size (Cramer
     1946, Bergsma 2013), completing m33/m60's dependence suite."""
-    ev = load_table(spark, sf_dir, "events")
-    cells = ev.groupBy(
-        F.col("event_type").alias("x"),
-        (F.expr("weekday(ts)") + 1).cast("int").alias("y"),
-    ).agg(F.count("*").cast("long").alias("c"))
-    return cramers_from_cells(cells)
+    return cramers_from_cells(
+        TYPE_WEEKDAY_CELLS.reduce(
+            events_projection(spark, sf_dir, TYPE_WEEKDAY_CELLS.cols)
+        )
+    )
 
 
 def cramers_from_cells(cells: DataFrame) -> DataFrame:
@@ -8847,19 +8857,9 @@ def m72_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: none in reference; public sequential test (Page
     1954, Hinkley 1971) — the changepoint layer under q8's
     FOR-duration alerts."""
-    from pyspark.sql.window import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
-    daily = (
-        ev.select(
-            (t / 86400).cast("long").alias("d"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").cast("long").alias("x"))
+    return page_hinkley_from_daily(
+        DAILY_CENTS.reduce(events_projection(spark, sf_dir, DAILY_CENTS.cols))
     )
-    return page_hinkley_from_daily(daily)
 
 
 def page_hinkley_from_daily(daily: "DataFrame") -> "DataFrame":
@@ -8931,6 +8931,18 @@ _M73_SQL = """
 """
 
 
+M73 = EventsRule(
+    lambda t: [
+        (F.expr("weekday(ts)") + 1).cast("long").alias("w"),
+        (F.col("event_type") == "purchase").cast("long").alias("isp"),
+    ],
+    lambda e: e.groupBy("w").agg(
+        F.count("*").cast("long").alias("ni"),
+        F.sum("isp").cast("long").alias("xi"),
+    ),
+)
+
+
 @_register("m73_cochran_armitage", _M73_SQL)
 def m73_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cochran-Armitage test for a LINEAR TREND in purchase rate
@@ -8945,16 +8957,9 @@ def m73_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: none in reference; public test (Cochran 1954,
     Armitage 1955) on the reference's conversion funnel."""
-    ev = load_table(spark, sf_dir, "events")
-    g = ev.groupBy(
-        (F.expr("weekday(ts)") + 1).cast("long").alias("w")
-    ).agg(
-        F.count("*").cast("long").alias("ni"),
-        F.sum((F.col("event_type") == "purchase").cast("long"))
-        .cast("long")
-        .alias("xi"),
+    return trend_test_from_dow_counts(
+        M73.reduce(events_projection(spark, sf_dir, M73.cols))
     )
-    return trend_test_from_dow_counts(g)
 
 
 def trend_test_from_dow_counts(g: DataFrame) -> DataFrame:
@@ -9319,19 +9324,11 @@ def m78_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: none in reference; public test (Anderson &
     Darling 1952; Scholz & Stephens 1987)."""
-    from pyspark.sql.window import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    wkend = (F.expr("weekday(ts)") + 1) >= 6
-    e = ev.where(F.col("event_type") == "purchase").select(
-        wkend.cast("int").alias("wk"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+    return anderson_darling_from_cells(
+        WEEKPART_PURCHASE_HIST.reduce(
+            events_projection(spark, sf_dir, WEEKPART_PURCHASE_HIST.cols)
+        )
     )
-    h = e.groupBy("cents").agg(
-        F.sum("wk").cast("long").alias("c1"),
-        (F.count("*") - F.sum("wk")).cast("long").alias("c2"),
-    )
-    return anderson_darling_from_cells(h)
 
 
 def anderson_darling_from_cells(h: DataFrame) -> DataFrame:
@@ -9538,19 +9535,9 @@ def m80_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: none in reference; public test (Friedman 1937)
     on the reference's revenue series."""
-    from pyspark.sql.window import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
-    daily = (
-        ev.select(
-            (t / 86400).cast("long").alias("d"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").cast("long").alias("x"))
+    return friedman_from_daily(
+        DAILY_CENTS.reduce(events_projection(spark, sf_dir, DAILY_CENTS.cols))
     )
-    return friedman_from_daily(daily)
 
 
 def friedman_from_daily(daily: "DataFrame") -> "DataFrame":
@@ -9667,7 +9654,7 @@ def m81_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: none in reference; public test (Cochran 1950)
     on the reference's conversion panel."""
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     d = (t / 86400).cast("long")
     bounds = ev.agg(F.min(d).alias("lo"), F.max(d).alias("hi"))
     wk_ok = (
@@ -9730,6 +9717,18 @@ _M82_SQL = """
 """
 
 
+M82 = EventsRule(
+    lambda t: [F.col("event_type").alias("g"), _cents()],
+    lambda e: e.groupBy("g").agg(
+        F.count("*").cast("long").alias("n"),
+        F.sum("cents").cast("long").alias("s"),
+        F.sum(F.col("cents") * F.col("cents")).cast("long").alias("s2"),
+        F.min("cents").cast("long").alias("mn"),
+        F.max("cents").cast("long").alias("mx"),
+    ),
+)
+
+
 @_register("m82_grubbs_extremes", _M82_SQL)
 def m82_grubbs_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grubbs' statistic (max |x - mean| / sd) and the studentized
@@ -9745,19 +9744,9 @@ def m82_grubbs_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: none in reference; public statistics (Grubbs
     1950; Student 1927) on the reference's amount field."""
-    ev = load_table(spark, sf_dir, "events")
-    e = ev.select(
-        F.col("event_type").alias("g"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+    return grubbs_from_power_extremes(
+        M82.reduce(events_projection(spark, sf_dir, M82.cols))
     )
-    gr = e.groupBy("g").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("cents").cast("long").alias("s"),
-        F.sum(F.col("cents") * F.col("cents")).cast("long").alias("s2"),
-        F.min("cents").cast("long").alias("mn"),
-        F.max("cents").cast("long").alias("mx"),
-    )
-    return grubbs_from_power_extremes(gr)
 
 
 def grubbs_from_power_extremes(gr: DataFrame) -> DataFrame:

@@ -12,8 +12,6 @@ tests in tests/test_llmops.py.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -23,20 +21,9 @@ from ..operators import multimodal as MM
 from ..operators import similarity as SIM
 from ..sessioncache import session_cached
 from ..sources.tables import load_table
+from .registry import registrar
 
-Query = Callable[[SparkSession, str], DataFrame]
-QUERIES: dict[str, Query] = {}
-ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn: Query) -> Query:
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLES, _register = registrar()
 
 
 # SQL fragments shared by oracles — kept in exact sync with functions/text.py

@@ -14,10 +14,42 @@ import json
 import re
 from collections.abc import Callable
 from pathlib import Path
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 Query = Callable[[SparkSession, str], DataFrame]
+
+
+def registrar():
+    """One plan module's `(QUERIES, ORACLES, register)`: `@register(name,
+    sql)` adds the query and, when SQL-expressible, its DuckDB oracle."""
+    queries: dict[str, Query] = {}
+    oracles: dict[str, str] = {}
+
+    def register(name: str, sql: str | None = None):
+        def deco(fn: Query) -> Query:
+            queries[name] = fn
+            if sql is not None:
+                oracles[name] = sql
+            return fn
+
+        return deco
+
+    return queries, oracles, register
+
+
+class EventsRule(NamedTuple):
+    """One mergeable events rule, shared by a batch query and its
+    streaming twin. `cols(t)` projects `events` in terms of the
+    epoch-second column `t` (`sources.tables.event_seconds`);
+    `reduce(frame)` maps a frame of those columns to associative
+    partials. The batch query reduces `events_projection(.., cols)` once;
+    the twin reduces each replayed micro-batch of the same projection
+    (`streaming_queries._replay_events`) and merges the partials."""
+
+    cols: Callable[[Column], list]
+    reduce: Callable[[DataFrame], DataFrame]
 
 
 def _modules():
@@ -91,6 +123,9 @@ _REWRITTEN: dict[str, int] = {
     # twins moved onto the shared replay_foreach_batch lifecycle
     "s23": 13, "s27": 13, "s34": 13, "s35": 13, "s36": 13, "s40": 13,
     "s41": 13, "s45": 13,
+    # batch rows whose query now runs its twin's EventsRule form
+    "m59": 13, "m60": 13, "m61": 13, "m64": 13, "m65": 13, "m66": 13,
+    "m67": 13, "m68": 13, "m71": 13, "m73": 13, "m78": 13,
 }
 
 

@@ -16,27 +16,14 @@ sides so float summation order cannot flip the value hash.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join_backward
 from ..sources.tables import load_table
+from .registry import registrar
 
-Query = Callable[[SparkSession, str], DataFrame]
-QUERIES: dict[str, Query] = {}
-ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn: Query) -> Query:
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLES, _register = registrar()
 
 
 # --------------------------------------------------------------------------

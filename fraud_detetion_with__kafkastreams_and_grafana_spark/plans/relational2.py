@@ -10,26 +10,13 @@ error envelope, and the oracle asserts those booleans as literal TRUE.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
+from .registry import registrar
 
-Query = Callable[[SparkSession, str], DataFrame]
-QUERIES: dict[str, Query] = {}
-ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn: Query) -> Query:
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLES, _register = registrar()
 
 
 @_register(

@@ -10,29 +10,16 @@ compares plain types on both sides.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.multimodal import PNG_ORACLE_SQL as _PNG_ORACLE_SQL
 from ..operators.prefix import segmented_running_sum
 from ..sessioncache import session_tmp_dir
-from ..sources.tables import load_table
+from ..sources.tables import event_seconds, events_projection, load_table
+from .registry import EventsRule, registrar
 
-Query = Callable[[SparkSession, str], DataFrame]
-QUERIES: dict[str, Query] = {}
-ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn: Query) -> Query:
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLES, _register = registrar()
 
 
 @_register(
@@ -1970,7 +1957,7 @@ def r82_cep_card_testing(spark: SparkSession, sf_dir: str) -> DataFrame:
     would move to the s24 stateful form, which is the same walk with
     state. The streaming twin s24 shares this oracle row-for-row."""
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     w = Window.partitionBy("user_id").orderBy(
         F.date_trunc("second", F.col("ts")), "event_id"
     )
@@ -2056,7 +2043,7 @@ def r83_cep_kleene_probe_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     enters state — maximal munch falls out of the grouping, the reason
     this lowering beats a row-walk even at 100 TB."""
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     w = Window.partitionBy("user_id").orderBy(
         F.date_trunc("second", F.col("ts")), "event_id"
     )
@@ -2140,7 +2127,7 @@ def r84_zorder_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     Z-value feeds repartitionByRange(z) before the parquet write; this
     query IS the stats check you run to verify the layout landed."""
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     base = ev.select(
         (F.col("user_id") % 256).cast("long").alias("a"),
         F.pmod(F.floor(t / F.lit(3600)), F.lit(256)).cast("long").alias("b"),
@@ -2363,7 +2350,7 @@ def _r86_activity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     base = ev.select("user_id", t.alias("t"))
     origin = base.agg(F.min("t").alias("origin"))
     wk = (
@@ -2496,7 +2483,7 @@ def r87_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     w = Window.partitionBy("user_id")
     b = ev.select("user_id", t.alias("t"), "event_type")
     w1 = b.withColumn(
@@ -2561,9 +2548,7 @@ def _r88_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries inline from ONE corpus scan (vs a union's two), collapsed
     by a map-side-combined hash aggregate."""
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(
-        F.date_trunc("second", F.col("ts")).cast("timestamp")
-    ).cast("long")
+    t = event_seconds().cast("long")
     return (
         ev.select(
             F.explode(
@@ -3242,7 +3227,7 @@ def r92_bitemporal_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     form (no reference equivalent; public bitemporal-modeling
     methodology)."""
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     base = ev.select(
         "user_id", "event_id", t.alias("t"), F.col("event_type").alias("et")
     )
@@ -3616,7 +3601,7 @@ def r95_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     detection sequence (TransactionProcessor.java pipeline) to the
     discovery form; no reference equivalent."""
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     base = ev.select(
         "user_id", "event_id", F.col("event_type").alias("et"), t.alias("t")
     )
@@ -3735,7 +3720,7 @@ def r96_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: no reference equivalent; public association-rule
     methodology."""
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     base = ev.select(
         "user_id", "event_id", F.col("event_type").alias("et"), t.alias("t")
     )
@@ -4018,9 +4003,7 @@ def r99_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the data-learned generalization of the
     reference's hand-written event pipeline; no reference equivalent."""
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(
-        F.date_trunc("second", F.col("ts")).cast("timestamp")
-    )
+    t = event_seconds()
     base = ev.select(
         "user_id",
         "event_id",
@@ -4236,9 +4219,7 @@ def r101_time_weighted_average(
     mean tiles (Q2/Q5) for irregular arrival; no reference
     equivalent."""
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(
-        F.date_trunc("second", F.col("ts")).cast("timestamp")
-    )
+    t = event_seconds()
     base = ev.select(
         "user_id",
         "event_id",
@@ -4420,6 +4401,19 @@ _R103_SQL = f"""
 """
 
 
+def day_cents(t: Column) -> list[Column]:
+    """(d, cents): each event's epoch day and its value in cents."""
+    return [
+        (t / 86400).cast("long").alias("d"),
+        F.round(F.col("value") * 100).cast("long").alias("cents"),
+    ]
+
+
+R103 = EventsRule(
+    day_cents, lambda e: e.groupBy("d", "cents").agg(F.count("*").alias("c"))
+)
+
+
 @_register("r103_sliding_median", _R103_SQL)
 def r103_sliding_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact trailing-7-day sliding MEDIAN of transaction value per day
@@ -4437,16 +4431,9 @@ def r103_sliding_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: the robust version of the reference dashboard's
     windowed mean (Q4); no reference equivalent."""
-    ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(
-        F.date_trunc("second", F.col("ts")).cast("timestamp")
+    return sliding_median_from_hist(
+        R103.reduce(events_projection(spark, sf_dir, R103.cols))
     )
-    base = ev.select(
-        (t / 86400).cast("long").alias("d"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    hist = base.groupBy("d", "cents").agg(F.count("*").alias("c"))
-    return sliding_median_from_hist(hist)
 
 
 def sliding_median_from_hist(hist: DataFrame) -> DataFrame:
@@ -4560,6 +4547,14 @@ _R104_SQL = f"""
 """
 
 
+R104 = EventsRule(
+    lambda t: ["user_id", *day_cents(t)],
+    lambda e: e.groupBy("user_id", "d").agg(
+        F.sum("cents").alias("day_cents"), F.count("*").alias("n")
+    ),
+)
+
+
 @_register("r104_decayed_leaderboard", _R104_SQL)
 def r104_decayed_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially time-decayed top-10 spender leaderboard (half-life
@@ -4579,20 +4574,9 @@ def r104_decayed_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: generalizes Q1 (dashboards.json top-10) with the
     decay every production leaderboard actually wants; no reference
     equivalent."""
-    ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(
-        F.date_trunc("second", F.col("ts")).cast("timestamp")
-    )
-    base = ev.select(
-        "user_id",
-        (t / 86400).cast("long").alias("d"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
+    base = events_projection(spark, sf_dir, R104.cols)
     base = base.localCheckpoint()  # feeds daily AND the max-day bound
-    daily = base.groupBy("user_id", "d").agg(
-        F.sum("cents").alias("day_cents"), F.count("*").alias("n")
-    )
-    return decayed_leaderboard_from_daily(daily)
+    return decayed_leaderboard_from_daily(R104.reduce(base))
 
 
 def decayed_leaderboard_from_daily(daily: DataFrame) -> DataFrame:
@@ -4835,7 +4819,7 @@ def r106_velocity_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: extends the amount-threshold branch
     (TransactionProcessor.java:37) to the time dimension."""
     ev = load_table(spark, sf_dir, "events")
-    s = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    s = event_seconds()
     e = ev.select("user_id", s.alias("s"))
     w = (
         Window.partitionBy("user_id")
@@ -4893,7 +4877,7 @@ def r107_duplicate_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     same fraud-alerts topic (FraudAlertConsumer.java:57-76); public
     rule, no reference implementation."""
     ev = load_table(spark, sf_dir, "events")
-    s = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    s = event_seconds()
     e = ev.select(
         "user_id",
         F.round("value").cast("long").alias("v"),
@@ -4954,7 +4938,7 @@ def r108_structuring(spark: SparkSession, sf_dir: str) -> DataFrame:
     (TransactionProcessor.java:37) — amounts engineered to stay UNDER
     the alert line; public AML rule."""
     ev = load_table(spark, sf_dir, "events")
-    s = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    s = event_seconds()
     e = ev.where(
         (F.col("value") >= _R108_LO) & (F.col("value") < _R108_HI)
     ).select(
@@ -5020,7 +5004,7 @@ def r109_dormancy_reactivation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: public rule; would feed the reference's
     fraud-alerts topic like R6 does."""
     ev = load_table(spark, sf_dir, "events")
-    s = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    s = event_seconds()
     e = ev.select("user_id", s.alias("s"))
     wl = Window.partitionBy("user_id").orderBy("s")
     wf = (
@@ -5285,7 +5269,7 @@ def r113_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     behavioral cousin of the reference's per-user keying
     (TransactionProducer.java:30)."""
     ev = load_table(spark, sf_dir, "events")
-    s = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    s = event_seconds()
     d = ev.select("user_id", (s / 86400).cast("long").alias("d")).distinct()
     w = Window.partitionBy("user_id").orderBy("d")
     g = d.select("user_id", "d", (F.col("d") - F.row_number().over(w)).alias("grp"))
@@ -5529,7 +5513,7 @@ def r116_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: none in reference; public attribution
     methodology (last-touch)."""
     ev = load_table(spark, sf_dir, "events")
-    s = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    s = event_seconds()
     e = ev.where(
         F.col("event_type").isin(*_R116_TOUCH, "purchase")
     ).select(
@@ -5781,6 +5765,12 @@ _R118_SQL = f"""
 """
 
 
+R118 = EventsRule(
+    lambda t: ["user_id", (t / 60).cast("long").alias("minute")],
+    lambda e: e.select("user_id", "minute").distinct(),
+)
+
+
 @_register("r118_cooccurrence_rings", _R118_SQL)
 def r118_cooccurrence_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collusion-ring candidates: user pairs repeatedly active in the
@@ -5800,12 +5790,9 @@ def r118_cooccurrence_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: none in reference; public AML/collusion
     methodology."""
-    ev = load_table(spark, sf_dir, "events")
-    s = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
-    m = ev.select(
-        "user_id", (s / 60).cast("long").alias("minute")
-    )
-    return rings_from_user_minutes(m)
+    # The batch tail takes the raw presence rows; R118.reduce is the
+    # twin's per-batch set partial.
+    return rings_from_user_minutes(events_projection(spark, sf_dir, R118.cols))
 
 
 _R120_SQL = """
@@ -5843,7 +5830,7 @@ def r120_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the smoothed version of the reference's Grafana
     revenue graph (README.md:342-356); public methodology."""
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     daily = (
         ev.select(
             (t / 86400).cast("long").alias("d"),
@@ -6050,7 +6037,7 @@ def r122_topk_with_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the WITH TIES form of the reference's top-N
     panels (README.md:342-356, top10scammers.jpg)."""
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     d = (
         ev.select(
             "user_id",
@@ -6130,9 +6117,7 @@ def r123_clamped_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     mv = ev.where(F.col("event_type").isin("purchase", "error")).select(
         "user_id",
         "event_id",
-        F.unix_timestamp(
-            F.date_trunc("second", F.col("ts")).cast("timestamp")
-        ).alias("es"),
+        event_seconds().alias("es"),
         F.when(F.col("event_type") == "purchase", cents)
         .otherwise(-cents)
         .alias("x"),
@@ -6226,9 +6211,7 @@ def r124_markov_sequence_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring methodology."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(
-        F.unix_timestamp(
-            F.date_trunc("second", F.col("ts")).cast("timestamp")
-        ),
+        event_seconds(),
         "event_id",
     )
     seq = ev.select(
@@ -6323,9 +6306,7 @@ def r125_fifo_event_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: none in reference; public double-entry
     reconciliation pattern."""
     ev = load_table(spark, sf_dir, "events")
-    es = F.unix_timestamp(
-        F.date_trunc("second", F.col("ts")).cast("timestamp")
-    )
+    es = event_seconds()
 
     def leg(kind: str) -> DataFrame:
         w = Window.partitionBy("user_id").orderBy("t", "event_id")
@@ -6407,9 +6388,7 @@ def r126_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     mv = ev.where(F.col("event_type").isin("purchase", "error")).select(
         "user_id",
         "event_id",
-        F.unix_timestamp(
-            F.date_trunc("second", F.col("ts")).cast("timestamp")
-        ).alias("es"),
+        event_seconds().alias("es"),
         F.when(F.col("event_type") == "purchase", cents)
         .otherwise(-cents)
         .alias("x"),
@@ -6484,7 +6463,7 @@ def r127_fd_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     methodology (TANE-style violation counting, Huhtala et al. 1999).
     """
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     day = (t / 86400).cast("long")
     cols = ev.select(
         F.col("event_id").cast("string").alias("event_id_s"),
@@ -6566,6 +6545,15 @@ _R128_SQL = """
 """
 
 
+R128 = EventsRule(
+    lambda t: [
+        F.col("event_type").alias("g"),
+        F.round(F.col("value") * 100).cast("long").alias("cents"),
+    ],
+    lambda e: e.groupBy("g", "cents").agg(F.count("*").cast("long").alias("c")),
+)
+
+
 @_register("r128_winsorized_stats", _R128_SQL)
 def r128_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winsorized per-type amount statistics — the outlier-robust mean
@@ -6584,13 +6572,9 @@ def r128_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: none in reference; public robust statistics
     (Winsor / Tukey); the robust twin of q2's global tiles."""
-    ev = load_table(spark, sf_dir, "events")
-    e = ev.select(
-        F.col("event_type").alias("g"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+    return winsorized_from_hist(
+        R128.reduce(events_projection(spark, sf_dir, R128.cols))
     )
-    h = e.groupBy("g", "cents").agg(F.count("*").cast("long").alias("c"))
-    return winsorized_from_hist(h)
 
 
 def winsorized_from_hist(h: DataFrame) -> DataFrame:
@@ -6708,7 +6692,7 @@ def r129_khop_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: none in reference; public algorithm (Bellman
     1958) on the reference's user graph."""
     ev = load_table(spark, sf_dir, "events")
-    s = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    s = event_seconds()
     m = ev.select(
         "user_id", (s / 60).cast("long").alias("minute")
     ).distinct()
@@ -6847,6 +6831,12 @@ _R131_SQL = """
 """
 
 
+R131 = EventsRule(
+    lambda t: ["user_id", (t / 86400).cast("long").alias("d")],
+    lambda e: e.select("user_id", "d").distinct(),
+)
+
+
 @_register("r131_reach_curve", _R131_SQL)
 def r131_reach_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily audience decomposition + cumulative reach curve: per day
@@ -6865,10 +6855,9 @@ def r131_reach_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: the audience view of the reference's dashboard
     (BASELINE.md panels); public growth-accounting methodology."""
-    ev = load_table(spark, sf_dir, "events")
-    s = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
-    ud = ev.select("user_id", (s / 86400).cast("long").alias("d")).distinct()
-    return reach_from_user_days(ud)
+    return reach_from_user_days(
+        R131.reduce(events_projection(spark, sf_dir, R131.cols))
+    )
 
 
 def reach_from_user_days(ud: DataFrame) -> DataFrame:
@@ -7078,7 +7067,7 @@ def r134_sequential_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     methodology (Agrawal & Srikant 1995) on the reference's journey
     data."""
     ev = load_table(spark, sf_dir, "events")
-    sec = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    sec = event_seconds()
     e = ev.select("user_id", F.col("event_type").alias("t"), sec.alias("s"))
     e = e.localCheckpoint()  # feeds the pair join AND both supports
     a = e.select("user_id", F.col("t").alias("ante"), F.col("s").alias("sa"))
@@ -7172,7 +7161,7 @@ def r135_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.asof import asof_join_forward
 
     ev = load_table(spark, sf_dir, "events")
-    sec = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    sec = event_seconds()
     e = ev.select(
         "user_id",
         "event_id",

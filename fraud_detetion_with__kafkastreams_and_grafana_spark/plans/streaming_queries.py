@@ -21,15 +21,25 @@ cached per session by the projection expression, so twins reading the
 same projection share one dir (s26/s31/s37/s44 share the scoring
 wire). Non-events or filtered wires come from `materialize_wire_dir`
 directly. `_partial_replay` replays the dir as 2 micro-batches, parses
-each with the twin's DDL, drops rows whose FIRST schema field is null,
+each with the twin's schema, drops rows whose FIRST schema field is null,
 reduces the batch with the twin's `reduce_fn` to bounded associative
 partials and lands them as one file per batch through
 `replay_foreach_batch` (streaming/replay.py), the one foreachBatch
 lifecycle: each batch overwrites its own `_batch_id` partition
 (dynamic overwrite, idempotent), and the landed frame feeds the batch
-query's shared tail. Twins whose per-batch work does not fit that
-parse/filter/coalesce contract pass their own per-batch function to
-`replay_foreach_batch`:
+query's shared tail.
+
+Twins of a mergeable events rule (s48, s49, s59-s62, s64-s78, s82,
+s84, s86, s87) write no query of their own. Their batch query's
+`EventsRule(cols, reduce)` (plans/registry.py, defined beside the tail
+in advanced.py / relational3.py) is the one definition: the batch
+query runs `tail(rule.reduce(events_projection(.., rule.cols)))`; the
+twin runs `tail(_replay_events(.., rule, prefix))`, which replays the
+`rule.cols` wire, parses it with the projection's own schema and
+reduces each micro-batch with the same `rule.reduce`.
+
+Twins whose per-batch work does not fit the parse/filter/coalesce
+contract pass their own per-batch function to `replay_foreach_batch`:
   s23, s27, s36: request-atomic services probing static index tables;
        each batch lands one answer per request, which no key domain
        bounds, so a one-file-per-batch write is not safe for them.
@@ -61,7 +71,7 @@ from pyspark.sql import functions as F
 
 from ..operators.detect import EVENTS_FRAUD_THRESHOLD, events_as_transactions
 from ..sessioncache import session_cached
-from ..sources.tables import load_table
+from ..sources.tables import event_seconds, events_projection, load_table
 from ..streaming.replay import (
     materialize_ordered_wire_dir,
     materialize_wire_dir,
@@ -73,27 +83,16 @@ from ..streaming.topology import fraud_topology
 from .advanced import ORACLES as _AD
 from .analytics import Q4_SQL, Q6_SQL
 from .llmops import _PCA_RAW_SQL, ORACLES as _LL
+from .registry import registrar
 from .relational3 import ORACLES as _R3
 from .timeseries import ORACLES as _TS
 
-Query = Callable[[SparkSession, str], DataFrame]
-QUERIES: dict[str, Query] = {}
-ORACLES: dict[str, str] = {}
+QUERIES, ORACLES, _register = registrar()
 
 _FRAUD_SQL = (
     "SELECT printf('user_%03d', user_id) AS userId, value AS amount, "
     "date_trunc('second', ts) AS event_time FROM events WHERE value > 100.0"
 )
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn: Query) -> Query:
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
 
 
 def _events_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -166,9 +165,7 @@ def _events_proj_wire(spark: SparkSession, sf_dir: str, cols) -> str:
     render of the resolved expression tree, so identical projections
     key identically and different ones never collide."""
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(
-        F.date_trunc("second", F.col("ts")).cast("timestamp")
-    )
+    t = event_seconds()
     struct = F.struct(*cols(t))
     return _session_wire(
         spark,
@@ -200,6 +197,14 @@ def _partial_replay(spark, wire_dir, schema, reduce_fn, prefix):
     return replay_foreach_batch(spark, wire_dir, land, prefix, 4).drop(
         "_batch_id"
     )
+
+
+def _replay_events(spark, sf_dir, rule, prefix):
+    """Replay `rule`'s events projection through `_partial_replay` with
+    its `reduce`, parsing the wire with the projection's own schema."""
+    schema = events_projection(spark, sf_dir, rule.cols).schema
+    wire = _events_proj_wire(spark, sf_dir, rule.cols)
+    return _partial_replay(spark, wire, schema, rule.reduce, prefix)
 
 
 @_register(
@@ -1718,9 +1723,7 @@ def _cep_wire_dir(spark: SparkSession, sf_dir: str) -> str:
 
     def build() -> str:
         ev = load_table(spark, sf_dir, "events")
-        t = F.unix_timestamp(
-            F.date_trunc("second", F.col("ts")).cast("timestamp")
-        )
+        t = event_seconds()
         wire_ts = ev.select(
             F.to_json(
                 F.struct(
@@ -1977,7 +1980,7 @@ def s28_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     split_s = m17_split_seconds(spark, sf_dir)
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     ref = (
         m17_bucket_counts(ev.where(t < F.lit(split_s)), split_s)
         .select("event_type", "bucket", "ref_n")
@@ -2021,9 +2024,7 @@ def _funnel_wire_dir(spark: SparkSession, sf_dir: str) -> str:
 
     def build() -> str:
         ev = load_table(spark, sf_dir, "events")
-        t = F.unix_timestamp(
-            F.date_trunc("second", F.col("ts")).cast("timestamp")
-        )
+        t = event_seconds()
         wire_ts = ev.select(
             F.to_json(
                 F.struct(
@@ -2197,7 +2198,7 @@ def s33_stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     split_s = m17_split_seconds(spark, sf_dir)
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     cent = F.round(F.col("value") * 100).cast("long").alias("cent")
     ref = (
         ev.where(t < F.lit(split_s))
@@ -2927,9 +2928,7 @@ def s45_stream_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def wire() -> str:
         ev = load_table(spark, sf_dir, "events")
-        t = F.unix_timestamp(
-            F.date_trunc("second", F.col("ts")).cast("timestamp")
-        )
+        t = event_seconds()
         wire_ts = ev.select(
             F.to_json(
                 F.struct(
@@ -3160,24 +3159,10 @@ def s48_stream_sliding_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: zero streaming state; the sink grows by each batch's
     distinct (day, value) rows; the report costs the bounded merged
     histogram."""
-    from .relational3 import sliding_median_from_hist
+    from .relational3 import R103, sliding_median_from_hist
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            (t / 86400).cast("long").alias("d"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        ],
-    )
     merged = (
-        _partial_replay(
-            spark,
-            d,
-            "d LONG, cents LONG",
-            lambda b: b.groupBy("d", "cents").agg(F.count("*").alias("c")),
-            "s48",
-        )
+        _replay_events(spark, sf_dir, R103, "s48")
         .groupBy("d", "cents")
         .agg(F.sum("c").alias("c"))
     )
@@ -3203,28 +3188,10 @@ def s49_stream_decayed_leaderboard(
 
     Scale: zero streaming state; sink grows by each batch's distinct
     (user, day) rows; the re-rank costs the bounded daily frame."""
-    from .relational3 import decayed_leaderboard_from_daily
+    from .relational3 import R104, decayed_leaderboard_from_daily
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            "user_id",
-            (t / 86400).cast("long").alias("d"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        ],
-    )
     merged = (
-        _partial_replay(
-            spark,
-            d,
-            "user_id LONG, d LONG, cents LONG",
-            lambda b: b.groupBy("user_id", "d").agg(
-                F.sum("cents").alias("day_cents"),
-                F.count("*").alias("n"),
-            ),
-            "s49",
-        )
+        _replay_events(spark, sf_dir, R104, "s49")
         .groupBy("user_id", "d")
         .agg(
             F.sum("day_cents").alias("day_cents"),
@@ -3652,21 +3619,9 @@ def s59_stream_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: partial volume <= batch's active pairs; the refresh cost
     is the bounded presence frame's bucket join (r118's analysis),
     never the raw stream."""
-    from .relational3 import rings_from_user_minutes
+    from .relational3 import R118, rings_from_user_minutes
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: ["user_id", (t / 60).cast("long").alias("minute")],
-    )
-    merged = _partial_replay(
-        spark,
-        d,
-        "user_id LONG, minute LONG",
-        lambda b: b.select("user_id", "minute").distinct(),
-        "s59",
-    )
-    return rings_from_user_minutes(merged)
+    return rings_from_user_minutes(_replay_events(spark, sf_dir, R118, "s59"))
 
 
 @_register("s60_stream_gtest", _AD["m54_gtest_llr"])
@@ -3678,28 +3633,9 @@ def s60_stream_gtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tail. Equal to batch m54, sharing its oracle verbatim.
 
     Scale: cell-domain partials; zero streaming state."""
-    from .advanced import gtest_from_cells
+    from .advanced import M54, gtest_from_cells
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            (((t / 86400).cast("long") + 3) % 7 + 1)
-            .cast("int")
-            .alias("isodow"),
-            "event_type",
-        ],
-    )
-    merged = _partial_replay(
-        spark,
-        d,
-        "isodow INT, event_type STRING",
-        lambda b: b.groupBy("isodow", "event_type").agg(
-            F.count("*").alias("obs")
-        ),
-        "s60",
-    )
-    return gtest_from_cells(merged)
+    return gtest_from_cells(_replay_events(spark, sf_dir, M54, "s60"))
 
 
 @_register("s61_stream_moments", _AD["m53_higher_moments"])
@@ -3714,32 +3650,9 @@ def s61_stream_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift within one batch.
 
     Scale: 5 partial rows per batch per type; zero streaming state."""
-    from .advanced import moments_from_power_sums
+    from .advanced import M53, moments_from_power_sums
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            "event_type",
-            F.round("value").cast("long").alias("u"),
-        ],
-    )
-    merged = _partial_replay(
-        spark,
-        d,
-        "event_type STRING, u LONG",
-        lambda b: b.groupBy("event_type").agg(
-            F.count("*").alias("n"),
-            F.sum("u").alias("s1"),
-            F.sum(F.col("u") * F.col("u")).alias("s2"),
-            F.sum(F.col("u") * F.col("u") * F.col("u")).alias("s3"),
-            F.sum(F.col("u") * F.col("u") * F.col("u") * F.col("u")).alias(
-                "s4"
-            ),
-        ),
-        "s61",
-    )
-    return moments_from_power_sums(merged)
+    return moments_from_power_sums(_replay_events(spark, sf_dir, M53, "s61"))
 
 
 @_register("s62_stream_seasonal_outliers", _AD["m56_seasonal_adjusted_outliers"])
@@ -3755,24 +3668,11 @@ def s62_stream_seasonal_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: |days| partial rows per batch; the tail runs on
     day-bounded frames."""
-    from .advanced import seasonal_outliers_from_daily
+    from .advanced import DAILY_CENTS, seasonal_outliers_from_daily
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            (t / 86400).cast("long").alias("d"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        ],
+    return seasonal_outliers_from_daily(
+        _replay_events(spark, sf_dir, DAILY_CENTS, "s62")
     )
-    merged = _partial_replay(
-        spark,
-        d,
-        "d LONG, cents LONG",
-        lambda b: b.groupBy("d").agg(F.sum("cents").alias("x")),
-        "s62",
-    )
-    return seasonal_outliers_from_daily(merged)
 
 
 # Raw-double variant of l102's oracle: the partials twin merges in
@@ -3865,26 +3765,9 @@ def s64_stream_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: partials are bounded by distinct (type, cents) pairs per
     batch, not rows; no streaming state, no corpus re-scan."""
-    from .advanced import kruskal_from_cells
+    from .advanced import M58, kruskal_from_cells
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            F.col("event_type").alias("g"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        ],
-    )
-    merged = _partial_replay(
-        spark,
-        d,
-        "g STRING, cents LONG",
-        lambda b: b.groupBy("g", "cents").agg(
-            F.count("*").cast("long").alias("cg")
-        ),
-        "s64",
-    )
-    return kruskal_from_cells(merged)
+    return kruskal_from_cells(_replay_events(spark, sf_dir, M58, "s64"))
 
 
 @_register("s65_stream_mutual_information", _AD["m60_mutual_information"])
@@ -3900,24 +3783,11 @@ def s65_stream_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale: <= |types| x 7 partial rows per batch regardless of batch
     size; the tail runs on that bounded cell frame."""
-    from .advanced import mutual_info_from_cells
+    from .advanced import TYPE_WEEKDAY_CELLS, mutual_info_from_cells
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            F.col("event_type").alias("x"),
-            (F.expr("weekday(ts)") + 1).cast("int").alias("y"),
-        ],
+    return mutual_info_from_cells(
+        _replay_events(spark, sf_dir, TYPE_WEEKDAY_CELLS, "s65")
     )
-    merged = _partial_replay(
-        spark,
-        d,
-        "x STRING, y INT",
-        lambda b: b.groupBy("x", "y").agg(F.count("*").cast("long").alias("c")),
-        "s65",
-    )
-    return mutual_info_from_cells(merged)
 
 
 @_register("s66_stream_wilcoxon", _AD["m59_wilcoxon_signed_rank"])
@@ -3934,36 +3804,9 @@ def s66_stream_wilcoxon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: <= |active users| partial rows per batch; ranking happens
     on the diff-domain histogram, never a per-user sort."""
-    from .advanced import wilcoxon_from_pairs
+    from .advanced import M59, wilcoxon_from_pairs
 
-    wkend = (F.expr("weekday(ts)") + 1) >= 6
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            "user_id",
-            "event_type",
-            wkend.cast("int").alias("wk_flag"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        ],
-    )
-    merged = _partial_replay(
-        spark,
-        d,
-        "user_id LONG, event_type STRING, wk_flag INT, cents LONG",
-        lambda b: b.where(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(
-            F.sum(F.when(F.col("wk_flag") == 1, F.col("cents")).otherwise(F.lit(0)))
-            .cast("long")
-            .alias("wk"),
-            F.sum(F.when(F.col("wk_flag") == 0, F.col("cents")).otherwise(F.lit(0)))
-            .cast("long")
-            .alias("wd"),
-        ),
-        "s66",
-    )
-    return wilcoxon_from_pairs(merged)
+    return wilcoxon_from_pairs(_replay_events(spark, sf_dir, M59, "s66"))
 
 
 @_register("s67_stream_jensen_shannon", _AD["m61_jensen_shannon"])
@@ -3979,28 +3822,9 @@ def s67_stream_jensen_shannon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: <= |types| partial rows per batch; the tail is
     category-domain bounded."""
-    from .advanced import jsd_from_cells
+    from .advanced import WEEKPART_MIX, jsd_from_cells
 
-    wkend = (F.expr("weekday(ts)") + 1) >= 6
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            F.col("event_type").alias("g"),
-            wkend.cast("int").alias("wk_flag"),
-        ],
-    )
-    merged = _partial_replay(
-        spark,
-        d,
-        "g STRING, wk_flag INT",
-        lambda b: b.groupBy("g").agg(
-            F.sum((F.col("wk_flag") == 0).cast("long")).cast("long").alias("cwd"),
-            F.sum((F.col("wk_flag") == 1).cast("long")).cast("long").alias("cwk"),
-        ),
-        "s67",
-    )
-    return jsd_from_cells(merged)
+    return jsd_from_cells(_replay_events(spark, sf_dir, WEEKPART_MIX, "s67"))
 
 
 @_register("s68_stream_emd", _AD["m64_wasserstein_emd"])
@@ -4017,31 +3841,9 @@ def s68_stream_emd(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: partials bounded by distinct amounts per batch; the
     cumulative walk runs on the merged value-domain histogram at
     refresh, never on rows."""
-    from .advanced import emd_from_cells
+    from .advanced import WEEKPART_PURCHASE_HIST, emd_from_cells
 
-    wkend = (F.expr("weekday(ts)") + 1) >= 6
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            "event_type",
-            wkend.cast("int").alias("wk_flag"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        ],
-    )
-    merged = _partial_replay(
-        spark,
-        d,
-        "event_type STRING, wk_flag INT, cents LONG",
-        lambda b: b.where(F.col("event_type") == "purchase")
-        .groupBy("cents")
-        .agg(
-            F.sum((F.col("wk_flag") == 1).cast("long")).cast("long").alias("c1"),
-            F.sum((F.col("wk_flag") == 0).cast("long")).cast("long").alias("c2"),
-        ),
-        "s68",
-    )
-    return emd_from_cells(merged)
+    return emd_from_cells(_replay_events(spark, sf_dir, WEEKPART_PURCHASE_HIST, "s68"))
 
 
 @_register("s69_stream_hellinger", _AD["m65_hellinger_bhattacharyya"])
@@ -4056,28 +3858,9 @@ def s69_stream_hellinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     property JSD-as-divergence doesn't give the monitoring layer.
 
     Scale: <= |types| partial rows per batch; category-domain tail."""
-    from .advanced import hellinger_from_cells
+    from .advanced import WEEKPART_MIX, hellinger_from_cells
 
-    wkend = (F.expr("weekday(ts)") + 1) >= 6
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            F.col("event_type").alias("g"),
-            wkend.cast("int").alias("wk_flag"),
-        ],
-    )
-    merged = _partial_replay(
-        spark,
-        d,
-        "g STRING, wk_flag INT",
-        lambda b: b.groupBy("g").agg(
-            F.sum((F.col("wk_flag") == 0).cast("long")).cast("long").alias("cwd"),
-            F.sum((F.col("wk_flag") == 1).cast("long")).cast("long").alias("cwk"),
-        ),
-        "s69",
-    )
-    return hellinger_from_cells(merged)
+    return hellinger_from_cells(_replay_events(spark, sf_dir, WEEKPART_MIX, "s69"))
 
 
 @_register("s70_stream_chisq_gof", _AD["m68_chisq_gof_hourly"])
@@ -4091,26 +3874,9 @@ def s70_stream_chisq_gof(spark: SparkSession, sf_dir: str) -> DataFrame:
     the arriving batch, before r112's entropy profile would re-run.
 
     Scale: bounded cell partials, zero streaming state."""
-    from .advanced import chisq_gof_from_cells
+    from .advanced import M68, chisq_gof_from_cells
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            F.col("event_type").alias("g"),
-            F.hour("ts").cast("int").alias("hr"),
-        ],
-    )
-    merged = _partial_replay(
-        spark,
-        d,
-        "g STRING, hr INT",
-        lambda b: b.groupBy("g", "hr").agg(
-            F.count("*").cast("long").alias("o")
-        ),
-        "s70",
-    )
-    return chisq_gof_from_cells(merged)
+    return chisq_gof_from_cells(_replay_events(spark, sf_dir, M68, "s70"))
 
 
 @_register("s71_stream_hhi", _AD["m66_hhi_concentration"])
@@ -4128,27 +3894,9 @@ def s71_stream_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: partials bounded by active (type, user) pairs per batch;
     the refresh tail runs on the merged per-user frame, one keyed
     shuffle."""
-    from .advanced import hhi_from_user_totals
+    from .advanced import M66, hhi_from_user_totals
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            F.col("event_type").alias("g"),
-            "user_id",
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        ],
-    )
-    merged = _partial_replay(
-        spark,
-        d,
-        "g STRING, user_id LONG, cents LONG",
-        lambda b: b.groupBy("g", "user_id").agg(
-            F.sum("cents").cast("long").alias("cents")
-        ),
-        "s71",
-    )
-    return hhi_from_user_totals(merged)
+    return hhi_from_user_totals(_replay_events(spark, sf_dir, M66, "s71"))
 
 
 @_register("s72_stream_theil", _AD["m67_theil_inequality"])
@@ -4164,27 +3912,9 @@ def s72_stream_theil(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: <= |active purchasers| partial rows per batch; the tail's
     log grid runs on the value-domain histogram of totals."""
-    from .advanced import theil_from_user_totals
+    from .advanced import M67, theil_from_user_totals
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            "user_id",
-            "event_type",
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        ],
-    )
-    merged = _partial_replay(
-        spark,
-        d,
-        "user_id LONG, event_type STRING, cents LONG",
-        lambda b: b.where(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(F.sum("cents").cast("long").alias("x")),
-        "s72",
-    )
-    return theil_from_user_totals(merged)
+    return theil_from_user_totals(_replay_events(spark, sf_dir, M67, "s72"))
 
 
 @_register("s73_stream_winsorized", _R3["r128_winsorized_stats"])
@@ -4199,26 +3929,9 @@ def s73_stream_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: partials bounded by distinct (type, cents) per batch; the
     tail runs per-type on the value-domain histogram."""
-    from .relational3 import winsorized_from_hist
+    from .relational3 import R128, winsorized_from_hist
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            F.col("event_type").alias("g"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        ],
-    )
-    merged = _partial_replay(
-        spark,
-        d,
-        "g STRING, cents LONG",
-        lambda b: b.groupBy("g", "cents").agg(
-            F.count("*").cast("long").alias("c")
-        ),
-        "s73",
-    )
-    return winsorized_from_hist(merged)
+    return winsorized_from_hist(_replay_events(spark, sf_dir, R128, "s73"))
 
 
 @_register("s74_stream_cramers_v", _AD["m71_cramers_v"])
@@ -4232,24 +3945,9 @@ def s74_stream_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     chi-square-family effect size off the SAME streaming partials.
 
     Scale: <= |types| x 7 partial rows per batch; bounded tail."""
-    from .advanced import cramers_from_cells
+    from .advanced import TYPE_WEEKDAY_CELLS, cramers_from_cells
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            F.col("event_type").alias("x"),
-            (F.expr("weekday(ts)") + 1).cast("int").alias("y"),
-        ],
-    )
-    merged = _partial_replay(
-        spark,
-        d,
-        "x STRING, y INT",
-        lambda b: b.groupBy("x", "y").agg(F.count("*").cast("long").alias("c")),
-        "s74",
-    )
-    return cramers_from_cells(merged)
+    return cramers_from_cells(_replay_events(spark, sf_dir, TYPE_WEEKDAY_CELLS, "s74"))
 
 
 @_register("s75_stream_page_hinkley", _AD["m72_page_hinkley"])
@@ -4263,24 +3961,9 @@ def s75_stream_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     Equal to batch m72, sharing its oracle verbatim.
 
     Scale: |days| partial rows per batch; day-bounded tail."""
-    from .advanced import page_hinkley_from_daily
+    from .advanced import DAILY_CENTS, page_hinkley_from_daily
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            (t / 86400).cast("long").alias("d"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        ],
-    )
-    merged = _partial_replay(
-        spark,
-        d,
-        "d LONG, cents LONG",
-        lambda b: b.groupBy("d").agg(F.sum("cents").alias("x")),
-        "s75",
-    )
-    return page_hinkley_from_daily(merged)
+    return page_hinkley_from_daily(_replay_events(spark, sf_dir, DAILY_CENTS, "s75"))
 
 
 @_register("s76_stream_durbin_watson", _AD["m69_durbin_watson"])
@@ -4295,24 +3978,9 @@ def s76_stream_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     a cycle crept in'.
 
     Scale: |days| partial rows per batch; day-bounded tail."""
-    from .advanced import durbin_watson_from_daily
+    from .advanced import DAILY_CENTS, durbin_watson_from_daily
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            (t / 86400).cast("long").alias("d"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        ],
-    )
-    merged = _partial_replay(
-        spark,
-        d,
-        "d LONG, cents LONG",
-        lambda b: b.groupBy("d").agg(F.sum("cents").alias("x")),
-        "s76",
-    )
-    return durbin_watson_from_daily(merged)
+    return durbin_watson_from_daily(_replay_events(spark, sf_dir, DAILY_CENTS, "s76"))
 
 
 @_register("s77_stream_ccf", _AD["m70_cross_correlation"])
@@ -4326,28 +3994,9 @@ def s77_stream_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
     series as a failure ramps?
 
     Scale: |days| partial rows per batch; day-bounded lag join."""
-    from .advanced import ccf_from_daily
+    from .advanced import M70, ccf_from_daily
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            (t / 86400).cast("long").alias("d"),
-            (F.col("event_type") == "purchase").cast("long").alias("isp"),
-            (F.col("event_type") == "error").cast("long").alias("ise"),
-        ],
-    )
-    merged = _partial_replay(
-        spark,
-        d,
-        "d LONG, isp LONG, ise LONG",
-        lambda b: b.groupBy("d").agg(
-            F.sum("isp").cast("long").alias("xp"),
-            F.sum("ise").cast("long").alias("xe"),
-        ),
-        "s77",
-    )
-    return ccf_from_daily(merged)
+    return ccf_from_daily(_replay_events(spark, sf_dir, M70, "s77"))
 
 
 @_register("s78_stream_anderson_darling", _AD["m78_anderson_darling"])
@@ -4361,31 +4010,11 @@ def s78_stream_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: partials bounded by distinct amounts per batch; the
     cumulative walk runs on the merged histogram at refresh."""
-    from .advanced import anderson_darling_from_cells
+    from .advanced import WEEKPART_PURCHASE_HIST, anderson_darling_from_cells
 
-    wkend = (F.expr("weekday(ts)") + 1) >= 6
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            "event_type",
-            wkend.cast("int").alias("wk_flag"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        ],
+    return anderson_darling_from_cells(
+        _replay_events(spark, sf_dir, WEEKPART_PURCHASE_HIST, "s78")
     )
-    merged = _partial_replay(
-        spark,
-        d,
-        "event_type STRING, wk_flag INT, cents LONG",
-        lambda b: b.where(F.col("event_type") == "purchase")
-        .groupBy("cents")
-        .agg(
-            F.sum((F.col("wk_flag") == 1).cast("long")).cast("long").alias("c1"),
-            F.sum((F.col("wk_flag") == 0).cast("long")).cast("long").alias("c2"),
-        ),
-        "s78",
-    )
-    return anderson_darling_from_cells(merged)
 
 
 @_register("s79_kstream_dsl", Q6_SQL)
@@ -4578,24 +4207,9 @@ def s82_stream_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle verbatim.
 
     Scale: |days| partial rows per batch; week-bounded tail."""
-    from .advanced import friedman_from_daily
+    from .advanced import DAILY_CENTS, friedman_from_daily
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            (t / 86400).cast("long").alias("d"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        ],
-    )
-    merged = _partial_replay(
-        spark,
-        d,
-        "d LONG, cents LONG",
-        lambda b: b.groupBy("d").agg(F.sum("cents").alias("x")),
-        "s82",
-    )
-    return friedman_from_daily(merged)
+    return friedman_from_daily(_replay_events(spark, sf_dir, DAILY_CENTS, "s82"))
 
 
 _S83_SQL = """
@@ -4639,7 +4253,7 @@ def s83_kstream_table_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.kstream import KStream
 
     ev = load_table(spark, sf_dir, "events")
-    sec = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    sec = event_seconds()
     base = ev.select(
         F.col("user_id").alias("key"),
         F.col("event_type").alias("value"),
@@ -4675,27 +4289,9 @@ def s84_stream_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     honest error bars per day' (s85).
 
     Scale: 7 partial rows per batch; the tail is a projection."""
-    from .advanced import trend_test_from_dow_counts
+    from .advanced import M73, trend_test_from_dow_counts
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            (F.expr("weekday(ts)") + 1).cast("long").alias("w"),
-            (F.col("event_type") == "purchase").cast("long").alias("isp"),
-        ],
-    )
-    merged = _partial_replay(
-        spark,
-        d,
-        "w LONG, isp LONG",
-        lambda b: b.groupBy("w").agg(
-            F.count("*").cast("long").alias("ni"),
-            F.sum("isp").cast("long").alias("xi"),
-        ),
-        "s84",
-    )
-    return trend_test_from_dow_counts(merged)
+    return trend_test_from_dow_counts(_replay_events(spark, sf_dir, M73, "s84"))
 
 
 @_register("s85_stream_wilson", _AD["m79_wilson_intervals"])
@@ -4742,30 +4338,9 @@ def s86_stream_grubbs(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-windowed merge in the s-family.
 
     Scale: |types| partial rows per batch; projection tail."""
-    from .advanced import grubbs_from_power_extremes
+    from .advanced import M82, grubbs_from_power_extremes
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            F.col("event_type").alias("g"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        ],
-    )
-    merged = _partial_replay(
-        spark,
-        d,
-        "g STRING, cents LONG",
-        lambda b: b.groupBy("g").agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("cents").cast("long").alias("s"),
-            F.sum(F.col("cents") * F.col("cents")).cast("long").alias("s2"),
-            F.min("cents").cast("long").alias("mn"),
-            F.max("cents").cast("long").alias("mx"),
-        ),
-        "s86",
-    )
-    return grubbs_from_power_extremes(merged)
+    return grubbs_from_power_extremes(_replay_events(spark, sf_dir, M82, "s86"))
 
 
 @_register("s87_stream_reach_curve", _R3["r131_reach_curve"])
@@ -4783,21 +4358,6 @@ def s87_stream_reach_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: partials bounded by active user-days per batch; the tail is
     one keyed shuffle + day-bounded windows."""
-    from .relational3 import reach_from_user_days
+    from .relational3 import R131, reach_from_user_days
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            "user_id",
-            (t / 86400).cast("long").alias("d"),
-        ],
-    )
-    merged = _partial_replay(
-        spark,
-        d,
-        "user_id LONG, d LONG",
-        lambda b: b.select("user_id", "d").distinct(),
-        "s87",
-    )
-    return reach_from_user_days(merged)
+    return reach_from_user_days(_replay_events(spark, sf_dir, R131, "s87"))

@@ -14,27 +14,14 @@ rounded on both sides.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sessioncache import session_tmp_dir
-from ..sources.tables import load_table
+from ..sources.tables import event_seconds, load_table
+from .registry import registrar
 
-Query = Callable[[SparkSession, str], DataFrame]
-QUERIES: dict[str, Query] = {}
-ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn: Query) -> Query:
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLES, _register = registrar()
 
 
 # ---------------------------------------------------------------------------
@@ -261,9 +248,7 @@ def r119_ohlc_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: README.md:342-356 (panel aggregations);
     public OHLC semantics."""
     ev = load_table(spark, sf_dir, "events")
-    sec = F.unix_timestamp(
-        F.date_trunc("second", F.col("ts")).cast("timestamp")
-    )
+    sec = event_seconds()
     e = ev.select(
         sec.alias("s"),
         "event_id",

@@ -1,33 +1,20 @@
-"""Explicit schemas.
+"""The reference's wire type and the star-schema table names.
 
 The reference's entire type surface is the ``Transaction`` POJO
 (reference: src/main/java/org/example/Transaction.java:5-9 — userId STRING,
 amount DOUBLE, timestamp epoch-seconds) JSON-encoded on the Kafka wire
-(TransactionProducer.java:27). We declare it as an explicit StructType and
-parse with ``from_json`` — corrupt payloads yield a null struct, matching
-the reference's drop-on-parse-error contract
-(TransactionProcessor.java:32-37).
+(TransactionProducer.java:27). It is parsed with ``from_json`` against
+``TRANSACTION_DDL`` — corrupt payloads yield a null struct, matching the
+reference's drop-on-parse-error contract (TransactionProcessor.java:32-37).
 
-The star schema mirrors the driver testdata (TESTDATA.md); schemas are
-declared here so scans can prune columns without inference.
+The star-schema tables (TESTDATA.md) carry their types in their parquet
+footers; ``sources.tables.load_table`` reads them without a declared schema.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import types as T
-
-# --- the reference's wire record -------------------------------------------
-TRANSACTION_SCHEMA = T.StructType(
-    [
-        T.StructField("userId", T.StringType(), nullable=False),
-        T.StructField("amount", T.DoubleType(), nullable=False),
-        # Reference stores epoch SECONDS as int (TransactionProducer.java:49,
-        # WritePrecision.S at FraudAlertConsumer.java:67); LongType at rest.
-        T.StructField("timestamp", T.LongType(), nullable=False),
-    ]
-)
-
-# DDL string form for from_json
+# Reference stores epoch SECONDS as int (TransactionProducer.java:49,
+# WritePrecision.S at FraudAlertConsumer.java:67); LONG at rest.
 TRANSACTION_DDL = "userId STRING, amount DOUBLE, timestamp LONG"
 
 # --- driver testdata tables -------------------------------------------------
@@ -43,32 +30,3 @@ TABLE_NAMES = [
     "documents",
     "embeddings",
 ]
-
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampNTZType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),  # JSON payload {"k": int}
-    ]
-)
-
-DOCUMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
-)
-
-EMBEDDINGS_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("label", T.IntegerType()),
-    ]
-)

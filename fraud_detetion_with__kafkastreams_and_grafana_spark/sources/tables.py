@@ -9,14 +9,12 @@ parquet/iceberg table; only the path changes.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..schemas import TABLE_NAMES
-
-
-def sf_dir_default() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_table(
@@ -36,8 +34,6 @@ def load_table(
     """
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
-        from pyspark.sql import functions as F
-
         ts_dtype = dict(df.dtypes).get("ts")
         if ts_dtype == "bigint":
             # events.ts is parquet TIMESTAMP(NANOS), which Spark reads as a
@@ -69,6 +65,18 @@ def load_table(
         elif ts_range_ns is not None:
             raise TypeError(f"events.ts has unsupported dtype {ts_dtype!r}")
     return df
+
+
+def event_seconds() -> Column:
+    """`events.ts` truncated to the second, as epoch seconds (LONG)."""
+    return F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+
+
+def events_projection(
+    spark: SparkSession, sf_dir: str, cols: Callable[[Column], list]
+) -> DataFrame:
+    """`events` projected to `cols(t)`, where `t` is `event_seconds()`."""
+    return load_table(spark, sf_dir, "events").select(*cols(event_seconds()))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -130,10 +130,10 @@ def test_m44_gini_brute(spark, sf_dir):
 def test_m45_fano_brute(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import load_table
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import event_seconds, load_table
 
     ev = load_table(spark, sf_dir, "events")
-    s = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    s = event_seconds()
     rows = ev.select("user_id", (s / 86400).cast("long").alias("d")).collect()
     import collections
     import statistics
@@ -206,10 +206,10 @@ def test_m47_weighted_median_brute(spark, sf_dir):
 def _daily_cents(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import load_table
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import event_seconds, load_table
 
     ev = load_table(spark, sf_dir, "events")
-    s = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    s = event_seconds()
     rows = ev.select(
         (s / 86400).cast("long").alias("d"),
         F.round(F.col("value") * 100).cast("long").alias("cents"),
@@ -363,10 +363,10 @@ def test_m54_gtest_brute(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import load_table
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import event_seconds, load_table
 
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     rows = ev.select(
         (t / 86400).cast("long").alias("d"), "event_type"
     ).collect()
@@ -693,10 +693,10 @@ def test_s62_daily_partials_merge_invariant(spark, sf_dir):
     from fraud_detetion_with__kafkastreams_and_grafana_spark.plans.advanced import (
         seasonal_outliers_from_daily,
     )
-    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import load_table
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import event_seconds, load_table
 
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    t = event_seconds()
     e = ev.select(
         "event_id",
         (t / 86400).cast("long").alias("d"),
@@ -1185,10 +1185,10 @@ def test_m81_cochran_q_brute(spark, sf_dir):
     ok = {w for w, c in wk_days.items() if c == 7}
     from pyspark.sql import functions as F
 
-    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import load_table
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import event_seconds, load_table
 
     ev = load_table(spark, sf_dir, "events")
-    s = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    s = event_seconds()
     rows = ev.where(F.col("event_type") == "purchase").select(
         "user_id", (s / 86400).cast("long").alias("d")
     ).collect()

@@ -234,10 +234,10 @@ def test_r89_merge_invariant_to_batching(spark, sf_dir):
 def _events_secs(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import load_table
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import event_seconds, load_table
 
     ev = load_table(spark, sf_dir, "events")
-    s = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    s = event_seconds()
     return [
         (r.user_id, r.s, r.cents)
         for r in ev.select(
@@ -340,10 +340,10 @@ def test_r115_mom_chain_consistency(spark, sf_dir):
 def test_r116_attribution_brute(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import load_table
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import event_seconds, load_table
 
     ev = load_table(spark, sf_dir, "events")
-    s = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    s = event_seconds()
     rows = ev.select(
         "user_id", "event_id", "event_type", s.alias("t")
     ).collect()
@@ -513,10 +513,10 @@ def test_velocity_partials_merge_invariant_to_batching(spark, sf_dir):
     from fraud_detetion_with__kafkastreams_and_grafana_spark.plans.relational3 import (
         velocity_from_second_counts,
     )
-    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import load_table
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import event_seconds, load_table
 
     ev = load_table(spark, sf_dir, "events")
-    s = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    s = event_seconds()
     e = ev.select("user_id", "event_id", s.alias("s"))
     parts = [
         e.where(F.col("event_id") % 3 == p)
@@ -565,10 +565,10 @@ def test_r122_ties_kept_and_rank_gaps(spark, sf_dir):
 def _events_typed_secs(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import load_table
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import event_seconds, load_table
 
     ev = load_table(spark, sf_dir, "events")
-    s = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    s = event_seconds()
     return [
         (r.user_id, r.event_id, r.s, r.event_type)
         for r in ev.select("user_id", "event_id", s.alias("s"), "event_type").collect()
@@ -647,10 +647,10 @@ def test_r126_drawdown_brute(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import load_table
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import event_seconds, load_table
 
     ev = load_table(spark, sf_dir, "events")
-    s = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    s = event_seconds()
     rows = ev.where(F.col("event_type").isin("purchase", "error")).select(
         "user_id", "event_id", s.alias("s"), "event_type",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
@@ -686,10 +686,10 @@ def test_r127_fd_expected_outcomes(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import load_table
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import event_seconds, load_table
 
     ev = load_table(spark, sf_dir, "events")
-    s = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    s = event_seconds()
     rows = ev.select(
         "event_id", "user_id", "event_type", (s / 86400).cast("long").alias("d")
     ).collect()
@@ -749,10 +749,10 @@ def test_r129_bellman_ford_brute(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import load_table
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import event_seconds, load_table
 
     ev = load_table(spark, sf_dir, "events")
-    s = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    s = event_seconds()
     rows = ev.select(
         "user_id", (s / 60).cast("long").alias("minute"),
         F.round(F.col("value") * 100).cast("long").alias("cents"),
@@ -961,10 +961,10 @@ def test_r135_forward_brute(spark, sf_dir):
     purch = collections.defaultdict(list)
     from pyspark.sql import functions as F
 
-    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import load_table
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import event_seconds, load_table
 
     ev = load_table(spark, sf_dir, "events")
-    sec = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    sec = event_seconds()
     for r in ev.where(F.col("event_type") == "purchase").select(
         "user_id", sec.alias("s"), "event_id",
         F.round(F.col("value") * 100).cast("long").alias("cents"),

@@ -1565,6 +1565,105 @@ def test_sink_merge_twins_reuse_wire_dirs(spark, sf_dir, monkeypatch):
         assert SQ._WIRE_DIRS == cached, name
 
 
+# (streaming twin, batch query) pairs that share one EventsRule.
+_RULE_TWINS = [
+    ("s48_stream_sliding_median", "r103_sliding_median"),
+    ("s49_stream_decayed_leaderboard", "r104_decayed_leaderboard"),
+    ("s59_stream_rings", "r118_cooccurrence_rings"),
+    ("s60_stream_gtest", "m54_gtest_llr"),
+    ("s61_stream_moments", "m53_higher_moments"),
+    ("s62_stream_seasonal_outliers", "m56_seasonal_adjusted_outliers"),
+    ("s64_stream_kruskal", "m58_kruskal_wallis"),
+    ("s65_stream_mutual_information", "m60_mutual_information"),
+    ("s66_stream_wilcoxon", "m59_wilcoxon_signed_rank"),
+    ("s67_stream_jensen_shannon", "m61_jensen_shannon"),
+    ("s68_stream_emd", "m64_wasserstein_emd"),
+    ("s69_stream_hellinger", "m65_hellinger_bhattacharyya"),
+    ("s70_stream_chisq_gof", "m68_chisq_gof_hourly"),
+    ("s71_stream_hhi", "m66_hhi_concentration"),
+    ("s72_stream_theil", "m67_theil_inequality"),
+    ("s73_stream_winsorized", "r128_winsorized_stats"),
+    ("s74_stream_cramers_v", "m71_cramers_v"),
+    ("s75_stream_page_hinkley", "m72_page_hinkley"),
+    ("s76_stream_durbin_watson", "m69_durbin_watson"),
+    ("s77_stream_ccf", "m70_cross_correlation"),
+    ("s78_stream_anderson_darling", "m78_anderson_darling"),
+    ("s82_stream_friedman", "m80_friedman_test"),
+    ("s84_stream_trend_test", "m73_cochran_armitage"),
+    ("s86_stream_grubbs", "m82_grubbs_extremes"),
+    ("s87_stream_reach_curve", "r131_reach_curve"),
+]
+
+
+class _Stopped(Exception):
+    pass
+
+
+def _stop(*args):
+    raise _Stopped(*args)
+
+
+@pytest.mark.parametrize("twin, batch", _RULE_TWINS)
+def test_rule_twins_replay_their_batch_rule(spark, sf_dir, monkeypatch, twin, batch):
+    """Each twin replays its batch query's own EventsRule: the batch query
+    projects events with the rule's `cols`, and the twin hands
+    `_partial_replay` the wire of that projection, the rule's `reduce`
+    object and the projection's own schema (no hand-typed DDL). Both
+    queries are stopped at the call; the replay is pinned by the
+    contract test above and each twin's value by its oracle."""
+    import importlib
+
+    from pyspark.sql.types import StructType
+
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.plans import (
+        streaming_queries as SQ,
+    )
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.plans.registry import (
+        EventsRule,
+        all_queries,
+    )
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import (
+        events_projection,
+    )
+
+    mod = importlib.import_module(all_queries()[batch].__module__)
+    monkeypatch.setattr(mod, "events_projection", _stop)
+    with pytest.raises(_Stopped) as got:
+        mod.QUERIES[batch](spark, sf_dir)
+    cols = got.value.args[2]
+    (rule,) = [
+        r for r in vars(mod).values()
+        if isinstance(r, EventsRule) and r.cols is cols
+    ]
+
+    monkeypatch.setattr(SQ, "_partial_replay", _stop)
+    with pytest.raises(_Stopped) as got:
+        SQ.QUERIES[twin](spark, sf_dir)
+    _spark, wire, schema, reduce_fn, prefix = got.value.args
+    assert reduce_fn is rule.reduce
+    assert isinstance(schema, StructType)
+    assert schema == events_projection(spark, sf_dir, rule.cols).schema
+    assert wire == SQ._events_proj_wire(spark, sf_dir, rule.cols)
+    assert prefix == twin.split("_", 1)[0]
+
+
+def test_daily_cents_twins_share_one_wire(spark, sf_dir, monkeypatch):
+    """s48's (d, cents) histogram and the four daily-cents twins replay
+    one session-cached projection wire."""
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.plans import (
+        streaming_queries as SQ,
+    )
+
+    monkeypatch.setattr(SQ, "_WIRE_DIRS", {})
+    monkeypatch.setattr(SQ, "_partial_replay", _stop)
+    for name in ("s48_stream_sliding_median", "s62_stream_seasonal_outliers",
+                 "s75_stream_page_hinkley", "s76_stream_durbin_watson",
+                 "s82_stream_friedman"):
+        with pytest.raises(_Stopped):
+            SQ.QUERIES[name](spark, sf_dir)
+    assert [k[1] for k in SQ._WIRE_DIRS] == ["proj"]
+
+
 @pytest.mark.parametrize(
     "name, files_per_trigger",
     [

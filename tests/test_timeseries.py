@@ -62,10 +62,10 @@ def test_r119_ohlc_brute(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from fraud_detetion_with__kafkastreams_and_grafana_spark.plans import timeseries
-    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import load_table
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import event_seconds, load_table
 
     ev = load_table(spark, sf_dir, "events")
-    sec = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    sec = event_seconds()
     rows = ev.select(
         sec.alias("s"),
         "event_id",
@@ -99,10 +99,10 @@ def test_ohlc_partials_merge_invariant_to_batching(spark, sf_dir):
     from fraud_detetion_with__kafkastreams_and_grafana_spark.plans.timeseries import (
         ohlc_from_partials,
     )
-    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import load_table
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import event_seconds, load_table
 
     ev = load_table(spark, sf_dir, "events")
-    sec = F.unix_timestamp(F.date_trunc("second", F.col("ts")).cast("timestamp"))
+    sec = event_seconds()
     e = ev.select(
         "event_id",
         sec.alias("s"),
