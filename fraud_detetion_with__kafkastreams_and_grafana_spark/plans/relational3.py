@@ -1483,7 +1483,7 @@ def r76_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     (agg + agg + full outer on key) is identical."""
     e = load_table(spark, sf_dir, "events").select(
         "user_id",
-        F.unix_timestamp(F.date_trunc("second", "ts")).alias("es"),
+        event_seconds().alias("es"),
         "value",
     )
     mid = e.agg(
@@ -1610,7 +1610,7 @@ def r77_pointintime_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     as-of machinery."""
     v = _scd2_versions(spark, sf_dir)
     e = load_table(spark, sf_dir, "events").select(
-        F.unix_timestamp(F.date_trunc("second", "ts")).alias("es")
+        event_seconds().alias("es")
     )
     bounds = e.agg(F.min("es").alias("lo"), F.max("es").alias("hi"))
     grid = (

@@ -4302,27 +4302,9 @@ def s85_stream_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
     n grows. Equal to batch m79, sharing its oracle verbatim.
 
     Scale: 7 partial rows per batch; projection tail."""
-    from .advanced import wilson_from_dow_counts
+    from .advanced import M73, wilson_from_dow_counts
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            (F.expr("weekday(ts)") + 1).cast("long").alias("w"),
-            (F.col("event_type") == "purchase").cast("long").alias("isp"),
-        ],
-    )
-    merged = _partial_replay(
-        spark,
-        d,
-        "w LONG, isp LONG",
-        lambda b: b.groupBy("w").agg(
-            F.count("*").cast("long").alias("ni"),
-            F.sum("isp").cast("long").alias("xi"),
-        ),
-        "s85",
-    )
-    return wilson_from_dow_counts(merged)
+    return wilson_from_dow_counts(_replay_events(spark, sf_dir, M73, "s85"))
 
 
 @_register("s86_stream_grubbs", _AD["m82_grubbs_extremes"])

@@ -11,6 +11,13 @@ Scale posture: these configs are chosen so the same logical plans survive a
 - UTC session timezone: event-time semantics must not depend on cluster
   locale (the reference stores epoch seconds — timezone-free).
 - Arrow enabled for any pandas interchange (vectorized UDF path).
+- On ``local`` masters, streaming logs (offsets, commits, file-source and
+  file-sink logs, state-store deltas) go through the ``FileSystem``-based
+  checkpoint manager: Spark's default ``FileContext`` manager forks
+  ``readlink`` four times per renamed log file. ``file://`` stays Hadoop's
+  checksummed filesystem, because ``FileSystem.getLocal`` (the RocksDB
+  state store's file manager calls it) casts to it. Cluster masters keep
+  Spark's defaults (SCALE.md, "Session posture").
 
 Locally we run ``local[$SPARK_GRAFT_CPUS]``; on a real cluster only
 ``master`` changes — no plan-level assumption depends on local mode.
@@ -24,6 +31,10 @@ from pathlib import Path
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def get_spark(
@@ -61,6 +72,10 @@ def get_spark(
             "spark.executorEnv.PYTHONPATH", str(Path(__file__).resolve().parents[1])
         )
     )
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass", _FS_CHECKPOINT_MANAGER
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
@@ -74,4 +89,8 @@ def apply_session_defaults(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if spark.sparkContext.master.startswith("local"):
+        spark.conf.set(
+            "spark.sql.streaming.checkpointFileManagerClass", _FS_CHECKPOINT_MANAGER
+        )
     return spark

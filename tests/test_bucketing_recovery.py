@@ -78,7 +78,12 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, warehouse):
 def test_streaming_checkpoint_recovery_exactly_once(spark):
     """Stop a checkpointed parquet-sink query mid-stream, deliver more
     input, restart with the SAME checkpoint: every record appears exactly
-    once in the sink."""
+    once in the sink. Then crash between the sink write and the commit
+    log: delete the newest `commits/N` and leave an orphan offsets temp
+    file behind. The restart re-runs batch N from its logged offsets, and
+    the file sink skips it because `_spark_metadata` already holds N."""
+    import uuid
+
     with tempfile.TemporaryDirectory() as tmp:
         src, sink, ckpt = (os.path.join(tmp, d) for d in ("src", "sink", "ckpt"))
         os.makedirs(src)
@@ -98,8 +103,20 @@ def test_streaming_checkpoint_recovery_exactly_once(spark):
             )
             try:
                 q.processAllAvailable()
+                return {p["batchId"] for p in q.recentProgress}
             finally:
                 q.stop()
+
+        def sink_rows():
+            return sorted(
+                (r.userId, r.amount) for r in spark.read.parquet(sink).collect()
+            )
+
+        def log_ids(log):
+            return {int(n) for n in os.listdir(os.path.join(ckpt, log)) if n.isdigit()}
+
+        def part_files():
+            return sorted(n for n in os.listdir(sink) if n.startswith("part-"))
 
         with open(f"{src}/a.txt", "w") as f:
             f.write('{"userId":"u1","amount":10500.0}\n{"userId":"u2","amount":900.0}')
@@ -107,8 +124,15 @@ def test_streaming_checkpoint_recovery_exactly_once(spark):
         with open(f"{src}/b.txt", "w") as f:
             f.write('{"userId":"u3","amount":10700.0}')
         run_until_drained()  # restart from the same checkpoint
+        assert sink_rows() == [("u1", 10500.0), ("u3", 10700.0)]  # no dupes, no loss
 
-        rows = sorted(
-            (r.userId, r.amount) for r in spark.read.parquet(sink).collect()
-        )
-        assert rows == [("u1", 10500.0), ("u3", 10700.0)]  # no dupes, no loss
+        n = max(log_ids("commits"))
+        parts = part_files()
+        for name in (str(n), f".{n}.crc"):  # the file and its checksum sidecar
+            os.remove(os.path.join(ckpt, "commits", name))
+        with open(os.path.join(ckpt, "offsets", f".{n}.{uuid.uuid4()}.tmp"), "w") as f:
+            f.write("torn write")
+        assert n in run_until_drained()  # batch N re-runs from offsets/N
+        assert log_ids("commits") == log_ids("offsets") == set(range(n + 1))
+        assert part_files() == parts  # the sink skipped the committed batch
+        assert sink_rows() == [("u1", 10500.0), ("u3", 10700.0)]

@@ -984,3 +984,36 @@ def test_r135_forward_brute(spark, sf_dir):
         for r in relational3.QUERIES["r135_asof_forward"](spark, sf_dir).collect()
     }
     assert got == want
+
+
+def test_event_seconds_equals_untyped_truncation_off_utc(spark, sf_dir):
+    """r76/r77 read `event_seconds()`, which casts the second-truncated
+    `ts` to `timestamp` before `unix_timestamp`. Without the cast the
+    value is the same on every row, also under a session zone with a
+    non-hour offset. The zone is in effect: `ts` is a zone-free
+    timestamp_ntz, read as Kathmandu wall time (UTC+05:45)."""
+    from pyspark.sql import functions as F
+
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import (
+        event_seconds,
+        load_table,
+    )
+
+    def read(tz):
+        spark.conf.set("spark.sql.session.timeZone", tz)
+        ev = load_table(spark, sf_dir, "events")
+        return ev.select(
+            "event_id",
+            event_seconds().alias("typed"),
+            F.unix_timestamp(F.date_trunc("second", "ts")).alias("untyped"),
+        ).collect()
+
+    old = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        utc, ktm = read("UTC"), read("Asia/Kathmandu")
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+    assert ktm and all(r.typed == r.untyped for r in ktm)
+    assert sorted((r.event_id, r.typed - 20700) for r in utc) == sorted(
+        (r.event_id, r.typed) for r in ktm
+    )

@@ -5,6 +5,7 @@ rate-source generator's distribution contract."""
 from __future__ import annotations
 
 import json
+import math
 import os
 import tempfile
 
@@ -26,6 +27,16 @@ WIRE_ROWS = [
     '{"userId":"user_001","amount":10000.0,"timestamp":1700000003}',  # boundary: NOT fraud
     '{"userId":',  # corrupt: dropped
     '{"userId":"user_003","amount":10000.01,"timestamp":1700000004}',
+]
+
+# FIXTURES.md's boundary records for the live parquet sink.
+SMALLEST_FRAUD = math.nextafter(10000.0, math.inf)
+BOUNDARY_ROWS = [
+    '{"userId":"user_010","amount":10000.0,"timestamp":1700000010}',  # NOT fraud
+    json.dumps({"userId": "user_011", "amount": SMALLEST_FRAUD, "timestamp": 1700000011}),
+    '{"userId":"user_012","amount":20000.0,"timestamp":1700000012',  # malformed
+    '{"userId":"user_013","amount":10500.0,"timestamp":1700000013,"merchant":"m1"}',
+    '{"userId":"user_014","amount":9999.0,"timestamp":1700000014}',
 ]
 
 
@@ -73,18 +84,9 @@ def test_parquet_sink_paced_and_equal_to_batch(spark, tmp_path):
     rows equal the batch topology over the same files, the query runs
     on the fixed 500 ms processing-time trigger, and an idle source
     adds no batch id until the next file lands."""
-    import math
     import os
     import time
 
-    smallest_fraud = math.nextafter(10000.0, math.inf)
-    boundary = [
-        '{"userId":"user_010","amount":10000.0,"timestamp":1700000010}',  # NOT fraud
-        json.dumps({"userId": "user_011", "amount": smallest_fraud, "timestamp": 1700000011}),
-        '{"userId":"user_012","amount":20000.0,"timestamp":1700000012',  # malformed
-        '{"userId":"user_013","amount":10500.0,"timestamp":1700000013,"merchant":"m1"}',
-        '{"userId":"user_014","amount":9999.0,"timestamp":1700000014}',
-    ]
     later = ['{"userId":"user_015","amount":10700.0,"timestamp":1700000015}']
     in_dir, stage = tmp_path / "in", tmp_path / "stage"
     in_dir.mkdir()
@@ -113,13 +115,13 @@ def test_parquet_sink_paced_and_equal_to_batch(spark, tmp_path):
         assert trigger.getClass().getSimpleName() == "ProcessingTimeTrigger"
         assert trigger.intervalMs() == 500
 
-        publish("part-0.txt", boundary)
+        publish("part-0.txt", BOUNDARY_ROWS)
         q.processAllAvailable()
         batch_in = spark.read.schema("value STRING").text(str(in_dir))
         want = points(topology.alerts_as_points(topology.fraud_topology(batch_in)))
         assert points(spark.read.parquet(out)) == want
         assert {(u, a) for _, u, a in want} == {
-            ("user_011", smallest_fraud), ("user_013", 10500.0),
+            ("user_011", SMALLEST_FRAUD), ("user_013", 10500.0),
         }
 
         ids = committed()
@@ -134,6 +136,54 @@ def test_parquet_sink_paced_and_equal_to_batch(spark, tmp_path):
         }
     finally:
         q.stop()
+
+
+def test_live_sink_checkpoint_forks_no_shell(spark, tmp_path):
+    """The engine's local sessions write streaming logs through the
+    FileSystem checkpoint manager, which renames with `File.renameTo`
+    instead of forking `readlink` per log file as Spark's default
+    FileContext manager does. `file://` stays Hadoop's checksummed
+    LocalFileSystem, which `FileSystem.getLocal` (the RocksDB state
+    store's file manager calls it) casts to. Over several micro-batches
+    the live parquet sink still equals the batch topology."""
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.session import (
+        apply_session_defaults,
+    )
+
+    # An externally created session gets the manager from apply_session_defaults.
+    spark.conf.unset("spark.sql.streaming.checkpointFileManagerClass")
+    apply_session_defaults(spark)
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    ckpt = tmp_path / "ckpt"
+    got = manager.create(jvm.org.apache.hadoop.fs.Path(str(ckpt)), hadoop_conf)
+    assert got.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+    local = jvm.org.apache.hadoop.fs.FileSystem.getLocal(hadoop_conf)
+    assert jvm.java.lang.Class.forName("org.apache.hadoop.fs.LocalFileSystem").isInstance(local)
+
+    in_dir, stage, out = tmp_path / "in", tmp_path / "stage", tmp_path / "out"
+    in_dir.mkdir()
+    stage.mkdir()
+    wire = spark.readStream.schema("value STRING").text(str(in_dir))
+    q = topology.start_to_parquet(
+        topology.alerts_as_points(topology.fraud_topology(wire)), str(out), str(ckpt)
+    )
+    try:
+        for i, row in enumerate(BOUNDARY_ROWS):  # one file, one micro-batch each
+            (stage / f"p{i}.txt").write_text(row)
+            os.rename(stage / f"p{i}.txt", in_dir / f"p{i}.txt")
+            q.processAllAvailable()
+    finally:
+        q.stop()
+
+    assert len([p for p in (ckpt / "commits").iterdir() if p.name.isdigit()]) >= 3
+    batch_in = spark.read.schema("value STRING").text(str(in_dir))
+    want = topology.alerts_as_points(topology.fraud_topology(batch_in)).collect()
+    assert sorted(map(tuple, spark.read.parquet(str(out)).collect())) == sorted(
+        map(tuple, want)
+    )
+    assert len(want) == 2
 
 
 def test_windowed_agg_with_watermark_drops_late(spark):
@@ -1662,6 +1712,25 @@ def test_daily_cents_twins_share_one_wire(spark, sf_dir, monkeypatch):
         with pytest.raises(_Stopped):
             SQ.QUERIES[name](spark, sf_dir)
     assert [k[1] for k in SQ._WIRE_DIRS] == ["proj"]
+
+
+def test_trend_and_wilson_twins_share_m73(spark, sf_dir, monkeypatch):
+    """s84 and s85 replay M73's one projection wire (one `"proj"` entry
+    between them), and s85 lands M73's own `reduce`."""
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.plans import (
+        streaming_queries as SQ,
+    )
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.plans.advanced import M73
+
+    monkeypatch.setattr(SQ, "_WIRE_DIRS", {})
+    monkeypatch.setattr(SQ, "_partial_replay", _stop)
+    reduces = []
+    for name in ("s84_stream_trend_test", "s85_stream_wilson"):
+        with pytest.raises(_Stopped) as got:
+            SQ.QUERIES[name](spark, sf_dir)
+        reduces.append(got.value.args[3])
+    assert [k[1] for k in SQ._WIRE_DIRS] == ["proj"]
+    assert all(r is M73.reduce for r in reduces)
 
 
 @pytest.mark.parametrize(
