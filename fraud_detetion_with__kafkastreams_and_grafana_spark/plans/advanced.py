@@ -5754,6 +5754,19 @@ _M42_SQL = """
 """
 
 
+M42 = EventsRule(
+    lambda t: [F.round(F.col("o_totalprice") * 100).cast("long").alias("cents")],
+    lambda o: (
+        o.select(
+            F.substring(F.col("cents").cast("string"), 1, 1).cast("int").alias("digit")
+        )
+        .groupBy("digit")
+        .agg(F.count("*").alias("n"))
+    ),
+    "orders",
+)
+
+
 @_register("m42_benford_first_digit", _M42_SQL)
 def m42_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford's-law first-digit audit of order amounts: observed count
@@ -5773,28 +5786,8 @@ def m42_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: audits the exact field the reference thresholds
     (TransactionProcessor.java:37); public methodology."""
-    o = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    h = (
-        o.select(
-            F.substring(cents.cast("string"), 1, 1).cast("int").alias("digit")
-        )
-        .groupBy("digit")
-        .agg(F.count("*").alias("n"))
-    )
-    h = h.localCheckpoint()  # 9 rows
-    t = h.agg(F.sum("n").cast("long").alias("total"))
-    # broadcast bound: t is 1 row
-    j = h.crossJoin(F.broadcast(t))
-    exp_n = F.col("total") * F.log10(1.0 + 1.0 / F.col("digit"))
-    return j.select(
-        "digit",
-        "n",
-        (F.col("n").cast("double") / F.col("total")).alias("share"),
-        F.log10(1.0 + 1.0 / F.col("digit")).alias("benford_share"),
-        ((F.col("n") - exp_n) * (F.col("n") - exp_n) / exp_n).alias(
-            "chi2_term"
-        ),
+    return benford_from_digit_counts(
+        M42.reduce(events_projection(spark, sf_dir, M42.cols, M42.table))
     )
 
 
@@ -6584,6 +6577,12 @@ _M51_SQL = """
 """
 
 
+M51 = EventsRule(
+    lambda t: ["event_type", _cents()],
+    lambda e: e.groupBy("event_type", "cents").agg(F.count("*").alias("c")),
+)
+
+
 @_register("m51_tukey_fences", _M51_SQL)
 def m51_tukey_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tukey outlier fences per event type: Q1/Q3 as the discrete lower
@@ -6600,18 +6599,9 @@ def m51_tukey_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the box-plot outlier layer of the reference's
     histogram panel (screenshots/AmountHistogram.jpg); public method
     (Tukey 1977)."""
-    from pyspark.sql.window import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    h = (
-        ev.select(
-            "event_type",
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("event_type", "cents")
-        .agg(F.count("*").alias("c"))
+    return tukey_from_hist(
+        M51.reduce(events_projection(spark, sf_dir, M51.cols))
     )
-    return tukey_from_hist(h)
 
 
 _M52_TRIM_PCT = 5
@@ -9424,37 +9414,26 @@ def m79_wilson_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: none in reference; public interval (Wilson
     1927), the uncertainty layer under q2/q5's rate tiles."""
-    ev = load_table(spark, sf_dir, "events")
-    g = ev.groupBy(
-        (F.expr("weekday(ts)") + 1).cast("long").alias("dow")
-    ).agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum((F.col("event_type") == "purchase").cast("long"))
-        .cast("long")
-        .alias("x"),
+    return wilson_from_dow_counts(
+        M73.reduce(events_projection(spark, sf_dir, M73.cols))
     )
-    return wilson_from_counts(g)
 
 
 def wilson_from_dow_counts(g: DataFrame) -> DataFrame:
-    """(w, ni, xi) dow count partials -> m79's report. Counts merge
-    by keyed sum; shared by the s85 streaming twin."""
+    """(w, ni, xi) dow count partials -> m79's report: counts merge by
+    keyed sum, then the Wilson interval projection. Shared by the s85
+    streaming twin."""
     g = g.groupBy("w").agg(
         F.sum("ni").cast("long").alias("n"),
         F.sum("xi").cast("long").alias("x"),
-    ).select(F.col("w").alias("dow"), "n", "x")
-    return wilson_from_counts(g)
-
-
-def wilson_from_counts(g: DataFrame) -> DataFrame:
-    """(dow, n, x) -> Wilson interval projection (m79's tail)."""
+    )
     z = 1.959963984540054
     n, x = F.col("n"), F.col("x")
     phat = x * 1.0 / n
     half = z * F.sqrt(phat * (1.0 - phat) / n + z * z / (4.0 * n * n))
     denom = 1.0 + z * z / n
     return g.select(
-        "dow",
+        F.col("w").alias("dow"),
         "n",
         "x",
         phat.alias("phat"),

@@ -20,8 +20,8 @@ from ..operators import dedup as DD
 from ..operators import multimodal as MM
 from ..operators import similarity as SIM
 from ..sessioncache import session_cached
-from ..sources.tables import load_table
-from .registry import registrar
+from ..sources.tables import events_projection, load_table
+from .registry import EventsRule, registrar
 
 QUERIES, ORACLES, _register = registrar()
 
@@ -6609,6 +6609,23 @@ def gopher_flags() -> list:
     ]
 
 
+L98 = EventsRule(
+    lambda t: ["doc_id", "lang", "source", "text"],
+    lambda d: (
+        d.select("lang", "source", *gopher_flags())
+        .groupBy("lang", "source")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum(1 - F.col("ok_nw")).alias("fail_wordcount"),
+            F.sum(1 - F.col("ok_wl")).alias("fail_wordlen"),
+            F.sum(1 - F.col("ok_stop")).alias("fail_stopwords"),
+            F.sum(F.col("ok_nw") * F.col("ok_wl") * F.col("ok_stop")).alias("n_pass"),
+        )
+    ),
+    "documents",
+)
+
+
 @_register("l98_gopher_quality_rules", _L98_SQL)
 def l98_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Gopher quality-rule set (Rae et al. 2021 §A1.1) per corpus
@@ -6627,16 +6644,8 @@ def l98_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: none in reference; public methodology (Gopher,
     Rae et al. 2021)."""
-    d = load_table(spark, sf_dir, "documents")
-    r = d.select("lang", "source", *gopher_flags())
-    return r.groupBy("lang", "source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(1 - F.col("ok_nw")).cast("long").alias("fail_wordcount"),
-        F.sum(1 - F.col("ok_wl")).cast("long").alias("fail_wordlen"),
-        F.sum(1 - F.col("ok_stop")).cast("long").alias("fail_stopwords"),
-        F.sum(F.col("ok_nw") * F.col("ok_wl") * F.col("ok_stop"))
-        .cast("long")
-        .alias("n_pass"),
+    return gopher_report_from_slice_partials(
+        L98.reduce(events_projection(spark, sf_dir, L98.cols, L98.table))
     )
 
 

@@ -40,16 +40,19 @@ def registrar():
 
 
 class EventsRule(NamedTuple):
-    """One mergeable events rule, shared by a batch query and its
-    streaming twin. `cols(t)` projects `events` in terms of the
-    epoch-second column `t` (`sources.tables.event_seconds`);
+    """One mergeable rule over one source table, shared by a batch query
+    and its streaming twin. `cols(t)` projects `table` (default
+    `events`), where `t` is the epoch-second column
+    `sources.tables.event_seconds` (only `events` rules use it);
     `reduce(frame)` maps a frame of those columns to associative
-    partials. The batch query reduces `events_projection(.., cols)` once;
-    the twin reduces each replayed micro-batch of the same projection
-    (`streaming_queries._replay_events`) and merges the partials."""
+    partials. The batch query reduces `events_projection(.., cols,
+    table)` once; the twin reduces each replayed micro-batch of the same
+    projection (`streaming_queries._replay_events`) and merges the
+    partials."""
 
     cols: Callable[[Column], list]
     reduce: Callable[[DataFrame], DataFrame]
+    table: str = "events"
 
 
 def _modules():
@@ -126,6 +129,10 @@ _REWRITTEN: dict[str, int] = {
     # batch rows whose query now runs its twin's EventsRule form
     "m59": 13, "m60": 13, "m61": 13, "m64": 13, "m65": 13, "m66": 13,
     "m67": 13, "m68": 13, "m71": 13, "m73": 13, "m78": 13,
+    # batch rows moved onto an EventsRule whose plan changed (r121
+    # composes r108), and s51, whose band now tests the raw amount
+    "r108": 13, "r114": 13, "r119": 13, "m42": 13, "m79": 13, "l98": 13,
+    "r121": 13, "s51": 13,
 }
 
 

@@ -4921,6 +4921,21 @@ _R108_SQL = f"""
 """
 
 
+R108 = EventsRule(
+    lambda t: ["user_id", (t / 86400).cast("long").alias("d"), "value"],
+    # The band tests the raw amount, as the oracle does: 99.996 is in
+    # the band although its cents round to 10000.
+    lambda e: (
+        e.where((F.col("value") >= _R108_LO) & (F.col("value") < _R108_HI))
+        .groupBy("user_id", "d")
+        .agg(
+            F.count("*").alias("n_band"),
+            F.sum(F.round(F.col("value") * 100).cast("long")).alias("band_cents"),
+        )
+    ),
+)
+
+
 @_register("r108_structuring", _R108_SQL)
 def r108_structuring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structuring (smurfing) rule: multiple same-day amounts parked
@@ -4937,28 +4952,8 @@ def r108_structuring(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the inverse of the reference's `> 10000` branch
     (TransactionProcessor.java:37) — amounts engineered to stay UNDER
     the alert line; public AML rule."""
-    ev = load_table(spark, sf_dir, "events")
-    s = event_seconds()
-    e = ev.where(
-        (F.col("value") >= _R108_LO) & (F.col("value") < _R108_HI)
-    ).select(
-        "user_id",
-        (s / 86400).cast("long").alias("d"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    return (
-        e.groupBy("user_id", "d")
-        .agg(
-            F.count("*").alias("n_band"),
-            F.sum("cents").cast("long").alias("band_cents"),
-        )
-        .where(F.col("n_band") >= _R108_K)
-        .select(
-            "user_id",
-            F.col("d").cast("long").alias("d"),
-            "n_band",
-            "band_cents",
-        )
+    return structuring_from_userday(
+        R108.reduce(events_projection(spark, sf_dir, R108.cols))
     )
 
 
@@ -5309,6 +5304,22 @@ _R114_SQL = f"""
 """
 
 
+R114 = EventsRule(
+    lambda t: [
+        "user_id",
+        F.round(F.col("value") * 100).cast("long").alias("cents"),
+    ],
+    lambda e: (
+        e.select(
+            (F.col("cents") / _R114_WIDTH_CENTS).cast("long").alias("bin"),
+            "cents",
+        )
+        .groupBy("bin")
+        .agg(F.count("*").alias("n"), F.sum("cents").alias("sum_cents"))
+    ),
+)
+
+
 @_register("r114_equiwidth_histogram", _R114_SQL)
 def r114_equiwidth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-width amount histogram with EMPTY BINS MATERIALIZED — the
@@ -5323,27 +5334,8 @@ def r114_equiwidth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is scaffold-sized, broadcast bound: {_R114_BINS} rows.
 
     Reference parity: README.md:342-356 (amount histogram panel)."""
-    ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
-    h = (
-        ev.select(
-            (cents / _R114_WIDTH_CENTS).cast("long").alias("bin"),
-            cents.alias("cents"),
-        )
-        .groupBy("bin")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("cents").cast("long").alias("sum_cents"),
-        )
-    )
-    scaffold = spark.range(_R114_BINS).select(F.col("id").alias("bin"))
-    # broadcast bound: the counted-bin frame is <= _R114_BINS rows
-    j = scaffold.join(F.broadcast(h), "bin", "left")
-    return j.select(
-        "bin",
-        (F.col("bin") * _R114_WIDTH_CENTS).cast("long").alias("lo_cents"),
-        F.coalesce("n", F.lit(0)).cast("long").alias("n"),
-        F.coalesce("sum_cents", F.lit(0)).cast("long").alias("sum_cents"),
+    return equiwidth_from_bins(
+        spark, R114.reduce(events_projection(spark, sf_dir, R114.cols))
     )
 
 
@@ -5366,6 +5358,19 @@ _R115_SQL = """
 """
 
 
+R115 = EventsRule(
+    lambda t: [
+        F.year("o_orderdate").alias("y"),
+        F.month("o_orderdate").alias("mo"),
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+    ],
+    lambda o: o.groupBy("y", "mo").agg(
+        F.sum("cents").alias("rev_cents"), F.count("*").alias("n_orders")
+    ),
+    "orders",
+)
+
+
 @_register("r115_period_over_period", _R115_SQL)
 def r115_period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-over-month revenue: per-month integer-cents totals with
@@ -5381,20 +5386,9 @@ def r115_period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     never corpus-sized.
 
     Reference parity: README.md:342-356 (stat tiles over time)."""
-    o = load_table(spark, sf_dir, "orders")
-    m = (
-        o.select(
-            F.year("o_orderdate").alias("y"),
-            F.month("o_orderdate").alias("mo"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("y", "mo")
-        .agg(
-            F.sum("cents").cast("long").alias("rev_cents"),
-            F.count("*").alias("n_orders"),
-        )
+    return mom_from_monthly(
+        R115.reduce(events_projection(spark, sf_dir, R115.cols, R115.table))
     )
-    return mom_from_monthly(m)
 
 
 def velocity_from_second_counts(sc: DataFrame) -> DataFrame:

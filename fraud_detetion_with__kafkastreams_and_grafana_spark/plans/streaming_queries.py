@@ -16,27 +16,33 @@ s09: foreachBatch idempotent sink (deterministic per-batch dynamic
 
 Sink-merge twins (s26-s87, beside the stateful replay_wire_stream
 twins s24/s25/s29 and the kstream DSL twins): one replay path.
-`_events_proj_wire` serializes an events projection to a JSON wire dir,
-cached per session by the projection expression, so twins reading the
-same projection share one dir (s26/s31/s37/s44 share the scoring
-wire). Non-events or filtered wires come from `materialize_wire_dir`
-directly. `_partial_replay` replays the dir as 2 micro-batches, parses
-each with the twin's schema, drops rows whose FIRST schema field is null,
-reduces the batch with the twin's `reduce_fn` to bounded associative
-partials and lands them as one file per batch through
-`replay_foreach_batch` (streaming/replay.py), the one foreachBatch
-lifecycle: each batch overwrites its own `_batch_id` partition
-(dynamic overwrite, idempotent), and the landed frame feeds the batch
-query's shared tail.
+`_events_proj_wire` serializes a projection of one source table
+(`events` unless named) to a JSON wire dir, cached per session by the
+projection expression, so twins reading the same projection share one
+dir (s26/s31/s37/s44 share the scoring wire). Filtered or joined wires
+(s28/s33's post-split live half, s42, s47, s55) are built once per
+session through `_session_wire` too. `_partial_replay` replays the dir
+as 2 micro-batches, parses each with the twin's schema, drops rows
+whose FIRST schema field is null, reduces the batch with the twin's
+`reduce_fn` to bounded associative partials and lands them as one file
+per batch through `replay_foreach_batch` (streaming/replay.py), the
+one foreachBatch lifecycle: each batch overwrites its own `_batch_id`
+partition (dynamic overwrite, idempotent), and the landed frame feeds
+the batch query's shared tail.
 
-Twins of a mergeable events rule (s48, s49, s59-s62, s64-s78, s82,
-s84, s86, s87) write no query of their own. Their batch query's
-`EventsRule(cols, reduce)` (plans/registry.py, defined beside the tail
-in advanced.py / relational3.py) is the one definition: the batch
-query runs `tail(rule.reduce(events_projection(.., rule.cols)))`; the
-twin runs `tail(_replay_events(.., rule, prefix))`, which replays the
-`rule.cols` wire, parses it with the projection's own schema and
-reduces each micro-batch with the same `rule.reduce`.
+Twins of a mergeable rule (s48, s49, s51-s54, s56-s62, s64-s78, s82,
+s84-s87) write no query of their own. Their batch query's
+`EventsRule(cols, reduce, table)` (plans/registry.py, defined beside
+the tail in its plan module) is the one definition: the batch query
+runs `tail(rule.reduce(events_projection(.., rule.cols, rule.table)))`;
+the twin runs `tail(_replay_events(.., rule, prefix))`, which replays
+the projection's wire, parses it with the projection's own schema and
+reduces each micro-batch with the same `rule.reduce`. Two pairs stay
+written twice, because no one-table rule fits them: s55's wire is an
+orders x customer join (r111's), and s63 parses `embeddings.embedding`
+(array<float>) as ARRAY<DOUBLE>, the parse its raw-double oracle
+`_PCA_RAW_SQL` was made green against, while its batch row l102
+quantizes its output and keeps its moment partials as two frames.
 
 Twins whose per-batch work does not fit the parse/filter/coalesce
 contract pass their own per-batch function to `replay_foreach_batch`:
@@ -154,8 +160,10 @@ def _doubled_wire_dir(spark: SparkSession, sf_dir: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _events_proj_wire(spark: SparkSession, sf_dir: str, cols) -> str:
-    """JSON wire dir for an events projection (replay input).
+def _events_proj_wire(
+    spark: SparkSession, sf_dir: str, cols, table: str = "events"
+) -> str:
+    """JSON wire dir for a projection of `table` (replay input).
 
     Session-cached by the PROJECTION EXPRESSION (VERDICT r9 task 8):
     twins reading the same projection — e.g. the (d, cents) daily-cents
@@ -163,16 +171,19 @@ def _events_proj_wire(spark: SparkSession, sf_dir: str, cols) -> str:
     re-materializing it, the same once-per-session policy as the plain
     `_wire_dir` family. The struct Column's repr is a deterministic
     render of the resolved expression tree, so identical projections
-    key identically and different ones never collide."""
-    ev = load_table(spark, sf_dir, "events")
-    t = event_seconds()
-    struct = F.struct(*cols(t))
+    key identically and different ones never collide; a table other
+    than `events` adds its name to the key."""
+    src = load_table(spark, sf_dir, table)
+    struct = F.struct(*cols(event_seconds()))
+    # An events key stays (app, "proj", sf_dir, str(struct)): perfbench's
+    # batch_mix set-up pre-builds s50's wire under it.
+    key = (str(struct),) if table == "events" else (str(struct), table)
     return _session_wire(
         spark,
         "proj",
         sf_dir,
-        lambda: materialize_wire_dir(ev.select(F.to_json(struct).alias("value"))),
-        str(struct),
+        lambda: materialize_wire_dir(src.select(F.to_json(struct).alias("value"))),
+        *key,
     )
 
 
@@ -200,10 +211,10 @@ def _partial_replay(spark, wire_dir, schema, reduce_fn, prefix):
 
 
 def _replay_events(spark, sf_dir, rule, prefix):
-    """Replay `rule`'s events projection through `_partial_replay` with
+    """Replay `rule`'s table projection through `_partial_replay` with
     its `reduce`, parsing the wire with the projection's own schema."""
-    schema = events_projection(spark, sf_dir, rule.cols).schema
-    wire = _events_proj_wire(spark, sf_dir, rule.cols)
+    schema = events_projection(spark, sf_dir, rule.cols, rule.table).schema
+    wire = _events_proj_wire(spark, sf_dir, rule.cols, rule.table)
     return _partial_replay(spark, wire, schema, rule.reduce, prefix)
 
 
@@ -1954,6 +1965,24 @@ def s27_stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _live_half_replay(spark, sf_dir, split_s, reduce_fn, prefix):
+    """Replay the live half of m17's split (events at or after
+    `split_s`) as (value, event_type) records through `_partial_replay`.
+    s28 and s33 share its one session-cached wire, keyed on `split_s`."""
+
+    def build() -> str:
+        ev = load_table(spark, sf_dir, "events")
+        live = ev.where(event_seconds() >= F.lit(split_s))
+        return materialize_wire_dir(
+            live.select(F.to_json(F.struct("event_type", "value")).alias("value"))
+        )
+
+    wire = _session_wire(spark, "live_half", sf_dir, build, split_s)
+    return _partial_replay(
+        spark, wire, "value DOUBLE, event_type STRING", reduce_fn, prefix
+    )
+
+
 @_register("s28_stream_drift_psi", _AD["m17_psi_drift"])
 def s28_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """m17's PSI drift monitor run as a STREAM — the deployment shape of
@@ -1986,14 +2015,11 @@ def s28_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", "bucket", "ref_n")
         .localCheckpoint()
     )
-    wire = ev.where(t >= F.lit(split_s)).select(
-        F.to_json(F.struct(F.col("event_type"), F.col("value"))).alias("value")
-    )
     live = (
-        _partial_replay(
+        _live_half_replay(
             spark,
-            materialize_wire_dir(wire),
-            "value DOUBLE, event_type STRING",
+            sf_dir,
+            split_s,
             lambda b: (
                 b.select("event_type", F.expr(_M17_BUCKET).alias("bucket"))
                 .groupBy("event_type", "bucket")
@@ -2207,14 +2233,11 @@ def s33_stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("ref_n"))
         .localCheckpoint()
     )
-    wire = ev.where(t >= F.lit(split_s)).select(
-        F.to_json(F.struct(F.col("event_type"), F.col("value"))).alias("value")
-    )
     live = (
-        _partial_replay(
+        _live_half_replay(
             spark,
-            materialize_wire_dir(wire),
-            "value DOUBLE, event_type STRING",
+            sf_dir,
+            split_s,
             lambda b: (
                 b.select("event_type", cent)
                 .groupBy("event_type", "cent")
@@ -2755,7 +2778,7 @@ def s42_stream_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fronts = _partial_replay(
         spark,
-        materialize_wire_dir(wire),
+        _session_wire(spark, "s42", sf_dir, lambda: materialize_wire_dir(wire)),
         "o_orderkey LONG, d LONG, cents LONG",
         # skyline_front ends in a broadcast join, not an aggregate: the
         # shuffle keeps the batch scan parallel, so only the front (at
@@ -3133,7 +3156,7 @@ def s47_stream_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = (
         _partial_replay(
             spark,
-            materialize_wire_dir(wire),
+            _session_wire(spark, "s47", sf_dir, lambda: materialize_wire_dir(wire)),
             "q DOUBLE, p DOUBLE",
             hist_partials,
             "s47",
@@ -3246,7 +3269,7 @@ def s50_stream_velocity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s51_stream_structuring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r108's structuring (smurfing) detector as a live rule: each
     micro-batch filters to the just-under-threshold band (map-side,
-    the wire carries only band rows) and lands (user, day)
+    on the raw amount, as r108 does) and lands (user, day)
     count/cents partials; the snapshot merges and applies the >= K
     incident cut through the shared tail. Equal to batch r108,
     sharing its oracle verbatim.
@@ -3254,33 +3277,9 @@ def s51_stream_structuring(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the band filter runs BEFORE the wire in production (here:
     in the batch reducer) so partial volume is ~2% of events; merge
     and cut cost the incident-candidate frame only."""
-    from .relational3 import _R108_HI, _R108_LO, structuring_from_userday
+    from .relational3 import R108, structuring_from_userday
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            "user_id",
-            (t / 86400).cast("long").alias("d"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        ],
-    )
-    lo, hi = int(_R108_LO * 100), int(_R108_HI * 100)
-    merged = _partial_replay(
-        spark,
-        d,
-        "user_id LONG, d LONG, cents LONG",
-        lambda b: (
-            b.where((F.col("cents") >= lo) & (F.col("cents") < hi))
-            .groupBy("user_id", "d")
-            .agg(
-                F.count("*").alias("n_band"),
-                F.sum("cents").alias("band_cents"),
-            )
-        ),
-        "s51",
-    )
-    return structuring_from_userday(merged)
+    return structuring_from_userday(_replay_events(spark, sf_dir, R108, "s51"))
 
 
 @_register("s52_stream_equiwidth", _R3["r114_equiwidth_histogram"])
@@ -3295,34 +3294,9 @@ def s52_stream_equiwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: partial size is |bins| per batch regardless of batch
     volume; the merge is bin-domain. The streaming histogram is THE
     textbook partial-aggregation shape."""
-    from .relational3 import _R114_WIDTH_CENTS, equiwidth_from_bins
+    from .relational3 import R114, equiwidth_from_bins
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            "user_id",
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        ],
-    )
-    merged = _partial_replay(
-        spark,
-        d,
-        "user_id LONG, cents LONG",
-        lambda b: (
-            b.select(
-                (F.col("cents") / _R114_WIDTH_CENTS).cast("long").alias("bin"),
-                "cents",
-            )
-            .groupBy("bin")
-            .agg(
-                F.count("*").alias("n"),
-                F.sum("cents").alias("sum_cents"),
-            )
-        ),
-        "s52",
-    )
-    return equiwidth_from_bins(spark, merged)
+    return equiwidth_from_bins(spark, _replay_events(spark, sf_dir, R114, "s52"))
 
 
 @_register("s53_stream_benford", _AD["m42_benford_first_digit"])
@@ -3336,35 +3310,9 @@ def s53_stream_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: 9-row partials per batch; the tail is digit-domain. Zero
     streaming state."""
-    from .advanced import benford_from_digit_counts
+    from .advanced import M42, benford_from_digit_counts
 
-    o = load_table(spark, sf_dir, "orders")
-    wire = o.select(
-        F.to_json(
-            F.struct(
-                F.round(F.col("o_totalprice") * 100)
-                .cast("long")
-                .alias("cents")
-            )
-        ).alias("value")
-    )
-    d = materialize_wire_dir(wire)
-    merged = _partial_replay(
-        spark,
-        d,
-        "cents LONG",
-        lambda b: (
-            b.select(
-                F.substring(F.col("cents").cast("string"), 1, 1)
-                .cast("int")
-                .alias("digit")
-            )
-            .groupBy("digit")
-            .agg(F.count("*").alias("n"))
-        ),
-        "s53",
-    )
-    return benford_from_digit_counts(merged)
+    return benford_from_digit_counts(_replay_events(spark, sf_dir, M42, "s53"))
 
 
 @_register("s54_stream_mom_revenue", _R3["r115_period_over_period"])
@@ -3378,32 +3326,9 @@ def s54_stream_mom_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle verbatim.
 
     Scale: |months| partial rows per batch; zero streaming state."""
-    from .relational3 import mom_from_monthly
+    from .relational3 import R115, mom_from_monthly
 
-    o = load_table(spark, sf_dir, "orders")
-    wire = o.select(
-        F.to_json(
-            F.struct(
-                F.year("o_orderdate").alias("y"),
-                F.month("o_orderdate").alias("mo"),
-                F.round(F.col("o_totalprice") * 100)
-                .cast("long")
-                .alias("cents"),
-            )
-        ).alias("value")
-    )
-    d = materialize_wire_dir(wire)
-    merged = _partial_replay(
-        spark,
-        d,
-        "y INT, mo INT, cents LONG",
-        lambda b: b.groupBy("y", "mo").agg(
-            F.sum("cents").alias("rev_cents"),
-            F.count("*").alias("n_orders"),
-        ),
-        "s54",
-    )
-    return mom_from_monthly(merged)
+    return mom_from_monthly(_replay_events(spark, sf_dir, R115, "s54"))
 
 
 @_register("s55_stream_peer_deviation", _R3["r111_peer_deviation"])
@@ -3438,10 +3363,9 @@ def s55_stream_peer_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("value")
         )
     )
-    d = materialize_wire_dir(wire)
     merged = _partial_replay(
         spark,
-        d,
+        _session_wire(spark, "s55", sf_dir, lambda: materialize_wire_dir(wire)),
         "ck LONG, nk INT, cents LONG",
         lambda b: b.groupBy("ck", "nk").agg(
             F.count("*").alias("n_orders"),
@@ -3471,34 +3395,11 @@ def s56_stream_gopher_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-batch partial volume is |slices| rows regardless of
     batch size; document text never lands in the sink and never
     crosses a shuffle."""
-    from .llmops import gopher_flags, gopher_report_from_slice_partials
+    from .llmops import L98, gopher_report_from_slice_partials
 
-    docs = load_table(spark, sf_dir, "documents")
-    wire = docs.select(
-        F.to_json(F.struct("doc_id", "lang", "source", "text")).alias("value")
+    return gopher_report_from_slice_partials(
+        _replay_events(spark, sf_dir, L98, "s56")
     )
-    d = materialize_wire_dir(wire)
-
-    def judge(b: DataFrame) -> DataFrame:
-        r = b.select("lang", "source", *gopher_flags())
-        return r.groupBy("lang", "source").agg(
-            F.count("*").alias("n_docs"),
-            F.sum(1 - F.col("ok_nw")).alias("fail_wordcount"),
-            F.sum(1 - F.col("ok_wl")).alias("fail_wordlen"),
-            F.sum(1 - F.col("ok_stop")).alias("fail_stopwords"),
-            F.sum(F.col("ok_nw") * F.col("ok_wl") * F.col("ok_stop")).alias(
-                "n_pass"
-            ),
-        )
-
-    merged = _partial_replay(
-        spark,
-        d,
-        "doc_id LONG, lang STRING, source STRING, text STRING",
-        judge,
-        "s56",
-    )
-    return gopher_report_from_slice_partials(merged)
 
 
 @_register("s57_stream_ohlc", _TS["r119_ohlc_resample"])
@@ -3514,59 +3415,9 @@ def s57_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: |days| partial rows per batch; the merge is day-keyed over
     the bounded candle frame. The carried-key trick is the general
     recipe for streaming argmin/argmax."""
-    from .timeseries import ohlc_from_partials
+    from .timeseries import R119, ohlc_from_partials
 
-    d = _events_proj_wire(
-        spark,
-        sf_dir,
-        lambda t: [
-            "event_id",
-            t.cast("long").alias("s"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        ],
-    )
-
-    def candle_partials(b: DataFrame) -> DataFrame:
-        b = b.select(
-            "event_id",
-            "s",
-            (F.col("s") / 86400).cast("long").alias("d"),
-            "cents",
-        )
-        agg = b.groupBy("d").agg(
-            F.expr(
-                "min_by(struct(s, event_id, cents), struct(s, event_id))"
-            ).alias("o"),
-            F.expr(
-                "max_by(struct(s, event_id, cents), struct(s, event_id))"
-            ).alias("cl"),
-            F.max("cents").alias("high_cents"),
-            F.min("cents").alias("low_cents"),
-            F.count("*").alias("n"),
-            F.sum("cents").alias("volume_cents"),
-        )
-        return agg.select(
-            "d",
-            F.col("o.s").alias("open_s"),
-            F.col("o.event_id").alias("open_id"),
-            F.col("o.cents").alias("open_cents"),
-            F.col("cl.s").alias("close_s"),
-            F.col("cl.event_id").alias("close_id"),
-            F.col("cl.cents").alias("close_cents"),
-            "high_cents",
-            "low_cents",
-            "n",
-            "volume_cents",
-        )
-
-    merged = _partial_replay(
-        spark,
-        d,
-        "event_id LONG, s LONG, cents LONG",
-        candle_partials,
-        "s57",
-    )
-    return ohlc_from_partials(merged)
+    return ohlc_from_partials(_replay_events(spark, sf_dir, R119, "s57"))
 
 
 @_register("s58_stream_tukey", _AD["m51_tukey_fences"])
@@ -3581,29 +3432,9 @@ def s58_stream_tukey(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: partial volume is the batch's distinct (type, cents)
     domain; no raw row lands twice; zero streaming state."""
-    from .advanced import tukey_from_hist
+    from .advanced import M51, tukey_from_hist
 
-    ev = load_table(spark, sf_dir, "events")
-
-    wire = ev.select(
-        F.to_json(
-            F.struct(
-                "event_type",
-                F.round(F.col("value") * 100).cast("long").alias("cents"),
-            )
-        ).alias("value")
-    )
-    d = materialize_wire_dir(wire)
-    merged = _partial_replay(
-        spark,
-        d,
-        "event_type STRING, cents LONG",
-        lambda b: b.groupBy("event_type", "cents").agg(
-            F.count("*").alias("c")
-        ),
-        "s58",
-    )
-    return tukey_from_hist(merged)
+    return tukey_from_hist(_replay_events(spark, sf_dir, M51, "s58"))
 
 
 @_register("s59_stream_rings", _R3["r118_cooccurrence_rings"])
@@ -3699,12 +3530,6 @@ def s63_stream_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs d^2."""
     from .llmops import pca_from_moment_partials
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    wire = emb.select(
-        F.to_json(F.struct("vec_id", "embedding")).alias("value")
-    )
-    d = materialize_wire_dir(wire)
-
     def moment_partials(b: DataFrame) -> DataFrame:
         el = b.select(
             "vec_id", F.posexplode("embedding").alias("i0", "x")
@@ -3741,7 +3566,9 @@ def s63_stream_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     merged = _partial_replay(
         spark,
-        d,
+        _events_proj_wire(
+            spark, sf_dir, lambda t: ["vec_id", "embedding"], "embeddings"
+        ),
         "vec_id LONG, embedding ARRAY<DOUBLE>",
         moment_partials,
         "s63",

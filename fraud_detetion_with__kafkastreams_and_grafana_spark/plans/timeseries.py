@@ -18,8 +18,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sessioncache import session_tmp_dir
-from ..sources.tables import event_seconds, load_table
-from .registry import registrar
+from ..sources.tables import events_projection, load_table
+from .registry import EventsRule, registrar
 
 QUERIES, ORACLES, _register = registrar()
 
@@ -231,53 +231,68 @@ _R119_SQL = """
 """
 
 
+def _candle_partials(b: DataFrame) -> DataFrame:
+    """(event_id, s, cents) -> per-day candle partials whose open and
+    close carry their (s, event_id) key, so they merge associatively."""
+    b = b.select(
+        "event_id",
+        "s",
+        (F.col("s") / 86400).cast("long").alias("d"),
+        "cents",
+    )
+    agg = b.groupBy("d").agg(
+        F.expr("min_by(struct(s, event_id, cents), struct(s, event_id))").alias("o"),
+        F.expr("max_by(struct(s, event_id, cents), struct(s, event_id))").alias("cl"),
+        F.max("cents").alias("high_cents"),
+        F.min("cents").alias("low_cents"),
+        F.count("*").alias("n"),
+        F.sum("cents").alias("volume_cents"),
+    )
+    return agg.select(
+        "d",
+        F.col("o.s").alias("open_s"),
+        F.col("o.event_id").alias("open_id"),
+        F.col("o.cents").alias("open_cents"),
+        F.col("cl.s").alias("close_s"),
+        F.col("cl.event_id").alias("close_id"),
+        F.col("cl.cents").alias("close_cents"),
+        "high_cents",
+        "low_cents",
+        "n",
+        "volume_cents",
+    )
+
+
+R119 = EventsRule(
+    lambda t: [
+        "event_id",
+        t.cast("long").alias("s"),
+        F.round(F.col("value") * 100).cast("long").alias("cents"),
+    ],
+    _candle_partials,
+)
+
+
 @_register("r119_ohlc_resample", _R119_SQL)
 def r119_ohlc_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily OHLC (open/high/low/close) + count + volume resample of
     the amount stream — the candlestick downsample every time-series
     store ships (InfluxDB FIRST()/MAX()/MIN()/LAST() over windows;
     the reference's panels use the same fns per README.md:342-356).
-    Open/close need a deterministic event order: (second, event_id)
-    ties are pinned on BOTH engines via twin row_numbers (ascending
-    for open, descending for close) folded into one conditional agg.
+    Open/close need a deterministic event order: the (second,
+    event_id) key, pinned on the oracle by twin row_numbers and here
+    by min_by/max_by over that key — the associative form the s57
+    twin merges micro-batches with.
 
-    Scale: one d-keyed shuffle carries both window passes AND the
-    final agg (same partitioning); high/low/volume are plain
-    map-side-combinable aggregates riding along. Day-domain output.
+    Scale: one d-keyed shuffle carries the partial aggregate and the
+    merge (same partitioning). min_by/max_by keep struct buffers, so
+    Spark runs them as a sort aggregate: one sort on d, where the two
+    row_numbers sorted on (d, s, event_id) twice. Day-domain output.
 
     Reference parity: README.md:342-356 (panel aggregations);
     public OHLC semantics."""
-    ev = load_table(spark, sf_dir, "events")
-    sec = event_seconds()
-    e = ev.select(
-        sec.alias("s"),
-        "event_id",
-        (sec / 86400).cast("long").alias("d"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    w_open = Window.partitionBy("d").orderBy(
-        F.asc("s"), F.asc("event_id")
-    )
-    w_close = Window.partitionBy("d").orderBy(
-        F.desc("s"), F.desc("event_id")
-    )
-    r = e.select(
-        "d",
-        "cents",
-        F.row_number().over(w_open).alias("rn_open"),
-        F.row_number().over(w_close).alias("rn_close"),
-    )
-    return r.groupBy("d").agg(
-        F.min(F.when(F.col("rn_open") == 1, F.col("cents")))
-        .cast("long")
-        .alias("open_cents"),
-        F.max("cents").cast("long").alias("high_cents"),
-        F.min("cents").cast("long").alias("low_cents"),
-        F.min(F.when(F.col("rn_close") == 1, F.col("cents")))
-        .cast("long")
-        .alias("close_cents"),
-        F.count("*").alias("n"),
-        F.sum("cents").cast("long").alias("volume_cents"),
+    return ohlc_from_partials(
+        R119.reduce(events_projection(spark, sf_dir, R119.cols))
     )
 
 

@@ -73,10 +73,14 @@ def event_seconds() -> Column:
 
 
 def events_projection(
-    spark: SparkSession, sf_dir: str, cols: Callable[[Column], list]
+    spark: SparkSession,
+    sf_dir: str,
+    cols: Callable[[Column], list],
+    table: str = "events",
 ) -> DataFrame:
-    """`events` projected to `cols(t)`, where `t` is `event_seconds()`."""
-    return load_table(spark, sf_dir, "events").select(*cols(event_seconds()))
+    """`table` projected to `cols(t)`, where `t` is `event_seconds()`
+    (a column of `events` only)."""
+    return load_table(spark, sf_dir, table).select(*cols(event_seconds()))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

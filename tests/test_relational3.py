@@ -1017,3 +1017,62 @@ def test_event_seconds_equals_untyped_truncation_off_utc(spark, sf_dir):
     assert sorted((r.event_id, r.typed - 20700) for r in utc) == sorted(
         (r.event_id, r.typed) for r in ktm
     )
+
+
+def test_r108_band_tests_the_raw_amount(spark, tmp_path):
+    """r108's band is the oracle's raw `value >= 90 AND value < 100`, not
+    a test on rounded cents: 89.995 (cents 9000) is out of it and 99.996
+    (cents 10000) is in it. r108, its twin s51, the oracle and a
+    brute-force closure agree on user-days that hold both edges."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.plans import (
+        streaming_queries,
+    )
+
+    day = 19_700
+    rows = [  # (user_id, value), all on one day
+        (7, 89.995), (7, 90.00), (7, 99.99), (7, 99.996),
+        (8, 89.995), (8, 89.995), (8, 95.00),
+        (9, 99.996), (9, 99.996),
+    ]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(len(rows)), pa.int64()),
+                "ts": pa.array(
+                    [(day * 86400 + i) * 10**6 for i in range(len(rows))],
+                    pa.timestamp("us"),
+                ),
+                "user_id": pa.array([u for u, _ in rows], pa.int64()),
+                "event_type": pa.array(["purchase"] * len(rows)),
+                "value": pa.array([v for _, v in rows]),
+                "props": pa.array(["{}"] * len(rows)),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    cents = lambda v: int(Decimal(repr(v * 100)).quantize(Decimal(1), ROUND_HALF_UP))
+    band: dict = {}
+    for u, v in rows:
+        if 90.0 <= v < 100.0:
+            n, c = band.get(u, (0, 0))
+            band[u] = (n + 1, c + cents(v))
+    want = {(u, day, n, c) for u, (n, c) in band.items() if n >= 2}
+    assert want == {(7, day, 3, 28999), (9, day, 2, 20000)}
+
+    sf_dir = str(tmp_path)
+    for fn in (
+        relational3.QUERIES["r108_structuring"],
+        streaming_queries.QUERIES["s51_stream_structuring"],
+    ):
+        assert {tuple(r) for r in fn(spark, sf_dir).collect()} == want, fn.__name__
+    con = testing.duckdb_conn(sf_dir)
+    try:
+        oracle = con.execute(relational3.ORACLES["r108_structuring"]).fetchall()
+    finally:
+        con.close()
+    assert set(oracle) == want

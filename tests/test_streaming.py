@@ -1561,6 +1561,14 @@ def test_partial_replay_contract(spark, tmp_path):
     ]
 
 
+class _Stopped(Exception):
+    pass
+
+
+def _stop(*args):
+    raise _Stopped(*args)
+
+
 _MOVED_TWINS = (
     "s26_stream_isotonic_calibration",
     "s28_stream_drift_psi",
@@ -1576,32 +1584,36 @@ _MOVED_TWINS = (
     "s47_stream_equidepth",
     "s48_stream_sliding_median",
     "s49_stream_decayed_leaderboard",
+    "s51_stream_structuring",
+    "s52_stream_equiwidth",
+    "s53_stream_benford",
+    "s54_stream_mom_revenue",
+    "s55_stream_peer_deviation",
+    "s56_stream_gopher_audit",
+    "s57_stream_ohlc",
+    "s58_stream_tukey",
+    "s63_stream_pca",
 )
 
 
 def test_sink_merge_twins_reuse_wire_dirs(spark, sf_dir, monkeypatch):
-    """Every sink-merge twin replays through _partial_replay; s31, s37
-    and s44 share ONE session-cached scoring wire, and re-running any
-    twin adds no entry to the wire-dir cache. The replay itself is
-    stubbed to stop the twin at the call (its wire argument is already
-    built by then) — the replay is pinned by the contract test above
-    and by each twin's equality test."""
+    """Every sink-merge twin replays a session-cached wire dir through
+    _partial_replay; s31, s37 and s44 share ONE scoring wire, and
+    re-running any twin adds no entry to the wire-dir cache. The replay
+    itself is stubbed to stop the twin at the call (its wire argument
+    is already built by then) — the replay is pinned by the contract
+    test above and by each twin's equality test."""
     from fraud_detetion_with__kafkastreams_and_grafana_spark.plans import (
         streaming_queries as SQ,
     )
 
-    class _Replayed(Exception):
-        pass
-
-    def stop(*_args):
-        raise _Replayed
-
     def run(name):
-        with pytest.raises(_Replayed):
+        with pytest.raises(_Stopped) as got:
             SQ.QUERIES[name](spark, sf_dir)
+        assert got.value.args[1] in SQ._WIRE_DIRS.values(), name
 
     monkeypatch.setattr(SQ, "_WIRE_DIRS", {})
-    monkeypatch.setattr(SQ, "_partial_replay", stop)
+    monkeypatch.setattr(SQ, "_partial_replay", _stop)
     for name in ("s31_stream_auc", "s37_stream_threshold_tuning",
                  "s44_stream_average_precision"):
         run(name)
@@ -1613,6 +1625,45 @@ def test_sink_merge_twins_reuse_wire_dirs(spark, sf_dir, monkeypatch):
     for name in _MOVED_TWINS:
         run(name)
         assert SQ._WIRE_DIRS == cached, name
+
+
+def test_drift_twins_share_one_live_half_wire(spark, sf_dir, monkeypatch):
+    """s28 (PSI) and s33 (KS) replay the same post-split live half of
+    m17's split: s28 builds one session-cached wire and s33 reuses it."""
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.plans import (
+        streaming_queries as SQ,
+    )
+
+    monkeypatch.setattr(SQ, "_WIRE_DIRS", {})
+    monkeypatch.setattr(SQ, "_partial_replay", _stop)
+    wires = []
+    for name in ("s28_stream_drift_psi", "s33_stream_ks_drift"):
+        with pytest.raises(_Stopped) as got:
+            SQ.QUERIES[name](spark, sf_dir)
+        wires.append(got.value.args[1])
+    assert list(SQ._WIRE_DIRS.values()) == [wires[0]] == [wires[1]]
+
+
+def test_s50_replays_the_prebuilt_velocity_wire(spark, sf_dir, monkeypatch):
+    """The benchmark's batch_mix set-up (perfbench/workloads.py) builds
+    s50's wire with this exact call before s50 runs; s50 must then find
+    it under the same events key, (applicationId, "proj", sf_dir,
+    str(struct)), and build no wire of its own."""
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.plans import (
+        streaming_queries as SQ,
+    )
+
+    monkeypatch.setattr(SQ, "_WIRE_DIRS", {})
+    SQ._events_proj_wire(spark, sf_dir,
+                         lambda t: ["user_id", t.cast("long").alias("s")])
+    built = dict(SQ._WIRE_DIRS)
+    (key,) = built
+    assert len(key) == 4 and key[1:3] == ("proj", sf_dir)
+    monkeypatch.setattr(SQ, "_partial_replay", _stop)
+    with pytest.raises(_Stopped) as got:
+        SQ.QUERIES["s50_stream_velocity"](spark, sf_dir)
+    assert SQ._WIRE_DIRS == built
+    assert got.value.args[1] == built[key]
 
 
 # (streaming twin, batch query) pairs that share one EventsRule.
@@ -1642,21 +1693,21 @@ _RULE_TWINS = [
     ("s84_stream_trend_test", "m73_cochran_armitage"),
     ("s86_stream_grubbs", "m82_grubbs_extremes"),
     ("s87_stream_reach_curve", "r131_reach_curve"),
+    ("s51_stream_structuring", "r108_structuring"),
+    ("s52_stream_equiwidth", "r114_equiwidth_histogram"),
+    ("s53_stream_benford", "m42_benford_first_digit"),
+    ("s54_stream_mom_revenue", "r115_period_over_period"),
+    ("s56_stream_gopher_audit", "l98_gopher_quality_rules"),
+    ("s57_stream_ohlc", "r119_ohlc_resample"),
+    ("s58_stream_tukey", "m51_tukey_fences"),
+    ("s85_stream_wilson", "m79_wilson_intervals"),
 ]
-
-
-class _Stopped(Exception):
-    pass
-
-
-def _stop(*args):
-    raise _Stopped(*args)
 
 
 @pytest.mark.parametrize("twin, batch", _RULE_TWINS)
 def test_rule_twins_replay_their_batch_rule(spark, sf_dir, monkeypatch, twin, batch):
     """Each twin replays its batch query's own EventsRule: the batch query
-    projects events with the rule's `cols`, and the twin hands
+    projects the rule's table with the rule's `cols`, and the twin hands
     `_partial_replay` the wire of that projection, the rule's `reduce`
     object and the projection's own schema (no hand-typed DDL). Both
     queries are stopped at the call; the replay is pinned by the
@@ -1680,11 +1731,12 @@ def test_rule_twins_replay_their_batch_rule(spark, sf_dir, monkeypatch, twin, ba
     monkeypatch.setattr(mod, "events_projection", _stop)
     with pytest.raises(_Stopped) as got:
         mod.QUERIES[batch](spark, sf_dir)
-    cols = got.value.args[2]
+    _spark, _sf_dir, cols, *table = got.value.args
     (rule,) = [
         r for r in vars(mod).values()
         if isinstance(r, EventsRule) and r.cols is cols
     ]
+    assert (table or ["events"]) == [rule.table]
 
     monkeypatch.setattr(SQ, "_partial_replay", _stop)
     with pytest.raises(_Stopped) as got:
@@ -1692,8 +1744,8 @@ def test_rule_twins_replay_their_batch_rule(spark, sf_dir, monkeypatch, twin, ba
     _spark, wire, schema, reduce_fn, prefix = got.value.args
     assert reduce_fn is rule.reduce
     assert isinstance(schema, StructType)
-    assert schema == events_projection(spark, sf_dir, rule.cols).schema
-    assert wire == SQ._events_proj_wire(spark, sf_dir, rule.cols)
+    assert schema == events_projection(spark, sf_dir, rule.cols, rule.table).schema
+    assert wire == SQ._events_proj_wire(spark, sf_dir, rule.cols, rule.table)
     assert prefix == twin.split("_", 1)[0]
 
 

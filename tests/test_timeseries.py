@@ -91,48 +91,23 @@ def test_r119_ohlc_brute(spark, sf_dir):
 
 def test_ohlc_partials_merge_invariant_to_batching(spark, sf_dir):
     """The carried-key argmin/argmax merge must be invariant to HOW
-    events are batched: partials built over three arbitrary,
+    events are batched: R119's partials built over three arbitrary,
     non-chronological splits (event_id % 3) must merge to exactly the
     batch r119 result."""
     from pyspark.sql import functions as F
 
     from fraud_detetion_with__kafkastreams_and_grafana_spark.plans.timeseries import (
+        R119,
         ohlc_from_partials,
     )
-    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import event_seconds, load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    sec = event_seconds()
-    e = ev.select(
-        "event_id",
-        sec.alias("s"),
-        (sec / 86400).cast("long").alias("d"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import (
+        events_projection,
     )
 
+    e = events_projection(spark, sf_dir, R119.cols)
+
     def partial(part):
-        b = e.where(F.col("event_id") % 3 == part)
-        agg = b.groupBy("d").agg(
-            F.expr("min_by(struct(s, event_id, cents), struct(s, event_id))").alias("o"),
-            F.expr("max_by(struct(s, event_id, cents), struct(s, event_id))").alias("cl"),
-            F.max("cents").alias("high_cents"),
-            F.min("cents").alias("low_cents"),
-            F.count("*").alias("n"),
-            F.sum("cents").alias("volume_cents"),
-        )
-        return agg.select(
-            "d",
-            F.col("o.s").alias("open_s"),
-            F.col("o.event_id").alias("open_id"),
-            F.col("o.cents").alias("open_cents"),
-            F.col("cl.s").alias("close_s"),
-            F.col("cl.event_id").alias("close_id"),
-            F.col("cl.cents").alias("close_cents"),
-            "high_cents",
-            "low_cents",
-            "n",
-            "volume_cents",
-        )
+        return R119.reduce(e.where(F.col("event_id") % 3 == part))
 
     merged = ohlc_from_partials(
         partial(0).unionAll(partial(1)).unionAll(partial(2))
