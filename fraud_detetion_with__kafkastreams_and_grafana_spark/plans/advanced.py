@@ -1682,6 +1682,17 @@ def m14_pairwise_preference_trainer(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
+def score_wire(t):
+    """(event_type, value, hr): the m04 scoring inputs, with the hour
+    taken producer-side, so a replayed wire never re-derives calendar
+    fields from a re-parsed timestamp."""
+    return [
+        F.col("event_type"),
+        F.col("value"),
+        F.hour("ts").cast("long").alias("hr"),
+    ]
+
+
 @_register(
     "m15_isotonic_calibration",
     f"""
@@ -1745,18 +1756,16 @@ def m15_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-size regardless of corpus — O(B^2) pairs with B fixed at
     51, the textbook reduction of a sequential PAV sweep to a bounded
     relational closed form."""
-    from pyspark.sql.window import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    return isotonic_fit(m15_score_buckets(ev))
+    return isotonic_fit(M15.reduce(events_projection(spark, sf_dir, M15.cols)))
 
 
 def m15_score_buckets(ev: DataFrame) -> DataFrame:
-    """The corpus-sized half of m15: one narrow scan aggregated to <=51
-    (bucket, n, k) rows — associative, so partial bucket counts from
-    independent slices (micro-batches, partitions, days) merge by
-    summation into the identical frame (the property s26 deploys)."""
-    score = F.round(_m04_p(), 6)
+    """The corpus-sized half of m15: `score_wire` rows (hour in `hr`)
+    aggregated to <=51 (bucket, n, k) rows — associative, so partial
+    bucket counts from independent slices (micro-batches, partitions,
+    days) merge by summation into the identical frame (the property
+    s26 deploys)."""
+    score = F.round(_m04_p(F.col("hr")), 6)
     return (
         ev.select(
             score.alias("score"),
@@ -1772,11 +1781,19 @@ def m15_score_buckets(ev: DataFrame) -> DataFrame:
     )
 
 
+# The scoring wire -> m15's (bucket, n, k) calibration counts (twin s26).
+M15 = EventsRule(score_wire, m15_score_buckets)
+
+
 def isotonic_fit(b: DataFrame) -> DataFrame:
-    """The bounded half of m15: minimax isotonic regression over a
-    (bucket, n, k) frame — see m15_isotonic_calibration's docstring."""
+    """The bounded half of m15: merge (bucket, n, k) partials, then
+    minimax isotonic regression over them — see
+    m15_isotonic_calibration's docstring. Shared by the s26 twin."""
     from pyspark.sql.window import Window
 
+    b = b.groupBy("bucket").agg(
+        F.sum("n").cast("long").alias("n"), F.sum("k").cast("long").alias("k")
+    )
     # <=51 rows from here on: the single-partition window is bounded by
     # construction (bucket count is fixed, not corpus-sized)
     w = Window.orderBy("bucket")
@@ -2332,15 +2349,15 @@ def m18_exact_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's strict >10000 rule (TransactionProcessor.java:43-51)
     hard-codes — how good is the score at separating fraud from clean
     across ALL thresholds."""
-    ev = load_table(spark, sf_dir, "events")
-    per = m18_score_counts(ev).localCheckpoint()
-    return m18_auc_from_counts(per)
+    return m18_auc_from_counts(
+        SCORE_HIST.reduce(events_projection(spark, sf_dir, SCORE_HIST.cols))
+    )
 
 
 def m18_score_counts(df: DataFrame, hour_col=None) -> DataFrame:
     """Per-(event_type, rounded score) positive/negative counts — the
-    bounded AUC histogram. Associative, so the streaming twin (s31)
-    sums per-batch partials of this exact shape."""
+    bounded AUC histogram. Associative, so partials of this exact shape
+    merge by summation (`merge_score_hist`)."""
     s = F.round(_m04_p(hour_col), 6)
     y = (F.col("value") > F.lit(float(EVENTS_FRAUD_THRESHOLD))).cast("long")
     sc = df.select(F.col("event_type"), s.alias("s"), y.alias("y"))
@@ -2350,11 +2367,34 @@ def m18_score_counts(df: DataFrame, hour_col=None) -> DataFrame:
     )
 
 
+# The scoring wire -> the (event_type, s, n_pos_s, n_neg_s) score
+# histogram: m18, m24 and m35 (and their twins s31, s37, s44) reduce to it.
+SCORE_HIST = EventsRule(
+    score_wire, lambda e: m18_score_counts(e, hour_col=F.col("hr"))
+)
+
+
+def merge_score_hist(per: DataFrame) -> DataFrame:
+    """Sum (event_type, s, n_pos_s, n_neg_s) partials per (type, score);
+    checkpointed, since every report reads the bounded histogram twice
+    (per type and 'ALL')."""
+    return (
+        per.groupBy("event_type", "s")
+        .agg(
+            F.sum("n_pos_s").cast("long").alias("n_pos_s"),
+            F.sum("n_neg_s").cast("long").alias("n_neg_s"),
+        )
+        .localCheckpoint()
+    )
+
+
 def m18_auc_from_counts(per: DataFrame) -> DataFrame:
-    """(event_type, s, n_pos_s, n_neg_s) histogram -> the per-segment +
-    ALL exact-AUC report. Shared by m18 and the streaming s31."""
+    """(event_type, s, n_pos_s, n_neg_s) histogram partials -> the
+    per-segment + ALL exact-AUC report. Shared by m18 and the streaming
+    s31."""
     from pyspark.sql.window import Window
 
+    per = merge_score_hist(per)
     seg = per.select(
         F.col("event_type").alias("segment"), "s", "n_pos_s", "n_neg_s"
     ).unionAll(
@@ -3479,18 +3519,18 @@ def m24_threshold_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the argmax both run per-segment windows over that bounded
     frame. No corpus-sized sort — the classic sort-all-scores sweep is
     exactly what this histogram formulation replaces."""
-    ev = load_table(spark, sf_dir, "events")
-    per = m18_score_counts(ev).localCheckpoint()
-    return m24_report_from_counts(per)
+    return m24_report_from_counts(
+        SCORE_HIST.reduce(events_projection(spark, sf_dir, SCORE_HIST.cols))
+    )
 
 
 def m24_report_from_counts(per: DataFrame) -> DataFrame:
-    """(event_type, s, n_pos_s, n_neg_s) histogram -> the per-segment +
-    ALL utility-optimal threshold report. Shared by the batch tuner
-    (m24) and its streaming deployment (s37), which merges per-batch
-    histogram partials (associative) before the identical sweep."""
+    """(event_type, s, n_pos_s, n_neg_s) histogram partials -> the
+    per-segment + ALL utility-optimal threshold report. Shared by the
+    batch tuner (m24) and its streaming deployment (s37)."""
     from pyspark.sql.window import Window
 
+    per = merge_score_hist(per)
     seg = per.select(
         F.col("event_type").alias("segment"), "s", "n_pos_s", "n_neg_s"
     ).unionAll(
@@ -3854,8 +3894,9 @@ def m26_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference dashboards compare static tiles by
     eye; this is the statistical form of that comparison (no reference
     equivalent; public experimentation methodology)."""
-    ev = load_table(spark, sf_dir, "events")
-    return m26_report_from_arm_stats(m26_arm_stats(ev))
+    return m26_report_from_arm_stats(
+        M26.reduce(events_projection(spark, sf_dir, M26.cols))
+    )
 
 
 def m26_arm_stats(ev: DataFrame) -> DataFrame:
@@ -3876,9 +3917,21 @@ def m26_arm_stats(ev: DataFrame) -> DataFrame:
     )
 
 
+# (event_type, user_id, value) -> m26's arm stats (twin s38).
+M26 = EventsRule(
+    lambda t: [F.col("event_type"), F.col("user_id"), F.col("value")],
+    m26_arm_stats,
+)
+
+
 def m26_report_from_arm_stats(per: DataFrame) -> DataFrame:
-    """Merged (segment, arm, n, s, q) stats -> the per-segment + ALL
+    """(segment, arm, n, s, q) stat partials -> the per-segment + ALL
     experiment report. Shared by m26 and its streaming monitor (s38)."""
+    per = (
+        per.groupBy("segment", "arm")
+        .agg(F.sum("n").alias("n"), F.sum("s").alias("s"), F.sum("q").alias("q"))
+        .localCheckpoint()
+    )
     agg = per.unionByName(
         per.groupBy("arm")
         .agg(F.sum("n").alias("n"), F.sum("s").alias("s"),
@@ -4116,17 +4169,20 @@ def m28_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the sequential upgrade of the reference's
     FOR-duration Grafana alert (dashboards.json, q8); public
     methodology (Page 1954)."""
+    return cusum_from_daily(
+        DAILY_CENTS.reduce(events_projection(spark, sf_dir, DAILY_CENTS.cols))
+    )
+
+
+def cusum_from_daily(daily: DataFrame) -> DataFrame:
+    """(d, x) daily cents partials -> m28's alarm trace. Shared by the
+    s39 twin."""
     from pyspark.sql.window import Window
 
-    ev = load_table(spark, sf_dir, "events")
-    day = (
-        F.unix_timestamp(F.date_trunc("day", F.col("ts")).cast("timestamp"))
-        / F.lit(86400)
-    ).cast("long")
-    d = ev.groupBy(day.alias("d")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long"))
-        .cast("long")
-        .alias("day_cents")
+    d = (
+        daily.groupBy("d")
+        .agg(F.sum("x").cast("long").alias("day_cents"))
+        .localCheckpoint()  # day-bounded
     )
     w = Window.orderBy("d").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -4988,18 +5044,19 @@ def m35_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: the PR-side evaluation of the reference's
     hard-coded >10000 rule, as m18 is its ROC side."""
-    ev = load_table(spark, sf_dir, "events")
-    per = m18_score_counts(ev).localCheckpoint()
-    return m35_ap_from_counts(per)
+    return m35_ap_from_counts(
+        SCORE_HIST.reduce(events_projection(spark, sf_dir, SCORE_HIST.cols))
+    )
 
 
 def m35_ap_from_counts(per: DataFrame) -> DataFrame:
-    """(event_type, s, n_pos_s, n_neg_s) histogram -> per-segment + ALL
-    exact average precision. Split from m35 so the brute-force closure
-    (tests/test_properties.py) and any streaming twin can share it —
-    the m18_auc_from_counts pattern."""
+    """(event_type, s, n_pos_s, n_neg_s) histogram partials ->
+    per-segment + ALL exact average precision. Split from m35 so the
+    brute-force closure (tests/test_properties.py) and the streaming
+    twin (s44) share it — the m18_auc_from_counts pattern."""
     from pyspark.sql.window import Window
 
+    per = merge_score_hist(per)
     seg = per.select(
         F.col("event_type").alias("segment"), "s", "n_pos_s", "n_neg_s"
     ).unionAll(
@@ -5377,15 +5434,17 @@ def m38_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the uncertainty quantification the reference's
     Grafana mean tiles (Q2/Q5) silently lack; public Poisson-bootstrap
     methodology (Chamandy et al. 2012)."""
-    from pyspark.sql.window import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    r = ev.select(
-        "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-        "event_id",
+    return m38_ci_from_partials(
+        M38.reduce(events_projection(spark, sf_dir, M38.cols))
     )
-    r = r.localCheckpoint()  # feeds the replicate explode AND full means
+
+
+def m38_partials(r: DataFrame) -> DataFrame:
+    """(event_type, cents, event_id) rows -> (event_type, b, s, n):
+    each replicate b's weighted cents sum and weight total, plus the
+    full-sample cents sum and row count tagged b = -1. All sums, so
+    partials from independent slices merge by keyed summation."""
+    r = r.localCheckpoint()  # feeds the replicate explode AND full sums
     w = (
         r.select(
             "event_type",
@@ -5407,20 +5466,35 @@ def m38_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("w").cast("long").alias("n"),
     )
     full_ = r.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n_rows"),
-        F.expr(
-            "CAST((1000000 * sum(cents)) div count(*) AS BIGINT)"
-        ).alias("mean_micro"),
+        F.lit(-1).alias("b"),
+        F.sum("cents").cast("long").alias("s"),
+        F.count("*").cast("long").alias("n"),
     )
-    return m38_ci_from_reps(rep, full_)
+    return rep.unionByName(full_)
 
 
-def m38_ci_from_reps(rep: DataFrame, full_: DataFrame) -> DataFrame:
-    """(event_type, b, s, n) replicate partials + full-sample stats ->
-    the CI report. Split from m38 so the streaming twin (s46) merges
-    per-batch partials into the identical tail."""
+# (event_type, cents, event_id) -> m38's tagged partials (twin s46).
+M38 = EventsRule(
+    lambda t: [F.col("event_type"), _cents(), F.col("event_id")], m38_partials
+)
+
+
+def m38_ci_from_partials(parts: DataFrame) -> DataFrame:
+    """(event_type, b, s, n) partials -> the CI report. Shared by m38
+    and the streaming twin (s46)."""
     from pyspark.sql.window import Window
 
+    merged = (
+        parts.groupBy("event_type", "b")
+        .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+        .localCheckpoint()
+    )
+    rep = merged.where(F.col("b") >= 0)
+    full_ = merged.where(F.col("b") == -1).select(
+        "event_type",
+        F.col("n").cast("long").alias("n_rows"),
+        F.expr("CAST((1000000 * s) div n AS BIGINT)").alias("mean_micro"),
+    )
     means = (
         rep.where(F.col("n") > 0)
         .withColumn("m", F.expr("CAST((1000000 * s) div n AS BIGINT)"))
@@ -7111,8 +7185,8 @@ _M56_SQL = f"""
 """
 
 
-# (d, cents) -> daily cents x: m56, m69, m72 and m80 (and their twins
-# s62, s76, s75, s82) all reduce to this one day-domain frame.
+# (d, cents) -> daily cents x: m28, m56, m69, m72 and m80 (and their
+# twins s39, s62, s76, s75, s82) all reduce to this one day-domain frame.
 DAILY_CENTS = EventsRule(
     day_cents, lambda e: e.groupBy("d").agg(F.sum("cents").alias("x"))
 )

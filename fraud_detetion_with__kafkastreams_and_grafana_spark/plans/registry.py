@@ -45,10 +45,11 @@ class EventsRule(NamedTuple):
     `events`), where `t` is the epoch-second column
     `sources.tables.event_seconds` (only `events` rules use it);
     `reduce(frame)` maps a frame of those columns to associative
-    partials. The batch query reduces `events_projection(.., cols,
-    table)` once; the twin reduces each replayed micro-batch of the same
-    projection (`streaming_queries._replay_events`) and merges the
-    partials."""
+    partials, and owns their null handling: both sides hand it every
+    row. The batch query reduces `events_projection(.., cols, table)`
+    once; the twin reduces each replayed micro-batch of the same
+    projection (`streaming_queries._replay_events`). One shared tail
+    merges either side's partials."""
 
     cols: Callable[[Column], list]
     reduce: Callable[[DataFrame], DataFrame]
@@ -133,6 +134,11 @@ _REWRITTEN: dict[str, int] = {
     # composes r108), and s51, whose band now tests the raw amount
     "r108": 13, "r114": 13, "r119": 13, "m42": 13, "m79": 13, "l98": 13,
     "r121": 13, "s51": 13,
+    # s63 parses its wire with the projection's own array<float> schema
+    "s63": 13,
+    # batch rows moved onto the EventsRule their twin replays
+    "m15": 13, "m18": 13, "m24": 13, "m35": 13, "r88": 13, "m26": 13,
+    "m28": 13, "m38": 13,
 }
 
 

@@ -2543,14 +2543,14 @@ def funnel_report_from_counts(c: DataFrame) -> DataFrame:
 _R88_HOLD = 300  # activity interval length: [t, t+300s)
 
 
-def _r88_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(bt, delta, day): per-second net interval-boundary deltas — both
-    boundaries inline from ONE corpus scan (vs a union's two), collapsed
-    by a map-side-combined hash aggregate."""
-    ev = load_table(spark, sf_dir, "events")
-    t = event_seconds().cast("long")
+def _r88_delta_partials(e: DataFrame) -> DataFrame:
+    """(t) event seconds -> (bt, delta): per-second net interval-boundary
+    deltas — both boundaries inline from ONE scan (vs a union's two),
+    collapsed by a map-side-combined hash aggregate. Deltas are sums,
+    so partials merge by keyed summation."""
+    t = F.col("t")
     return (
-        ev.select(
+        e.select(
             F.explode(
                 F.array(
                     F.struct(t.alias("bt"), F.lit(1).alias("dl")),
@@ -2564,8 +2564,17 @@ def _r88_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("e.bt", "e.dl")
         .groupBy("bt")
         .agg(F.sum("dl").cast("long").alias("delta"))
-        .withColumn("day", F.expr("bt div 86400"))
     )
+
+
+# (t) -> r88's boundary deltas (twin s30).
+R88 = EventsRule(lambda t: [t.cast("long").alias("t")], _r88_delta_partials)
+
+
+def _r88_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(bt, delta) over the whole events table."""
+    return R88.reduce(events_projection(spark, sf_dir, R88.cols))
+
 
 _R88_ORACLE = f"""
     WITH d AS (
@@ -2613,17 +2622,21 @@ def r88_interval_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the exact-instant generalization of the
     reference dashboard's 10s histogram (Q4) and FOR-duration alert
     (q8) — both discretize time; the sweep line does not."""
-    # bounded by the time span in seconds, not the corpus; checkpointed
-    # so the one corpus scan runs once (it feeds intra-day sums AND the
-    # day offsets)
-    d = _r88_deltas(spark, sf_dir).localCheckpoint()
-    return r88_report_from_deltas(d)
+    return r88_report_from_deltas(_r88_deltas(spark, sf_dir))
 
 
 def r88_report_from_deltas(d: DataFrame) -> DataFrame:
-    """(bt, delta, day) deltas -> the top-10 concurrency report. Shared
-    by the batch sweep line (r88) and its streaming twin (s30), which
-    must emit the identical shape from merged per-batch partials."""
+    """(bt, delta) delta partials -> the top-10 concurrency report.
+    Shared by the batch sweep line (r88) and its streaming twin (s30)."""
+    # bounded by the time span in seconds, not the corpus; checkpointed
+    # so the scan under it runs once (it feeds intra-day sums AND the
+    # day offsets)
+    d = (
+        d.groupBy("bt")
+        .agg(F.sum("delta").cast("long").alias("delta"))
+        .withColumn("day", F.expr("bt div 86400"))
+        .localCheckpoint()
+    )
     run = segmented_running_sum(d, "day", "bt", "delta", "concurrency")
     return (
         run.select("bt", F.col("concurrency").cast("long").alias("concurrency"))

@@ -22,35 +22,37 @@ projection expression, so twins reading the same projection share one
 dir (s26/s31/s37/s44 share the scoring wire). Filtered or joined wires
 (s28/s33's post-split live half, s42, s47, s55) are built once per
 session through `_session_wire` too. `_partial_replay` replays the dir
-as 2 micro-batches, parses each with the twin's schema, drops rows
-whose FIRST schema field is null, reduces the batch with the twin's
-`reduce_fn` to bounded associative partials and lands them as one file
-per batch through `replay_foreach_batch` (streaming/replay.py), the
-one foreachBatch lifecycle: each batch overwrites its own `_batch_id`
-partition (dynamic overwrite, idempotent), and the landed frame feeds
-the batch query's shared tail.
+as 2 micro-batches, parses each with the twin's schema, reduces every
+parsed row (nulls included) with the twin's `reduce_fn` to bounded
+associative partials and lands them as one file per batch through
+`replay_foreach_batch` (streaming/replay.py), the one foreachBatch
+lifecycle: each batch overwrites its own `_batch_id` partition
+(dynamic overwrite, idempotent), and the landed frame feeds the batch
+query's shared tail, which merges the partials.
 
-Twins of a mergeable rule (s48, s49, s51-s54, s56-s62, s64-s78, s82,
-s84-s87) write no query of their own. Their batch query's
-`EventsRule(cols, reduce, table)` (plans/registry.py, defined beside
-the tail in its plan module) is the one definition: the batch query
-runs `tail(rule.reduce(events_projection(.., rule.cols, rule.table)))`;
+Twins of a mergeable rule (s26, s30, s31, s37-s39, s44, s46, s48,
+s49, s51-s54, s56-s62, s64-s78, s82, s84-s87) write no query of their
+own. Their batch query's `EventsRule(cols, reduce, table)`
+(plans/registry.py, defined beside the tail in its plan module) is the
+one definition: the batch query runs
+`tail(rule.reduce(events_projection(.., rule.cols, rule.table)))`;
 the twin runs `tail(_replay_events(.., rule, prefix))`, which replays
 the projection's wire, parses it with the projection's own schema and
 reduces each micro-batch with the same `rule.reduce`. Two pairs stay
-written twice, because no one-table rule fits them: s55's wire is an
-orders x customer join (r111's), and s63 parses `embeddings.embedding`
-(array<float>) as ARRAY<DOUBLE>, the parse its raw-double oracle
-`_PCA_RAW_SQL` was made green against, while its batch row l102
-quantizes its output and keeps its moment partials as two frames.
+written twice: s55's wire is an orders x customer join (r111's), which
+no one-table rule fits, and s63 keeps its own reduce, one tagged frame
+where its batch row l102 reduces to two frames and quantizes its
+output. s63 still parses `embeddings.embedding` with the projection's
+own schema (array<float>), widened to double as l102 widens it.
 
-Twins whose per-batch work does not fit the parse/filter/coalesce
+Twins whose per-batch work does not fit the parse/reduce/coalesce
 contract pass their own per-batch function to `replay_foreach_batch`:
   s23, s27, s36: request-atomic services probing static index tables;
        each batch lands one answer per request, which no key domain
        bounds, so a one-file-per-batch write is not safe for them.
-  s34, s35: no null filter — r90's audit and r91's n_nulls count the
-       rows a first-field filter would drop.
+  s34, s35: their partials are keyed by (orderkey, linenumber) and
+       by (column, value), which grow with the rows in the batch, so
+       no key domain bounds the one-file-per-batch write.
   s40: its (50-doc bucket, token) partial grows with the documents in
        the batch, so no key domain bounds the one-file-per-batch write.
   s41: folds per-batch deltas in `_batch_id` order.
@@ -188,16 +190,18 @@ def _events_proj_wire(
 
 
 def _partial_replay(spark, wire_dir, schema, reduce_fn, prefix):
-    """Run the standard partial-merge replay: parse wire JSON, drop rows
-    whose first schema field is null, reduce each micro-batch with
-    reduce_fn, land it through replay_foreach_batch, return the merged
-    parquet frame."""
+    """Run the standard partial-merge replay: parse each micro-batch's
+    wire JSON with `schema`, reduce it with reduce_fn, land it through
+    replay_foreach_batch, return the landed partials. Every parsed row
+    reaches reduce_fn, nulls included: null handling is the reduce's,
+    the same in the batch query. Our own `to_json` writes every wire,
+    so a line that does not parse fails the replay (FAILFAST) instead
+    of reducing as an all-null row."""
 
     def land(batch_df: DataFrame) -> DataFrame:
-        b = batch_df.select(F.from_json("value", schema).alias("r")).select(
-            "r.*"
-        )
-        b = b.where(b.columns[0] + " IS NOT NULL")
+        b = batch_df.select(
+            F.from_json("value", schema, {"mode": "FAILFAST"}).alias("r")
+        ).select("r.*")
         # coalesce(1): every reduce_fn lands BOUNDED keyed partials
         # (that is the twins' merge contract), so one output file
         # per batch — measured ~0.4 s/query off the replay floor
@@ -1839,41 +1843,6 @@ def s25_stream_cep_kleene(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _score_wire(t):
-    """(event_type, value, producer-side hour): the m04 scoring inputs.
-    The wire serializes the hour, so consumers never re-derive calendar
-    fields from a re-parsed timestamp; s26, s31, s37 and s44 replay this
-    one session-cached dir."""
-    return [
-        F.col("event_type"),
-        F.col("value"),
-        F.hour("ts").cast("long").alias("hr"),
-    ]
-
-
-def _score_hist(spark: SparkSession, sf_dir: str, prefix: str) -> DataFrame:
-    """Merged (event_type, s, n_pos_s, n_neg_s) m04-score histogram
-    replayed from the scoring wire: the associative partial behind the
-    AUC (s31), threshold (s37) and AP (s44) monitors."""
-    from .advanced import m18_score_counts
-
-    return (
-        _partial_replay(
-            spark,
-            _events_proj_wire(spark, sf_dir, _score_wire),
-            "value DOUBLE, event_type STRING, hr LONG",
-            lambda b: m18_score_counts(b, hour_col=F.col("hr")),
-            prefix,
-        )
-        .groupBy("event_type", "s")
-        .agg(
-            F.sum("n_pos_s").cast("long").alias("n_pos_s"),
-            F.sum("n_neg_s").cast("long").alias("n_neg_s"),
-        )
-        .localCheckpoint()
-    )
-
-
 @_register("s26_stream_isotonic_calibration", _AD["m15_isotonic_calibration"])
 def s26_stream_isotonic_calibration(
     spark: SparkSession, sf_dir: str
@@ -1893,32 +1862,9 @@ def s26_stream_isotonic_calibration(
     the minimax stays constant-size. Recalibration cost is independent
     of stream length, which is why production fits FROM the running
     bucket counts instead of re-scanning history."""
-    from .advanced import isotonic_fit, m15_score_buckets
+    from .advanced import M15, isotonic_fit
 
-    def fit_counts(b: DataFrame) -> DataFrame:
-        # rebuild the ts-derived hour as a literal timestamp column so
-        # m15_score_buckets' F.hour("ts") sees the original value
-        return m15_score_buckets(
-            b.withColumn(
-                "ts",
-                F.to_timestamp(
-                    F.format_string("2024-01-01 %02d:00:00", F.col("hr"))
-                ),
-            )
-        )
-
-    merged = (
-        _partial_replay(
-            spark,
-            _events_proj_wire(spark, sf_dir, _score_wire),
-            "value DOUBLE, hr INT, event_type STRING",
-            fit_counts,
-            "s26",
-        )
-        .groupBy("bucket")
-        .agg(F.sum("n").cast("long").alias("n"), F.sum("k").cast("long").alias("k"))
-    )
-    return isotonic_fit(merged.localCheckpoint())
+    return isotonic_fit(_replay_events(spark, sf_dir, M15, "s26"))
 
 
 @_register("s27_stream_ann_probe", _LL["l75_ann_recall_eval"])
@@ -1967,20 +1913,23 @@ def s27_stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _live_half_replay(spark, sf_dir, split_s, reduce_fn, prefix):
     """Replay the live half of m17's split (events at or after
-    `split_s`) as (value, event_type) records through `_partial_replay`.
-    s28 and s33 share its one session-cached wire, keyed on `split_s`."""
-
-    def build() -> str:
-        ev = load_table(spark, sf_dir, "events")
-        live = ev.where(event_seconds() >= F.lit(split_s))
-        return materialize_wire_dir(
-            live.select(F.to_json(F.struct("event_type", "value")).alias("value"))
-        )
-
-    wire = _session_wire(spark, "live_half", sf_dir, build, split_s)
-    return _partial_replay(
-        spark, wire, "value DOUBLE, event_type STRING", reduce_fn, prefix
+    `split_s`) as (event_type, value) records through `_partial_replay`,
+    parsed with the schema of the frame the wire serializes. s28 and
+    s33 share its one session-cached wire, keyed on `split_s`."""
+    ev = load_table(spark, sf_dir, "events")
+    live = ev.where(event_seconds() >= F.lit(split_s)).select(
+        "event_type", "value"
     )
+    wire = _session_wire(
+        spark,
+        "live_half",
+        sf_dir,
+        lambda: materialize_wire_dir(
+            live.select(F.to_json(F.struct(*live.columns)).alias("value"))
+        ),
+        split_s,
+    )
+    return _partial_replay(spark, wire, live.schema, reduce_fn, prefix)
 
 
 @_register("s28_stream_drift_psi", _AD["m17_psi_drift"])
@@ -2133,44 +2082,9 @@ def s30_stream_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of traffic; re-deriving the dashboard costs the bounded
     delta frame (time-span seconds), which is why a production monitor
     can re-rank concurrency every refresh tick."""
-    from .relational3 import _R88_HOLD, r88_report_from_deltas
+    from .relational3 import R88, r88_report_from_deltas
 
-    def delta_partials(b: DataFrame) -> DataFrame:
-        return (
-            b.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.col("t").alias("bt"), F.lit(1).alias("dl")
-                        ),
-                        F.struct(
-                            (F.col("t") + _R88_HOLD).alias("bt"),
-                            F.lit(-1).alias("dl"),
-                        ),
-                    )
-                ).alias("e")
-            )
-            .select("e.bt", "e.dl")
-            .groupBy("bt")
-            .agg(F.sum("dl").cast("long").alias("delta"))
-        )
-
-    merged = (
-        _partial_replay(
-            spark,
-            _events_proj_wire(
-                spark, sf_dir, lambda t: [t.cast("long").alias("t")]
-            ),
-            "t LONG",
-            delta_partials,
-            "s30",
-        )
-        .groupBy("bt")
-        .agg(F.sum("delta").cast("long").alias("delta"))
-        .withColumn("day", F.expr("bt div 86400"))
-        .localCheckpoint()
-    )
-    return r88_report_from_deltas(merged)
+    return r88_report_from_deltas(_replay_events(spark, sf_dir, R88, "s30"))
 
 
 @_register("s31_stream_auc", _AD["m18_exact_auc"])
@@ -2194,9 +2108,9 @@ def s31_stream_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sink grows by that per batch; re-deriving AUC costs the
     bounded histogram, which is why a live dashboard can re-rank the
     model every refresh tick."""
-    from .advanced import m18_auc_from_counts
+    from .advanced import SCORE_HIST, m18_auc_from_counts
 
-    return m18_auc_from_counts(_score_hist(spark, sf_dir, "s31"))
+    return m18_auc_from_counts(_replay_events(spark, sf_dir, SCORE_HIST, "s31"))
 
 
 @_register("s33_stream_ks_drift", _AD["m22_ks_drift"])
@@ -2497,9 +2411,11 @@ def s37_stream_threshold_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: zero streaming state; per batch the sink grows by the
     distinct (type, score) rows of that batch; re-optimizing costs the
     codomain-bounded histogram sweep."""
-    from .advanced import m24_report_from_counts
+    from .advanced import SCORE_HIST, m24_report_from_counts
 
-    return m24_report_from_counts(_score_hist(spark, sf_dir, "s37"))
+    return m24_report_from_counts(
+        _replay_events(spark, sf_dir, SCORE_HIST, "s37")
+    )
 
 
 @_register("s38_stream_ab_monitor", _AD["m26_ab_test"])
@@ -2517,29 +2433,9 @@ def s38_stream_ab_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: zero streaming state; the sink grows by <= 2 x |types| rows
     per batch; re-evaluating the experiment costs a ~12-row frame."""
-    from .advanced import m26_arm_stats, m26_report_from_arm_stats
+    from .advanced import M26, m26_report_from_arm_stats
 
-    merged = (
-        _partial_replay(
-            spark,
-            _events_proj_wire(
-                spark,
-                sf_dir,
-                lambda t: [F.col("event_type"), F.col("user_id"), F.col("value")],
-            ),
-            "value DOUBLE, event_type STRING, user_id BIGINT",
-            m26_arm_stats,
-            "s38",
-        )
-        .groupBy("segment", "arm")
-        .agg(
-            F.sum("n").alias("n"),
-            F.sum("s").alias("s"),
-            F.sum("q").alias("q"),
-        )
-        .localCheckpoint()
-    )
-    return m26_report_from_arm_stats(merged)
+    return m26_report_from_arm_stats(_replay_events(spark, sf_dir, M26, "s38"))
 
 
 @_register("s39_stream_cusum", _AD["m28_cusum_alarm"])
@@ -2559,44 +2455,9 @@ def s39_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: zero streaming state; the sink grows by <= |days touched|
     rows per batch; re-evaluating the detector costs the bounded daily
     frame."""
-    from pyspark.sql.window import Window
+    from .advanced import DAILY_CENTS, cusum_from_daily
 
-    from .advanced import _M28_H, _M28_K
-
-    day = (
-        F.unix_timestamp(F.date_trunc("day", F.col("ts")).cast("timestamp"))
-        / F.lit(86400)
-    ).cast("long")
-    daily = (
-        _partial_replay(
-            spark,
-            _events_proj_wire(
-                spark, sf_dir, lambda t: [F.col("ts"), F.col("value")]
-            ),
-            "value DOUBLE, ts TIMESTAMP",
-            lambda b: b.groupBy(day.alias("d")).agg(
-                F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents")
-            ),
-            "s39",
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").cast("long").alias("day_cents"))
-        .localCheckpoint()
-    )
-    w = Window.orderBy("d").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    p = daily.withColumn(
-        "pt", F.sum(F.col("day_cents") - F.lit(_M28_K)).over(w)
-    )
-    cusum = F.col("pt") - F.least(F.lit(0), F.min("pt").over(w))
-    return p.select(
-        F.col("d").alias("day_num"),
-        "day_cents",
-        F.col("pt").cast("long").alias("pt"),
-        cusum.cast("long").alias("cusum"),
-        (cusum > F.lit(_M28_H)).alias("alarm"),
-    )
+    return cusum_from_daily(_replay_events(spark, sf_dir, DAILY_CENTS, "s39"))
 
 
 @_register("s40_stream_vocab_growth", _LL["l88_vocab_growth"])
@@ -2923,9 +2784,9 @@ def s44_stream_average_precision(
     Scale: zero streaming state; the sink grows by each batch's
     distinct (type, score) rows, bounded by the score codomain;
     re-deriving AP costs the bounded histogram."""
-    from .advanced import m35_ap_from_counts
+    from .advanced import SCORE_HIST, m35_ap_from_counts
 
-    return m35_ap_from_counts(_score_hist(spark, sf_dir, "s44"))
+    return m35_ap_from_counts(_replay_events(spark, sf_dir, SCORE_HIST, "s44"))
 
 
 @_register("s45_stream_twa", _R3["r101_time_weighted_average"])
@@ -3033,72 +2894,15 @@ def s46_stream_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduces in _partial_replay to its (type, replicate) weighted-sum
     partials plus the full-sample partials (tagged b = -1), lands
     idempotently (s09), and the report merges partials into the
-    identical CI tail (m38_ci_from_reps) — equal to batch m38
+    identical CI tail (m38_ci_from_partials) — equal to batch m38
     bit-for-bit, sharing its oracle verbatim.
 
     Scale: zero streaming state; the sink grows by |types| x (B+1)
     rows per batch; re-deriving the bands costs the replicate-bounded
     merge."""
-    from .advanced import _M38_B, _M38_W, m38_ci_from_reps
+    from .advanced import M38, m38_ci_from_partials
 
-    def ci_partials(b: DataFrame) -> DataFrame:
-        b = b.localCheckpoint()
-        w = (
-            b.select(
-                "event_type",
-                "cents",
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(_M38_B - 1))
-                ).alias("b"),
-                "event_id",
-            )
-            .withColumn(
-                "u",
-                F.expr(
-                    "conv(substring(md5(CAST(event_id AS STRING) || ':'"
-                    " || CAST(b AS STRING)), 1, 15), 16, 10)"
-                ).cast("long"),
-            )
-            .withColumn("w", F.expr(_M38_W))
-        )
-        rep = w.groupBy("event_type", "b").agg(
-            F.sum(F.col("w") * F.col("cents")).cast("long").alias("s"),
-            F.sum("w").cast("long").alias("n"),
-        )
-        full_ = b.groupBy("event_type").agg(
-            F.lit(-1).alias("b"),
-            F.sum("cents").cast("long").alias("s"),
-            F.count("*").cast("long").alias("n"),
-        ).select("event_type", "b", "s", "n")
-        return rep.unionByName(full_)
-
-    merged = (
-        _partial_replay(
-            spark,
-            _events_proj_wire(
-                spark,
-                sf_dir,
-                lambda t: [
-                    F.col("event_type"),
-                    F.round(F.col("value") * 100).cast("long").alias("cents"),
-                    F.col("event_id"),
-                ],
-            ),
-            "event_id LONG, event_type STRING, cents LONG",
-            ci_partials,
-            "s46",
-        )
-        .groupBy("event_type", "b")
-        .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-        .localCheckpoint()
-    )
-    rep = merged.where(F.col("b") >= 0)
-    full_ = merged.where(F.col("b") == -1).select(
-        "event_type",
-        F.col("n").cast("long").alias("n_rows"),
-        F.expr("CAST((1000000 * s) div n AS BIGINT)").alias("mean_micro"),
-    )
-    return m38_ci_from_reps(rep, full_)
+    return m38_ci_from_partials(_replay_events(spark, sf_dir, M38, "s46"))
 
 
 @_register("s47_stream_equidepth", _R3["r100_equidepth_histogram"])
@@ -3564,12 +3368,11 @@ def s63_stream_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
+    cols = lambda t: ["vec_id", "embedding"]  # noqa: E731
     merged = _partial_replay(
         spark,
-        _events_proj_wire(
-            spark, sf_dir, lambda t: ["vec_id", "embedding"], "embeddings"
-        ),
-        "vec_id LONG, embedding ARRAY<DOUBLE>",
+        _events_proj_wire(spark, sf_dir, cols, "embeddings"),
+        events_projection(spark, sf_dir, cols, "embeddings").schema,
         moment_partials,
         "s63",
     )

@@ -1506,30 +1506,44 @@ def test_s49_stream_leaderboard_equals_batch_r104(spark, sf_dir):
 
 def test_partial_replay_contract(spark, tmp_path):
     """The contract the sink-merge twins rely on: 8 wire files replay as
-    exactly 2 micro-batches (one merged partial row each), a malformed
-    line and a record whose FIRST schema field is null never reach the
-    reduce, and a record with a null in a LATER field does."""
+    exactly 2 micro-batches (one merged partial row each), and every
+    record reaches the reduce, whichever of its fields is null; null
+    handling is the reduce's own, as in the batch query. A malformed
+    line cannot come from the `to_json` that writes every wire, so it
+    fails the replay instead of reducing as an all-null row."""
+    from pyspark.errors import StreamingQueryException
+
     from fraud_detetion_with__kafkastreams_and_grafana_spark.plans import (
         streaming_queries as SQ,
     )
 
+    def write(d, files):
+        d.mkdir()
+        for i, rows in enumerate(files):
+            (d / f"part-{i}.txt").write_text("\n".join(rows) + "\n")
+        return str(d)
+
     files = [[json.dumps({"k": 8 * i + j, "v": "x"}) for j in range(3)]
              for i in range(8)]
-    files[2].append('{"k":')  # malformed: parses to all-null
     files[5].append(json.dumps({"v": "first field null"}))
-    files[6].append(json.dumps({"k": 99}))  # later field null: kept
-    for i, rows in enumerate(files):
-        (tmp_path / f"part-{i}.txt").write_text("\n".join(rows) + "\n")
-
+    files[6].append(json.dumps({"k": 99}))  # later field null
+    count = lambda b: b.groupBy().agg(  # noqa: E731
+        F.count("*").alias("count"), F.count("k").alias("n_k")
+    )
     merged = SQ._partial_replay(
-        spark,
-        str(tmp_path),
-        "k LONG, v STRING",
-        lambda b: b.groupBy().count(),
+        spark, write(tmp_path / "ok", files), "k LONG, v STRING", count,
         "contract",
     ).collect()
     assert len(merged) == 2
-    assert sum(r["count"] for r in merged) == 8 * 3 + 1
+    assert sum(r["count"] for r in merged) == 8 * 3 + 2
+    assert sum(r["n_k"] for r in merged) == 8 * 3 + 1
+
+    files[2].append('{"k":')  # malformed
+    with pytest.raises(StreamingQueryException):
+        SQ._partial_replay(
+            spark, write(tmp_path / "corrupt", files), "k LONG, v STRING",
+            count, "contract_corrupt",
+        )
 
     # The lifecycle under it: one micro-batch per file at
     # files_per_trigger=1 (files replay oldest-first), every landed row
@@ -1598,7 +1612,7 @@ _MOVED_TWINS = (
 
 def test_sink_merge_twins_reuse_wire_dirs(spark, sf_dir, monkeypatch):
     """Every sink-merge twin replays a session-cached wire dir through
-    _partial_replay; s31, s37 and s44 share ONE scoring wire, and
+    _partial_replay; s26, s31, s37 and s44 share ONE scoring wire, and
     re-running any twin adds no entry to the wire-dir cache. The replay
     itself is stubbed to stop the twin at the call (its wire argument
     is already built by then) — the replay is pinned by the contract
@@ -1614,7 +1628,8 @@ def test_sink_merge_twins_reuse_wire_dirs(spark, sf_dir, monkeypatch):
 
     monkeypatch.setattr(SQ, "_WIRE_DIRS", {})
     monkeypatch.setattr(SQ, "_partial_replay", _stop)
-    for name in ("s31_stream_auc", "s37_stream_threshold_tuning",
+    for name in ("s26_stream_isotonic_calibration", "s31_stream_auc",
+                 "s37_stream_threshold_tuning",
                  "s44_stream_average_precision"):
         run(name)
     assert [k[1] for k in SQ._WIRE_DIRS] == ["proj"]
@@ -1701,6 +1716,14 @@ _RULE_TWINS = [
     ("s57_stream_ohlc", "r119_ohlc_resample"),
     ("s58_stream_tukey", "m51_tukey_fences"),
     ("s85_stream_wilson", "m79_wilson_intervals"),
+    ("s26_stream_isotonic_calibration", "m15_isotonic_calibration"),
+    ("s30_stream_concurrency", "r88_interval_concurrency"),
+    ("s31_stream_auc", "m18_exact_auc"),
+    ("s37_stream_threshold_tuning", "m24_threshold_tuning"),
+    ("s44_stream_average_precision", "m35_average_precision"),
+    ("s38_stream_ab_monitor", "m26_ab_test"),
+    ("s39_stream_cusum", "m28_cusum_alarm"),
+    ("s46_stream_bootstrap_ci", "m38_bootstrap_ci"),
 ]
 
 
@@ -1709,7 +1732,9 @@ def test_rule_twins_replay_their_batch_rule(spark, sf_dir, monkeypatch, twin, ba
     """Each twin replays its batch query's own EventsRule: the batch query
     projects the rule's table with the rule's `cols`, and the twin hands
     `_partial_replay` the wire of that projection, the rule's `reduce`
-    object and the projection's own schema (no hand-typed DDL). Both
+    object and the projection's own schema (no hand-typed DDL). Rules
+    may share `cols` (M15 and SCORE_HIST share the scoring wire), so
+    the rule is the one whose `cols` and `reduce` both match. Both
     queries are stopped at the call; the replay is pinned by the
     contract test above and each twin's value by its oracle."""
     import importlib
@@ -1727,6 +1752,11 @@ def test_rule_twins_replay_their_batch_rule(spark, sf_dir, monkeypatch, twin, ba
         events_projection,
     )
 
+    monkeypatch.setattr(SQ, "_partial_replay", _stop)
+    with pytest.raises(_Stopped) as got:
+        SQ.QUERIES[twin](spark, sf_dir)
+    _spark, wire, schema, reduce_fn, prefix = got.value.args
+
     mod = importlib.import_module(all_queries()[batch].__module__)
     monkeypatch.setattr(mod, "events_projection", _stop)
     with pytest.raises(_Stopped) as got:
@@ -1735,14 +1765,9 @@ def test_rule_twins_replay_their_batch_rule(spark, sf_dir, monkeypatch, twin, ba
     (rule,) = [
         r for r in vars(mod).values()
         if isinstance(r, EventsRule) and r.cols is cols
+        and r.reduce is reduce_fn
     ]
     assert (table or ["events"]) == [rule.table]
-
-    monkeypatch.setattr(SQ, "_partial_replay", _stop)
-    with pytest.raises(_Stopped) as got:
-        SQ.QUERIES[twin](spark, sf_dir)
-    _spark, wire, schema, reduce_fn, prefix = got.value.args
-    assert reduce_fn is rule.reduce
     assert isinstance(schema, StructType)
     assert schema == events_projection(spark, sf_dir, rule.cols, rule.table).schema
     assert wire == SQ._events_proj_wire(spark, sf_dir, rule.cols, rule.table)
@@ -1750,7 +1775,7 @@ def test_rule_twins_replay_their_batch_rule(spark, sf_dir, monkeypatch, twin, ba
 
 
 def test_daily_cents_twins_share_one_wire(spark, sf_dir, monkeypatch):
-    """s48's (d, cents) histogram and the four daily-cents twins replay
+    """s48's (d, cents) histogram and the five daily-cents twins replay
     one session-cached projection wire."""
     from fraud_detetion_with__kafkastreams_and_grafana_spark.plans import (
         streaming_queries as SQ,
@@ -1758,9 +1783,9 @@ def test_daily_cents_twins_share_one_wire(spark, sf_dir, monkeypatch):
 
     monkeypatch.setattr(SQ, "_WIRE_DIRS", {})
     monkeypatch.setattr(SQ, "_partial_replay", _stop)
-    for name in ("s48_stream_sliding_median", "s62_stream_seasonal_outliers",
-                 "s75_stream_page_hinkley", "s76_stream_durbin_watson",
-                 "s82_stream_friedman"):
+    for name in ("s48_stream_sliding_median", "s39_stream_cusum",
+                 "s62_stream_seasonal_outliers", "s75_stream_page_hinkley",
+                 "s76_stream_durbin_watson", "s82_stream_friedman"):
         with pytest.raises(_Stopped):
             SQ.QUERIES[name](spark, sf_dir)
     assert [k[1] for k in SQ._WIRE_DIRS] == ["proj"]
@@ -1783,6 +1808,110 @@ def test_trend_and_wilson_twins_share_m73(spark, sf_dir, monkeypatch):
         reduces.append(got.value.args[3])
     assert [k[1] for k in SQ._WIRE_DIRS] == ["proj"]
     assert all(r is M73.reduce for r in reduces)
+
+
+def test_null_value_row_reaches_both_sides_of_m26(spark, tmp_path):
+    """A null `value` is the reduce's business on both sides: batch m26
+    and its twin s38 count the row in `n` (its cents are null, so the
+    sums skip it), and both equal the oracle. A replay that dropped
+    rows by a null field would leave the twin's `n` one short."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fraud_detetion_with__kafkastreams_and_grafana_spark import testing
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.plans import (
+        advanced,
+        streaming_queries,
+    )
+
+    values = [12.5, 40.0, None, 7.25, 99.99, 3.0, 55.5, 18.0]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(len(values)), pa.int64()),
+                "ts": pa.array(
+                    [(19_700 * 86400 + i) * 10**6 for i in range(len(values))],
+                    pa.timestamp("us"),
+                ),
+                # both arms (user_id parity) in each segment
+                "user_id": pa.array(
+                    [i // 2 % 4 for i in range(len(values))], pa.int64()
+                ),
+                "event_type": pa.array(["purchase", "click"] * 4),
+                "value": pa.array(values, pa.float64()),
+                "props": pa.array(["{}"] * len(values)),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    sf_dir = str(tmp_path)
+    batch = sorted(
+        tuple(r)
+        for r in advanced.QUERIES["m26_ab_test"](spark, sf_dir).collect()
+    )
+    twin = sorted(
+        tuple(r)
+        for r in streaming_queries.QUERIES["s38_stream_ab_monitor"](
+            spark, sf_dir
+        ).collect()
+    )
+    assert twin == batch
+    con = testing.duckdb_conn(sf_dir)
+    try:
+        oracle = con.execute(advanced.ORACLES["m26_ab_test"]).fetchall()
+    finally:
+        con.close()
+    assert sorted(oracle) == batch
+    # purchase rows are the even event_ids; event 2 (null value) is one
+    assert sum(r[1] + r[2] for r in batch if r[0] == "purchase") == 4
+
+
+def test_s63_replays_the_floats_l102_reads(spark, tmp_path, monkeypatch):
+    """s63 parses `embeddings.embedding` with the projection's own
+    array<float> type, so the elements its reduce widens to double are
+    the ones l102 widens: 0.1f reads 0.10000000149011612, not the 0.1
+    an ARRAY<DOUBLE> parse of the wire's JSON text gives."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.plans import (
+        streaming_queries as SQ,
+    )
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.sources.tables import (
+        load_table,
+    )
+
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([1, 2], pa.int64()),
+                "embedding": pa.array(
+                    [[0.1, 0.7], [0.3, 0.1]], pa.list_(pa.float32())
+                ),
+            }
+        ),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    sf_dir = str(tmp_path)
+    monkeypatch.setattr(SQ, "_partial_replay", _stop)
+    with pytest.raises(_Stopped) as got:
+        SQ.QUERIES["s63_stream_pca"](spark, sf_dir)
+    _spark, wire, schema, _reduce, _prefix = got.value.args
+
+    def widened(df):
+        return sorted(
+            (r.vec_id, r.pos, r.v)
+            for r in df.select("vec_id", F.posexplode("embedding"))
+            .select("vec_id", "pos", F.col("col").cast("double").alias("v"))
+            .collect()
+        )
+
+    replayed = spark.read.text(wire).select(
+        F.from_json("value", schema).alias("r")
+    ).select("r.*")
+    want = widened(load_table(spark, sf_dir, "embeddings"))
+    assert (1, 0, 0.10000000149011612) in want
+    assert widened(replayed) == want
 
 
 @pytest.mark.parametrize(
